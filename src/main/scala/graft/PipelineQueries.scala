@@ -364,7 +364,8 @@ object PipelineQueries {
     // md5 8-gram chain in the scan stage instead of letting
     // CollapseProject inline it into downstream Generates, where the
     // consumer explode drops to interpreted evaluation (measured 2.6 s →
-    // 0.2 s for decontam's train side at sf0.1, DocFragProbe r6)
+    // 0.2 s for decontam's train side at sf0.1, OPTIMIZATION_r06.md
+    // "Round-start measurement")
     docs(s, dir).select(col("doc_id"), col("source"),
       isBenchCol.as("is_bench"), wordNgramHashes(col("text"), 8).as("ng"))
       .observe("ng_base", count(lit(1)))
@@ -460,35 +461,41 @@ object PipelineQueries {
     * dropped sets join back on doc_id; one per-source rollup.
     */
   def curateLedger(s: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint(eager) the two expensive id frames HERE, not just
-    // in CurateJob: without it the single-action ledger plan re-runs the
-    // whole LSH + connected-components chain inside droppedDocIds and
-    // re-scans/re-shingles the corpus inside contamDocIds (round-4
-    // VERDICT "what's wrong" #2). The frames are doc_id lists — tiny
-    // next to the corpus — so materializing them is the scale-correct
-    // shape at any corpus size (swap for reliable checkpoint + a
-    // checkpoint dir on a real cluster, as ConnectedComponents notes).
-    // r6: the two chains are INDEPENDENT, and the dedup side is a
-    // sequential multi-round loop (LSH + connected components) that
-    // cannot fill the cluster by itself — materialize them from two
-    // driver threads so the decontamination jobs back-fill the dedup
-    // chain's stragglers (guide §2.6 "overlap independent jobs"); the
-    // scheduler interleaves the jobs, results are unchanged.
+    val (contam, dropped) = curationIdFrames(s, dir)
+    curateLedgerWith(s, dir, contam, dropped)
+  }
+
+  /** The contaminated and dropped doc_id frames, localCheckpoint'ed
+    * (eager) — what [[curateLedger]] and [[graft.run.CurateJob]] build
+    * the ledger and the curated corpus from. Without the checkpoint a
+    * single-action plan re-runs the whole LSH + connected-components
+    * chain inside droppedDocIds and re-scans/re-shingles the corpus
+    * inside contamDocIds once per consumer (round-4 VERDICT "what's
+    * wrong" #2). The frames are doc_id lists — tiny next to the corpus
+    * — so materializing them is the scale-correct shape at any corpus
+    * size (swap for reliable checkpoint + a checkpoint dir on a real
+    * cluster, as ConnectedComponents notes).
+    * r6: the two chains are INDEPENDENT, and the dedup side is a
+    * sequential multi-round loop (LSH + connected components) that
+    * cannot fill the cluster by itself — materialize them from two
+    * driver threads so the decontamination jobs back-fill the dedup
+    * chain's stragglers (guide §2.6 "overlap independent jobs"); the
+    * scheduler interleaves the jobs, results are unchanged.
+    */
+  private[graft] def curationIdFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fContam = Future { contamDocIds(s, dir).localCheckpoint(true) }
     val fDropped = Future { droppedDocIds(s, dir).localCheckpoint(true) }
-    curateLedgerWith(s, dir,
-      Await.result(fContam, Duration.Inf),
-      Await.result(fDropped, Duration.Inf))
+    (Await.result(fContam, Duration.Inf), Await.result(fDropped, Duration.Inf))
   }
 
-  /** [[curateLedger]] over PRE-COMPUTED contaminated/dropped id frames —
-    * what [[graft.run.CurateJob]] calls so one persisted computation of
-    * the LSH + connected-components pipeline and the decontamination
-    * join serves both the ledger and the curated-corpus writes
-    * (round-4 review: recomputing them doubled the job).
+  /** [[curateLedger]] over PRE-COMPUTED contaminated/dropped id frames
+    * ([[curationIdFrames]]) — what [[graft.run.CurateJob]] calls so one
+    * computation of the LSH + connected-components pipeline and the
+    * decontamination join serves both the ledger and the curated-corpus
+    * writes (round-4 review: recomputing them doubled the job).
     */
   private[graft] def curateLedgerWith(s: SparkSession, dir: String,
       contam: DataFrame, dropped: DataFrame): DataFrame = {
@@ -510,16 +517,12 @@ object PipelineQueries {
   }
 
   /** The curated corpus itself, in the north-star token-table shape:
-    * pipeline survivors tokenized. What [[graft.run.CurateJob]] writes.
-    */
-  def curatedTokens(s: SparkSession, dir: String): DataFrame =
-    curatedTokensWith(s, dir, contamDocIds(s, dir), droppedDocIds(s, dir))
-
-  /** [[curatedTokens]] over pre-computed id frames (see
-    * [[curateLedgerWith]]). The lexer projection materializes `tokens`
-    * FIRST and derives n_tok from the materialized column — the
-    * regexp+md5 lexer is the most expensive per-row expression in the
-    * job and must run once, not once per derived column.
+    * pipeline survivors tokenized, over pre-computed id frames (see
+    * [[curateLedgerWith]]). What [[graft.run.CurateJob]] writes. The
+    * lexer projection materializes `tokens` FIRST and derives n_tok
+    * from the materialized column — the regexp+md5 lexer is the most
+    * expensive per-row expression in the job and must run once, not
+    * once per derived column.
     */
   private[graft] def curatedTokensWith(s: SparkSession, dir: String,
       contam: DataFrame, dropped: DataFrame): DataFrame =
@@ -837,7 +840,8 @@ object PipelineQueries {
     // CollapseProject inlines the array_distinct(md5-transform) chain
     // INTO the Generate, which drops the generator out of codegen and
     // re-evaluates the lambda-bound word split per n-gram — measured
-    // 2.9 s vs 0.2 s for the same explode at sf0.1 (DocFragProbe, r6).
+    // 2.9 s vs 0.2 s for the same explode at sf0.1 (OPTIMIZATION_r06.md
+    // "Round-start measurement").
     // Behind the barrier the chain evaluates once per row in the scan
     // stage and the Generate explodes a plain attribute.
     val base = docs(s, dir).select(col("doc_id"), col("source"),

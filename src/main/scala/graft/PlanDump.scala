@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the plan-evidence tool for the optimization rounds (the judge reads
   * plans/rNN/<query>_{before,after}.txt instead of running Spark).
@@ -17,14 +15,7 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r06")
     val suffix = args.lift(2).getOrElse("after")
     val names = if (args.length > 3) args.drop(3).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("graft-plan-dump", logLevel = "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timing probe: time named SparkEntry queries (or
   * all, with no names) at a given sf dir, reps with min — the quick
   * plan-iteration loop Bench is too heavyweight for.
@@ -16,14 +14,7 @@ object QueryProbe {
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")} — valid: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create("graft-query-probe", logLevel = "ERROR")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       val times = (1 to reps).map { _ =>

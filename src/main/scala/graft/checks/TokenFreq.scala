@@ -37,9 +37,10 @@ object TokenFreq {
     * explode + groupBy(source, token). The explode shape pays a
     * per-INSTANCE UnsafeRow hash probe under a string+int key (measured
     * 11-19 s for 264M instances at local[32]; int-only keys are ~3x
-    * cheaper — TokAggProbe) and ships O(distinct keys per partition)
-    * rows through the exchange. The histogram probes the group key once
-    * per ROW, counts instances with a dense-array increment, and ships
+    * cheaper — OPTIMIZATION_r06.md "Round-start measurement") and
+    * ships O(distinct keys per partition) rows through the exchange.
+    * The histogram probes the group key once per ROW, counts instances
+    * with a dense-array increment, and ships
     * |vocab|-bounded sparse buffer state. The (token, cnt) multiset it
     * explodes to afterwards is value-identical — exact integer counts,
     * same null-element and out-of-range handling as the explode.

@@ -310,10 +310,12 @@ object ConstraintCompiler {
     * evaluating columns compiled with the same `fusedIntArrays`.
     *
     * A field whose profile column ALREADY EXISTS is left untouched —
-    * that is how alternative storage layouts plug in: e.g. the
-    * packed-binary layout pre-materializes `__prof_tokens` from
-    * token_stats_packed(tokens_bin) and every fused constraint compiles
-    * against it unchanged, no array column required (PackedProbe).
+    * that is how alternative storage layouts plug in: a layout that
+    * pre-materializes `__prof_tokens` from its own encoding has every
+    * fused constraint compile against it unchanged, no array column
+    * required. (The one such layout measured so far, int32 blobs, lost
+    * to array<int> + parquet v2 at 0.35x: BASELINE.md "Packed-binary
+    * token layout", packed_probe.json.)
     */
   def withProfiles(df: DataFrame, fusedIntArrays: Set[String]): DataFrame =
     fusedIntArrays.foldLeft(df)((d, f) =>
@@ -637,7 +639,8 @@ object ConstraintCompiler {
         // and the explode, CollapseProject inlines the whole
         // checks-array chain into the Generate, dropping it out of
         // codegen (measured 2.9 s → 0.2 s on the analogous n-gram
-        // explode, DocFragProbe r6 — see PipelineQueries.ngBase)
+        // explode, OPTIMIZATION_r06.md "Round-start measurement" — see
+        // PipelineQueries.ngBase)
         base.observe("violations_base", count(lit(1)))
       else base.observe(observe,
         count(lit(1)).as("rows"),

@@ -77,11 +77,7 @@ object GraftFunctions {
     ("nfc_normalize", "nfc_normalize(s) - Unicode NFC canonical normalization of a string",
       args => { arity("nfc_normalize", 1, args); NfcNormalize(args.head) }),
     ("char_entropy", "char_entropy(s) - Shannon entropy (bits/char, log2) over code-point frequencies",
-      args => { arity("char_entropy", 1, args); CharEntropy(args.head) }),
-    ("pack_ints", "pack_ints(arr) - int array packed to little-endian int32 binary",
-      args => { arity("pack_ints", 1, args); PackInts(args.head) }),
-    ("token_stats_packed", "token_stats_packed(bin) - token_stats over a pack_ints binary payload",
-      args => { arity("token_stats_packed", 1, args); TokenStatsPacked(args.head) })
+      args => { arity("char_entropy", 1, args); CharEntropy(args.head) })
   )
 
   /** Register every custom function into a live session. */

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   * (~264M at sf0.1) and then hash-aggregates them under a
   * (source string, token int) key — measured 11-19 s at local[32],
   * ~3x slower than the same aggregation under an int-only key purely
-  * from per-instance UnsafeRow hashing (TokAggProbe, archived in
-  * OPTIMIZATION_r06.md). This aggregate keeps the loop INSIDE one
+  * from per-instance UnsafeRow hashing (OPTIMIZATION_r06.md
+  * "Round-start measurement"). This aggregate keeps the loop INSIDE one
   * update() call per row: token ids in [0, denseSize) increment a dense
   * long array (one bounds check + one add per instance, no hashing);
   * out-of-range ids (the injected corrupt rows) and null elements go to

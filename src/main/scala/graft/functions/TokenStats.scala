@@ -144,101 +144,6 @@ object TokenStatsUtil {
   }
 }
 
-object TokenStatsPackedUtil {
-  /** Packed-binary variant of the hot loop: tokens arrive as int32
-    * LITTLE-ENDIAN bytes in ONE BinaryType blob per row. Parquet then
-    * decodes a single byte_array (a length-prefixed memcpy) instead of
-    * materializing per-element UnsafeArrayData — the measured ~57% of
-    * full-suite scan time (BASELINE.md decomposition). Same profile
-    * semantics as [[TokenStatsUtil.compute]]; null ELEMENTS are
-    * unrepresentable by design (token ids are non-null by the table
-    * invariant — the packed layout is for the hot path, not for
-    * arbitrary JSON arrays).
-    */
-  def compute(b: Array[Byte]): InternalRow = {
-    val n = b.length >>> 2
-    var mn = Int.MaxValue
-    var mx = Int.MinValue
-    var dups = 0
-    if (n > 0) {
-      val s = TokenStatsUtil.scratch()
-      val cap = s.ensure(n)
-      val mask = cap - 1
-      val ep = s.nextEpoch()
-      val table = s.table
-      val stamp = s.stamp
-      var i = 0
-      while (i < n) {
-        val o = i << 2
-        val v = (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8) | ((b(o + 2) & 0xFF) << 16) | (b(o + 3) << 24)
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        var idx = (v * -1640531527) & mask
-        while (stamp(idx) == ep && table(idx) != v) idx = (idx + 1) & mask
-        if (stamp(idx) == ep) dups += 1
-        else { stamp(idx) = ep; table(idx) = v }
-        i += 1
-      }
-    } else { mn = 0; mx = 0 }
-    new GenericInternalRow(Array[Any](mn, mx, dups, n))
-  }
-
-  /** Inverse, for the WRITE path (perf-irrelevant): array<int> → packed
-    * LE bytes.
-    */
-  def pack(a: ArrayData): Array[Byte] = {
-    val n = a.numElements()
-    val out = new Array[Byte](n << 2)
-    var i = 0
-    while (i < n) {
-      val v = a.getInt(i)
-      val o = i << 2
-      out(o) = v.toByte
-      out(o + 1) = (v >> 8).toByte
-      out(o + 2) = (v >> 16).toByte
-      out(o + 3) = (v >> 24).toByte
-      i += 1
-    }
-    out
-  }
-}
-
-/** token_stats over the packed-binary layout — same output schema. */
-case class TokenStatsPacked(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TokenStats.schema
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(v: Any): Any =
-    TokenStatsPackedUtil.compute(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenStatsPackedUtil.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenStatsPacked =
-    copy(child = newChild)
-
-  override def prettyName: String = "token_stats_packed"
-}
-
-/** array<int> → int32-LE binary blob (the packed-layout writer). */
-case class PackInts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-
-  override def nullSafeEval(v: Any): Any =
-    TokenStatsPackedUtil.pack(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TokenStatsPackedUtil.pack($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): PackInts =
-    copy(child = newChild)
-
-  override def prettyName: String = "pack_ints"
-}
-
 case class TokenStats(child: Expression) extends UnaryExpression {
   override def dataType: DataType = TokenStats.schema
   override def nullIntolerant: Boolean = true
@@ -278,12 +183,4 @@ object TokenStats {
   /** Column API: token_stats(tokens) → struct(tmin, tmax, dups, n). */
   def token_stats(c: Column): Column =
     ColumnBridge.column(TokenStats(ColumnBridge.expression(c)))
-
-  /** Column API over the packed-binary layout. */
-  def token_stats_packed(c: Column): Column =
-    ColumnBridge.column(TokenStatsPacked(ColumnBridge.expression(c)))
-
-  /** Column API: array<int> → int32-LE binary (packed-layout writer). */
-  def pack_ints(c: Column): Column =
-    ColumnBridge.column(PackInts(ColumnBridge.expression(c)))
 }

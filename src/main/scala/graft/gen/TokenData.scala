@@ -110,9 +110,9 @@ object TokenData {
   }
 
   /** Canonical token-table writer: parquet v2 pages (DELTA_BINARY_PACKED
-    * for the int token arrays). Measured on this host vs the v1 default
-    * (DecodeProbe, 2M rows, min over 4 alternating rounds): ~2x faster
-    * full-suite decode (2.0 vs 0.87 M rows/s) AND 40% smaller files
+    * for the int token arrays). Measured vs the v1 default (2M rows,
+    * min over 4 alternating rounds; BASELINE.md "Parquet layout"): ~2x
+    * faster full-suite decode (2.0 vs 0.87 M rows/s) AND 40% smaller files
     * (1.29 vs 2.13 GB) — at 100 TB that is the difference between a
     * bandwidth-bound and a compute-bound scan, so it is the default for
     * every table the engine writes.

@@ -16,15 +16,7 @@ object CurateJob {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_curate")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-curate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-curate")
     run(spark, sfDir, outDir)
     spark.stop()
   }
@@ -35,20 +27,13 @@ object CurateJob {
     */
   def run(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     // the expensive intermediates — LSH + connected-components dedup
-    // and the decontamination n-gram join — feed BOTH writes; persist
-    // the doc_id frames (tiny next to the corpus, spillable) so each
-    // pipeline runs once, not once per output (round-4 review)
-    val contam = graft.PipelineQueries.contamDocIds(spark, sfDir).persist()
-    val dropped = graft.PipelineQueries.droppedDocIds(spark, sfDir).persist()
-    try {
-      graft.PipelineQueries.curateLedgerWith(spark, sfDir, contam, dropped)
-        .coalesce(1).write.mode("overwrite").json(s"$outDir/ledger")
-      graft.PipelineQueries.curatedTokensWith(spark, sfDir, contam, dropped)
-        .write.mode("overwrite").partitionBy("source").parquet(s"$outDir/curated")
-    } finally {
-      contam.unpersist()
-      dropped.unpersist()
-    }
+    // and the decontamination n-gram join — feed BOTH writes; they are
+    // materialized once, not once per output (round-4 review)
+    val (contam, dropped) = graft.PipelineQueries.curationIdFrames(spark, sfDir)
+    graft.PipelineQueries.curateLedgerWith(spark, sfDir, contam, dropped)
+      .coalesce(1).write.mode("overwrite").json(s"$outDir/ledger")
+    graft.PipelineQueries.curatedTokensWith(spark, sfDir, contam, dropped)
+      .write.mode("overwrite").partitionBy("source").parquet(s"$outDir/curated")
     val kept = spark.read.parquet(s"$outDir/curated").count()
     println(s"[curate] $sfDir -> $outDir: $kept curated sequences")
   }

@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.suite.{Suite, SuiteLoader}
 
@@ -103,14 +103,7 @@ object SuggestJob {
     */
   def main(args: Array[String]): Unit = {
     val Array(tablePath, outFile) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-suggest")
     val df = spark.read.parquet(tablePath)
     val (json, suite) = suggest(df)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json)

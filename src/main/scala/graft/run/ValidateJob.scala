@@ -33,7 +33,8 @@ import graft.gen.TokenData
   *    array is profiled once per row across all constraints.
   *
   * Args: --table <path> --out <dir> [--checkpoint <dir>] [--salt N]
-  *       [--shuffle-partitions N] [--partition-col source]
+  *       [--partition-col source] [--suite <doc.json>]
+  *       [--suite-resources a.json,b.json]
   */
 object ValidateJob {
 
@@ -105,10 +106,6 @@ object ValidateJob {
     }
     byPart.collect { case (p, Some(st)) => p -> st }.toMap
   }
-
-  /** Read completed partitions (last line per partition wins). */
-  def completed(checkpointDir: String, hash: String): Set[String] =
-    completedDetail(checkpointDir, hash).keySet
 
   /** Recovery marker for one partition's in-flight incremental append.
     * Written just before the SaveMode.Append violations write, deleted
@@ -362,22 +359,9 @@ object ValidateJob {
     }
 
     // verdict table from the manifest (cheap, driver-side truth)
-    val entries = completed(checkpointDir, hash)
     import spark.implicits._
-    val verdictRows = {
-      val f = Paths.get(checkpointDir, "manifest.jsonl")
-      val byPart = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-      Files.readAllLines(f).forEach { line =>
-        val part = """"partition":"([^"]*)"""".r.findFirstMatchIn(line).map(_.group(1))
-        val rows = """"rows":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong)
-        val viol = """"violations":(\d+)""".r.findFirstMatchIn(line).map(_.group(1).toLong)
-        (part, rows, viol) match {
-          case (Some(p), Some(r), Some(v)) if entries(p) => byPart(p) = (r, v)
-          case _ => ()
-        }
-      }
-      byPart.toSeq.map { case (p, (r, v)) => (p, r, v, v == 0L) }
-    }
+    val verdictRows = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
+      .map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
     verdictRows.toDF("partition", "rows", "violations", "pass")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/verdicts")
 
@@ -449,15 +433,7 @@ object ValidateJob {
     val table = a.getOrElse("--table", throw new IllegalArgumentException("--table required"))
     val out = a.getOrElse("--out", throw new IllegalArgumentException("--out required"))
     val ckpt = a.getOrElse("--checkpoint", s"$out/_checkpoint")
-    val cpus = a.getOrElse("--cpus", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-validate")
-      .config("spark.sql.shuffle.partitions", a.getOrElse("--shuffle-partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create("graft-validate")
     val suite = a.get("--suite")
       .map(p => loadSuite(spark, table, p,
         a.get("--suite-resources").map(_.split(",").toSeq).getOrElse(Nil)))

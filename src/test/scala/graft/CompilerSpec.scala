@@ -259,32 +259,6 @@ class CompilerSpec extends SparkSpec {
     assert(!got(2) && got(3))
   }
 
-  test("packed-binary token layout: identical profile and identical fused suite verdicts") {
-    import graft.functions.TokenStats
-    val df = graft.gen.TokenData.tokenTable(spark, 3000, 4)
-    // pack → profile-from-bytes must equal profile-from-array, row by row
-    val both = df.select(
-      TokenStats.token_stats(col("tokens")).as("a"),
-      TokenStats.token_stats_packed(TokenStats.pack_ints(col("tokens"))).as("p"))
-    assert(both.filter(col("a") =!= col("p")).count() === 0L)
-    // the full north-star suite over the packed layout (profile plug-in
-    // seam: pre-materialized __prof_tokens, no array column at all)
-    // agrees with the array layout on every per-constraint verdict
-    val suite = graft.suite.NorthStar.suite
-    def counts(d: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
-      ConstraintCompiler.failCounts(d, suite, Set("tokens"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
-    val packed = df.select(col("doc_id"),
-      TokenStats.pack_ints(col("tokens")).as("tokens_bin"), col("n_tok"), col("source"))
-      .withColumn(ConstraintCompiler.profCol("tokens"),
-        TokenStats.token_stats_packed(col("tokens_bin")))
-    // per-constraint fail counts must agree exactly (combined with the
-    // row-wise profile equality above this pins the layouts together;
-    // doc_id is NOT a join key — the generator injects duplicates)
-    assert(counts(df) === counts(packed))
-    assert(counts(df).map(_._2).sum > 0, "generator injects violations — counts must be non-trivial")
-  }
-
   test("typed Dataset face: validSeqs/violationSeqs/partitionVerdicts agree with the DataFrame surface") {
     import graft.model.{TokenSeq, Violation}
     import graft.run.TypedValidate

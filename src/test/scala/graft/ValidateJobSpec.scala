@@ -47,7 +47,7 @@ class ValidateJobSpec extends SparkSpec {
 
     // manifest complete
     val hash = ValidateJob.suiteHash(NorthStar.suite)
-    val done = ValidateJob.completed(ckpt, hash)
+    val done = ValidateJob.completedDetail(ckpt, hash).keySet
     assert(done == parts.map(_._1).toSet)
 
     // resume: second run with same checkpoint must skip all partitions
@@ -308,8 +308,9 @@ class ValidateJobSpec extends SparkSpec {
   test("special characters in partition values survive the whole run (decode + re-escape)") {
     import spark.implicits._
     val table = tmp("esc"); val out = tmp("escout"); val ckpt = tmp("escckpt")
-    // ':' crashes a raw Hadoop path component; '+' is the URLDecoder trap
-    val sources = Seq("a:b", "a+b", "plain")
+    // ':' crashes a raw Hadoop path component; '+' is the URLDecoder trap;
+    // '"' and '\\' are JSON-escaped in the manifest line
+    val sources = Seq("a:b", "a+b", "plain", "we\"b", "x\\y")
     val df = sources.zipWithIndex.flatMap { case (s, i) =>
       Seq((s"doc-$i-1", Seq(1, 2, 3), 3, s), (s"doc-$i-2", Seq(4, 5), 2, s))
     }.toDF("doc_id", "tokens", "n_tok", "source")
@@ -462,6 +463,6 @@ class ValidateJobSpec extends SparkSpec {
     ValidateJob.run(spark, table, out, ckpt)
     val otherSuite = NorthStar.suite.copy(name = "other",
       constraints = NorthStar.suite.constraints.take(2))
-    assert(ValidateJob.completed(ckpt, ValidateJob.suiteHash(otherSuite)).isEmpty)
+    assert(ValidateJob.completedDetail(ckpt, ValidateJob.suiteHash(otherSuite)).isEmpty)
   }
 }
