@@ -8,8 +8,11 @@ import org.apache.spark.sql.SparkSession
   *
   * A `spark.master` that spark-submit already set is kept; otherwise the
   * session runs `local[n]`, where n is `SPARK_GRAFT_CPUS` or the host's
-  * core count. Shuffle partitions are n, the UI is off and the session
-  * time zone is UTC.
+  * core count, and shuffle partitions are n unless the launcher passed
+  * its own. Under a launcher's master the shuffle width is the
+  * launcher's or Spark's default: the submitting host's core count says
+  * nothing about the cluster's. The UI is off and the session time zone
+  * is UTC.
   */
 object GraftSession {
 
@@ -20,13 +23,15 @@ object GraftSession {
     */
   private[graft] def settings(conf: Map[String, String], env: Map[String, String],
                               hostCores: Int): Map[String, String] = {
-    val n = env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(hostCores)
-    require(n > 0, s"SPARK_GRAFT_CPUS must be positive, got $n")
-    Map(
-      "spark.master" -> conf.getOrElse("spark.master", s"local[$n]"),
-      "spark.sql.shuffle.partitions" -> n.toString,
-      "spark.ui.enabled" -> "false",
-      "spark.sql.session.timeZone" -> "UTC")
+    val fixed = Map("spark.ui.enabled" -> "false", "spark.sql.session.timeZone" -> "UTC")
+    conf.get("spark.master") match {
+      case Some(m) => fixed + ("spark.master" -> m)
+      case None =>
+        val n = env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(hostCores)
+        require(n > 0, s"SPARK_GRAFT_CPUS must be positive, got $n")
+        fixed + ("spark.master" -> s"local[$n]") +
+          ("spark.sql.shuffle.partitions" -> conf.getOrElse("spark.sql.shuffle.partitions", n.toString))
+    }
   }
 
   def create(appName: String, logLevel: String = "WARN"): SparkSession = {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.compilex.Barrier
 import graft.pipeline.TextOps._
 
 /** Training-data pipeline operators over the `documents` and
@@ -182,13 +183,12 @@ object PipelineQueries {
     * queries: one shingle projection, 4 band signatures, exploded.
     */
   private[graft] def lshLongFrom(d0: DataFrame): DataFrame =
-    d0
+    Barrier(d0
       .withColumn("_sh", shingleHashes(col("text")))
       .withColumn("sh", array_distinct(shingles3(col("text"))))
       .select(col("doc_id"), col("sh"),
         array((0 until 4).map(b => struct(lit(b).as("band"),
-          concat_ws("_", minhash(col("_sh"), 2 * b), minhash(col("_sh"), 2 * b + 1)).as("sig"))): _*).as("bands"))
-      .observe("lsh_long_base", count(lit(1))) // barrier, see ngBase
+          concat_ws("_", minhash(col("_sh"), 2 * b), minhash(col("_sh"), 2 * b + 1)).as("sig"))): _*).as("bands")))
       .select(col("doc_id"), col("sh"), explode(col("bands")).as("bs"))
       .select(col("doc_id"), col("sh"), col("bs.band").as("band"), col("bs.sig").as("sig"))
 
@@ -360,15 +360,8 @@ object PipelineQueries {
     * off it; unused columns are pruned by Catalyst per consumer).
     */
   private[graft] def ngBase(s: SparkSession, dir: String): DataFrame =
-    // observe() = zero-cost optimizer barrier (see dupNgrams): keeps the
-    // md5 8-gram chain in the scan stage instead of letting
-    // CollapseProject inline it into downstream Generates, where the
-    // consumer explode drops to interpreted evaluation (measured 2.6 s →
-    // 0.2 s for decontam's train side at sf0.1, OPTIMIZATION_r06.md
-    // "Round-start measurement")
-    docs(s, dir).select(col("doc_id"), col("source"),
-      isBenchCol.as("is_bench"), wordNgramHashes(col("text"), 8).as("ng"))
-      .observe("ng_base", count(lit(1)))
+    Barrier(docs(s, dir).select(col("doc_id"), col("source"),
+      isBenchCol.as("is_bench"), wordNgramHashes(col("text"), 8).as("ng")))
 
   /** The benchmark slice's distinct n-gram set (the broadcast side). */
   private[graft] def benchNgrams(base: DataFrame): DataFrame =
@@ -710,8 +703,7 @@ object PipelineQueries {
   def repetition(s: SparkSession, dir: String): DataFrame = {
     val w = words(col("text"))
     val bg = wordBigrams(col("text"))
-    val d = docs(s, dir).select(col("doc_id"), w.as("w"), bg.as("bg"))
-      .observe("repetition_base", count(lit(1))) // barrier, see ngBase
+    val d = Barrier(docs(s, dir).select(col("doc_id"), w.as("w"), bg.as("bg")))
     val perDoc = d.select(col("doc_id"),
       size(col("w")).as("n_words"),
       dupFrac(col("w")).as("dup_word_frac"),
@@ -836,17 +828,8 @@ object PipelineQueries {
     * duplicated set, not the corpus.
     */
   def dupNgrams(s: SparkSession, dir: String): DataFrame = {
-    // observe() is a zero-cost optimizer barrier: without it,
-    // CollapseProject inlines the array_distinct(md5-transform) chain
-    // INTO the Generate, which drops the generator out of codegen and
-    // re-evaluates the lambda-bound word split per n-gram — measured
-    // 2.9 s vs 0.2 s for the same explode at sf0.1 (OPTIMIZATION_r06.md
-    // "Round-start measurement").
-    // Behind the barrier the chain evaluates once per row in the scan
-    // stage and the Generate explodes a plain attribute.
-    val base = docs(s, dir).select(col("doc_id"), col("source"),
-      array_distinct(wordNgramHashes(col("text"), 8)).as("ng"))
-      .observe("dup_ngrams_base", count(lit(1)))
+    val base = Barrier(docs(s, dir).select(col("doc_id"), col("source"),
+      array_distinct(wordNgramHashes(col("text"), 8)).as("ng")))
     val ex = base.select(col("doc_id"), col("source"), explode(col("ng")).as("ng"))
     // r6: support counts via ONE window over the exploded frame instead
     // of groupBy(ng) + join-back — the old plan computed the explode
@@ -912,9 +895,8 @@ object PipelineQueries {
     val ng = wordNgramHashes(col("text"), 8)
     val benchId = conv(substring(md5(col("doc_id").cast("string")), 1, 1), 16, 10)
       .cast("int")
-    val base = docs(s, dir).select(col("doc_id"), col("source"),
-      benchId.as("bid"), ng.as("ng"))
-      .observe("decontam_matrix_base", count(lit(1))) // barrier, see ngBase
+    val base = Barrier(docs(s, dir).select(col("doc_id"), col("source"),
+      benchId.as("bid"), ng.as("ng")))
     // benchmarks: md5 first hex digit 0/1/2 -> three held-out slices
     val bench = base.filter(col("bid") <= 2)
       .select(col("bid").as("benchmark"), explode(col("ng")).as("ng")).distinct()

@@ -290,7 +290,10 @@ object ValidationQueries {
       .withColumnRenamed("pos", "w_idx").withColumnRenamed("col", "w")
   }
 
-  def chunkWindows(s: SparkSession, dir: String): DataFrame = {
+  def chunkWindows(s: SparkSession, dir: String): DataFrame = chunkWindowsOf(toks(s, dir))
+
+  /** [[chunkWindows]] over any (source, tokens) frame. */
+  private[graft] def chunkWindowsOf(df: DataFrame): DataFrame = {
     // r6 shape: ONE fused codegen'd per-row pass
     // (graft.functions.WindowStats) instead of posexplode — the old
     // plan materialized one row per window (2.75M at sf0.1), each
@@ -304,9 +307,11 @@ object ValidationQueries {
     // per-row checksums sum in a LONG (window ck ≤ ~5e9, windows/row =
     // n/96 — overflow-free for any row that fits in memory) — before
     // the cross-row DECIMAL accumulation below. A null tokens row has
-    // no windows in both shapes (null struct ≡ zero contribution).
+    // no windows in both shapes (null struct ≡ zero contribution), and
+    // a source without a single window has no row, as in the oracle,
+    // which groups window rows.
     val ws = graft.functions.WindowStats.window_stats(col("tokens"), ChunkW, ChunkS)
-    val m = toks(s, dir).select(col("source"), ws.as("ws"))
+    val m = df.select(col("source"), ws.as("ws"))
     // checksum accumulates in DECIMAL(38,0) — per-window ck is up to
     // ~5e9, so a LONG accumulator wraps within the 10^12-row design
     // scale while DuckDB's sum(BIGINT) is already HUGEINT (the sumCents
@@ -317,6 +322,7 @@ object ValidationQueries {
       sum(col("ws.n_full").cast("long")).as("n_full"),
       sum(col("ws.sum_len")).as("sum_len"),
       sum(col("ws.ck").cast("decimal(38,0)")).cast("string").as("content_checksum"))
+      .filter(col("n_windows") > 0)
   }
 
   /** CONSTRAINT SUGGESTION (the profile->suite direction): derive a

@@ -632,16 +632,9 @@ object ConstraintCompiler {
     val fails = filter(checks, c => !c("pass"))
     val base = withProfiles(df, fusedIntArrays)
       .select(col(keyField), col(partField), fails.as("_fails"))
+    // the caller's Observation, when given, is also the explode's fence
     val observed =
-      if (observe == null)
-        // zero-cost optimizer barrier even when the caller wants no
-        // metrics: without a CollectMetrics node between the projection
-        // and the explode, CollapseProject inlines the whole
-        // checks-array chain into the Generate, dropping it out of
-        // codegen (measured 2.9 s → 0.2 s on the analogous n-gram
-        // explode, OPTIMIZATION_r06.md "Round-start measurement" — see
-        // PipelineQueries.ngBase)
-        base.observe("violations_base", count(lit(1)))
+      if (observe == null) Barrier(base)
       else base.observe(observe,
         count(lit(1)).as("rows"),
         sum(when(size(col("_fails")) > 0, 1L).otherwise(0L)).as("viol"))

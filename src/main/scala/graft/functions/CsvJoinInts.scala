@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -19,13 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * at 10^12 rows the content-hash dedup key (v_seq_dup_content) pays
   * an allocation per token instance. This expression appends digits
   * straight into one builder per row (codegen'd via doGenCode, zero
-  * UDFs — the TokenStats pattern). Null ARRAY input yields null, which
-  * matches the composed form only under the caller's tokens-not-null
-  * filter (concat_ws alone would yield "" on a null array) — the one
-  * caller filters first.
+  * UDFs — the TokenStats pattern). A null ARRAY yields "", as concat_ws
+  * does, so the output is never null.
   */
 object CsvJoinIntsUtil {
   def join(a: ArrayData): UTF8String = {
+    if (a == null) return UTF8String.EMPTY_UTF8
     val n = a.numElements()
     if (n == 0) return UTF8String.EMPTY_UTF8
     val sb = new java.lang.StringBuilder(n * 8)
@@ -41,14 +42,18 @@ object CsvJoinIntsUtil {
 
 case class CsvJoinInts(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = false
 
-  override def nullSafeEval(v: Any): Any =
-    CsvJoinIntsUtil.join(v.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any =
+    CsvJoinIntsUtil.join(child.eval(input).asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CsvJoinIntsUtil.join($c);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""${c.code}
+      UTF8String ${ev.value} =
+        graft.functions.CsvJoinIntsUtil.join(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CsvJoinInts =
     copy(child = newChild)

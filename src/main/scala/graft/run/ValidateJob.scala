@@ -283,79 +283,61 @@ object ValidateJob {
     //    replace) — the only sound answer without row-level lineage
     //  - no lineage (old manifest / non-partitioned layout) -> classic
     //    whole-partition skip-if-completed
-    sealed trait Plan
-    case object Skip extends Plan
-    final case class Incremental(newFiles: Seq[String], prev: PartState) extends Plan
-    case object Full extends Plan
-    val planned: Seq[(String, Plan, Seq[String])] = parts.map { p =>
+    // A partition to validate scans `files` and adds its counts to
+    // `prior`; a full revalidation has no prior counts and overwrites.
+    final case class Work(files: Seq[String], prior: Option[PartState])
+    val planned = parts.map { p =>
       val nowFiles = listPartFiles(spark, tablePath, partitionCol, p)
+      val full = Some(Work(nowFiles, None))
       val plan = done.get(p) match {
         case _ if Files.exists(intentFile(checkpointDir, p)) =>
-          // a previous INCREMENTAL attempt crashed between its
-          // violations append and its manifest line — that append may
-          // have half-landed, so only a full Overwrite re-validate is
-          // sound (round-4 review: Append-before-manifest is not
-          // idempotent without this recovery marker)
-          Full
+          // a previous attempt crashed between its violations append
+          // and its manifest line — that append may have half-landed, so
+          // only a full Overwrite re-validate is sound (round-4 review)
+          full
         case Some(st) if st.hasLineage =>
-          if (st.files == nowFiles.toSet) Skip
+          if (st.files == nowFiles.toSet) None
           else if (nowFiles.isEmpty)
-            Full // directory emptied under us: the manifest counts are stale
+            full // directory emptied under us: the manifest counts are stale
           else if (st.files.subsetOf(nowFiles.toSet))
-            Incremental(nowFiles.filterNot(st.files), st)
-          else Full
-        case Some(_) => Skip // pre-lineage entry: whole-partition resume
-        case None    => Full
+            Some(Work(nowFiles.filterNot(st.files), Some(st)))
+          else full
+        case Some(_) => None // pre-lineage entry: whole-partition resume
+        case None    => full
       }
       (p, plan, nowFiles)
     }
-    val nSkip = planned.count(_._2 == Skip)
-    val nInc = planned.count(_._2.isInstanceOf[Incremental])
+    val nSkip = planned.count(_._2.isEmpty)
+    val nInc = planned.count(_._2.exists(_.prior.isDefined))
     println(s"[validate] partitions=${parts.length} skip=$nSkip incremental=$nInc " +
       s"full=${parts.length - nSkip - nInc}")
 
-    planned.foreach {
-      case (_, Skip, _) => ()
-      case (p, Incremental(newFiles, prev), nowFiles) =>
-        val t0 = System.currentTimeMillis()
-        val paths = newFiles.map(f =>
-          s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}")
-        // basePath re-derives the partition column from the dir name
-        val slice = spark.read.option("basePath", tablePath).parquet(paths: _*)
-        // intent marker bracketing the non-idempotent append: present
-        // on the next startup ⇒ the bracket didn't close ⇒ Full recovery
-        val intent = intentFile(checkpointDir, p)
-        Files.createDirectories(intent.getParent)
-        Files.write(intent, newFiles.mkString("\n").getBytes("UTF-8"))
-        val (rows, viol) = validatePartition(slice, suite, outDir, p, fused,
-          mode = SaveMode.Append)
-        appendManifest(checkpointDir, ManifestEntry(p, hash,
-          prev.rows + rows, prev.violations + viol,
-          System.currentTimeMillis() - t0, System.currentTimeMillis(),
-          files = nowFiles))
-        Files.deleteIfExists(intent)
-      case (p, Full, nowFiles) =>
-        val t0 = System.currentTimeMillis()
-        // Scan EXACTLY the fingerprinted files, not table's file-index
-        // snapshot from run() start: a file landing between the
-        // snapshot and this partition's listing would otherwise be
-        // recorded as validated lineage without ever being scanned —
-        // and then skipped forever (round-4 review). Non-partitioned
-        // layouts (no per-partition listing) keep the filter path; the
-        // partition-pruning pushdown is identical either way.
-        val slice =
-          if (nowFiles.nonEmpty)
-            spark.read.option("basePath", tablePath)
-              .parquet(nowFiles.map(f =>
-                s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}"): _*)
-          else table.filter(partitionFilter(partitionCol, p))
-        val (rows, viol) = validatePartition(slice, suite, outDir, p, fused)
-        appendManifest(checkpointDir, ManifestEntry(p, hash, rows, viol,
-          System.currentTimeMillis() - t0, System.currentTimeMillis(),
-          files = nowFiles))
-        // a Full Overwrite re-establishes a clean state: clear any
-        // recovery marker left by a crashed incremental attempt
-        Files.deleteIfExists(intentFile(checkpointDir, p))
+    for ((p, Some(Work(files, prior)), nowFiles) <- planned) {
+      val t0 = System.currentTimeMillis()
+      // Scan EXACTLY the fingerprinted files, not table's file-index
+      // snapshot from run() start: a file landing in between would be
+      // recorded as validated lineage without ever being scanned — and
+      // then skipped forever (round-4 review). Non-partitioned layouts
+      // (no per-partition listing) keep the filter path.
+      val slice =
+        if (files.nonEmpty)
+          spark.read.option("basePath", tablePath) // re-derives partitionCol
+            .parquet(files.map(f =>
+              s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}"): _*)
+        else table.filter(partitionFilter(partitionCol, p))
+      // intent marker bracketing the write: present on the next startup
+      // ⇒ the bracket didn't close ⇒ full recovery (around a full
+      // Overwrite it is harmless: a leftover marker forces the same)
+      val intent = intentFile(checkpointDir, p)
+      Files.createDirectories(intent.getParent)
+      Files.write(intent, files.mkString("\n").getBytes("UTF-8"))
+      val (rows, viol) = validatePartition(slice, suite, outDir, p, fused,
+        mode = if (prior.isDefined) SaveMode.Append else SaveMode.Overwrite)
+      appendManifest(checkpointDir, ManifestEntry(p, hash,
+        prior.fold(0L)(_.rows) + rows, prior.fold(0L)(_.violations) + viol,
+        System.currentTimeMillis() - t0, System.currentTimeMillis(),
+        files = nowFiles))
+      Files.deleteIfExists(intent)
     }
 
     // verdict table from the manifest (cheap, driver-side truth)

@@ -24,8 +24,20 @@ class GraftSessionSpec extends AnyFunSuite {
   test("shuffle partitions equal n; UI off, session time zone UTC") {
     val three = settings(Map.empty, Map("SPARK_GRAFT_CPUS" -> "3"), 16)
     assert(three("spark.sql.shuffle.partitions") === "3")
-    assert(settings(Map("spark.master" -> "yarn"), Map.empty, 5)("spark.sql.shuffle.partitions") === "5")
     assert(three("spark.ui.enabled") === "false")
     assert(three("spark.sql.session.timeZone") === "UTC")
+  }
+
+  test("the launcher's master or --conf keeps its own shuffle width") {
+    // a cluster master: the submitting host's 5 cores say nothing about
+    // the cluster, so Spark's default (or the launcher's value) stays
+    val yarn = settings(Map("spark.master" -> "yarn"), Map.empty, 5)
+    assert(!yarn.contains("spark.sql.shuffle.partitions"))
+    assert(yarn("spark.ui.enabled") === "false")
+    // --conf spark.sql.shuffle.partitions=200 wins over local[n]
+    val conf = Map("spark.sql.shuffle.partitions" -> "200")
+    assert(settings(conf, Map("SPARK_GRAFT_CPUS" -> "3"), 16)("spark.sql.shuffle.partitions") === "200")
+    assert(!settings(conf + ("spark.master" -> "yarn"), Map.empty, 5)
+      .contains("spark.sql.shuffle.partitions"))
   }
 }

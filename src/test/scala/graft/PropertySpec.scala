@@ -78,6 +78,27 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("chunk windows: a source whose token arrays are all null or empty has no row") {
+    val schema = StructType(Seq(
+      StructField("source", StringType),
+      StructField("tokens", ArrayType(IntegerType, containsNull = false))))
+    val rows = Seq(Row("none", null), Row("none", Seq.empty[Int]),
+      Row("some", Seq(4, 5, 6)), Row("some", (0 until 300).toSeq), Row("some", null))
+    val df = spark.createDataFrame(rows.asJava, schema)
+    val wSz = ValidationQueries.ChunkW
+    val want = ValidationQueries.windowsOf(df, Seq("source"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Int](2))
+      .groupBy(_._1).map { case (src, ws) =>
+        val w = ws.map(_._2).toSeq
+        src -> ((w.length.toLong, w.count(_.length == wSz).toLong, w.map(_.length.toLong).sum,
+          w.map(_.zipWithIndex.map { case (t, i) => (i + 1).toLong * t }.sum).sum.toString))
+      }
+    val got = ValidationQueries.chunkWindowsOf(df).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
+    assert(want.keySet === Set("some"))
+    assert(got === want)
+  }
+
   test("TokenStats (tmin,tmax,dups,n) == scala brute force on random int arrays") {
     val arrays = Gen.listOfN(120, Gen.listOf(Gen.chooseNum(-50, 50))).sample.get
     val schema = StructType(Seq(StructField("t", ArrayType(IntegerType, containsNull = false))))

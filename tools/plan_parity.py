@@ -1,0 +1,42 @@
+#!/usr/bin/env python3
+"""Compare two PlanDump directories after masking what differs run to run:
+expression ids, plan ids, RDD ids and call sites, temp paths and the
+graft barrier's metric names. Prints each file whose masked plan differs
+and exits 1 if any does.
+Usage: plan_parity.py <dirA> <dirB>
+"""
+import os, re, sys, difflib
+
+MASKS = [
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\] at \w+ at [\w.]+:\d+"), "RDD[N] at CALLSITE"),
+    (re.compile(r"\[\d+\]"), "[N]"),
+    (re.compile(r"/tmp/\S+?(?=[\s\]/])"), "/tmp/T"),
+    # barrier metric names: graft_barrier_<k> now, fixed *_base names before
+    (re.compile(r"\bgraft_barrier_\d+\b|\b\w+_base\b(?=,)"), "BARRIER"),
+]
+
+
+def masked(path):
+    text = open(path).read()
+    for pat, rep in MASKS:
+        text = pat.sub(rep, text)
+    return text.splitlines()
+
+
+a, b = sys.argv[1], sys.argv[2]
+names = sorted(set(os.listdir(a)) | set(os.listdir(b)))
+bad = 0
+for n in names:
+    pa, pb = os.path.join(a, n), os.path.join(b, n)
+    if not (os.path.exists(pa) and os.path.exists(pb)):
+        print(f"ONLY IN ONE: {n}")
+        bad += 1
+        continue
+    diff = list(difflib.unified_diff(masked(pa), masked(pb), pa, pb, lineterm="", n=1))
+    if diff:
+        bad += 1
+        print("\n".join(diff[:40]))
+print(f"{len(names) - bad}/{len(names)} plans identical after masking")
+sys.exit(1 if bad else 0)
