@@ -12,8 +12,9 @@ import org.apache.spark.sql.expressions.Window
   * Scale design: both statistics reduce the table to a per-source /
   * per-bin count FIRST (partial+final hash agg, output cardinality =
   * #sources or #bins ≪ anything), then do all CDF / ratio arithmetic on
-  * that tiny frame. The baseline snapshot is broadcast. No windowing ever
-  * touches raw rows.
+  * that tiny frame, which meets the baseline snapshot in a full outer
+  * join (Spark cannot broadcast either side of one; both sides are
+  * #sources/#bins rows). No windowing ever touches raw rows.
   */
 object Drift {
 
@@ -38,7 +39,7 @@ object Drift {
     // null-safe join key: `source` is nullable, and an equi-join would
     // keep each side's null-key row UNMATCHED — identical mixes with a
     // null slice would report phantom PSI (round-4 review)
-    val joined = cur.join(broadcast(base), cur("key") <=> base("key"), "full_outer")
+    val joined = cur.join(base, cur("key") <=> base("key"), "full_outer")
       .select(coalesce(cur("key"), base("key")).as("key"),
         coalesce(col("c_cnt"), lit(0L)).as("c"), coalesce(col("b_cnt"), lit(0L)).as("b"))
     val tot = joined.agg(sum("c").as("ct"), sum("b").as("bt"))
@@ -65,7 +66,7 @@ object Drift {
     // distributions with a null slice would report ks > 0 (round-4
     // review; the null bin sorts first in the CDF window, same as any
     // other fixed bin position)
-    val joined = cur.join(broadcast(base), cur("bin") <=> base("bin"), "full_outer")
+    val joined = cur.join(base, cur("bin") <=> base("bin"), "full_outer")
       .select(coalesce(cur("bin"), base("bin")).as("bin"),
         coalesce(col("c_cnt"), lit(0L)).as("c"), coalesce(col("b_cnt"), lit(0L)).as("b"))
     val tot = joined.agg(sum("c").as("ct"), sum("b").as("bt"))

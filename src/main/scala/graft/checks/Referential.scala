@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the dimension is tiny (a handful of sources) → ALWAYS
   * broadcast; the fact side streams through map-side hash lookups with
-  * zero shuffle. left_anti = violations, left_semi = passing rows.
+  * zero shuffle. left_anti = violations.
   *
   * Skew note (BASELINE.json north_rule: "skew-salting on the source
   * key"): a broadcast join is inherently skew-immune — no fact-side
@@ -26,12 +26,6 @@ object Referential {
   def violations(facts: DataFrame, dim: DataFrame, key: String = "source"): DataFrame = {
     val active = dim.filter(col("active")).select(col(key))
     facts.join(broadcast(active), Seq(key), "left_anti")
-  }
-
-  /** Pass-rate per source partition: left_semi + count. */
-  def passing(facts: DataFrame, dim: DataFrame, key: String = "source"): DataFrame = {
-    val active = dim.filter(col("active")).select(col(key))
-    facts.join(broadcast(active), Seq(key), "left_semi")
   }
 
   /** Per-source row counts with explicit skew salting: phase 1 groups by

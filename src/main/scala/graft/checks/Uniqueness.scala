@@ -64,13 +64,4 @@ object Uniqueness {
       .agg(sum("_c").as("dup_count"))
       .filter(col("dup_count") > 1)
   }
-
-  /** Full violation rows for duplicated keys: join dup keys (small —
-    * broadcast) back to the table. The join side with duplicates is tiny
-    * relative to the table, so Catalyst/AQE picks broadcast; we force it.
-    */
-  def duplicateRows(df: DataFrame, key: String, salt: Int = 64): DataFrame = {
-    val dups = duplicateKeys(df, key, salt)
-    df.join(broadcast(dups), Seq(key), "inner")
-  }
 }

@@ -30,26 +30,12 @@ object ConstraintCompiler {
 
   type ElementCompiler = PartialFunction[Constraint, Column => Column]
 
-  /** Pluggable per-element compiler extensions (≙ TypeChecker.redefine,
-    * PJS:_types.py:122-154). Checked before the built-in table.
+  /** Pluggable keyword compiler extensions (≙ TypeChecker.redefine,
+    * PJS:_types.py:122-154), applied to field values and array elements
+    * alike. Checked before the built-in table.
     */
   @volatile var extensions: ElementCompiler = PartialFunction.empty
 
-  /** Compile a predicate over a single element value (used inside
-    * `forall`/`exists` lambdas for Items/Contains — the engine analogue
-    * of the reference's `descend` per array element, minus the 75x
-    * interpretive cost).
-    *
-    * NULL elements (round-1 ADVICE, medium): a null array element is the
-    * JSON `null` instance, so the same TYPE-GATING as top-level keywords
-    * applies — `minimum` on a null element PASSES (PJS:_keywords.py:
-    * 150-151 no-ops on non-numbers), `enum`/`const` compare null as a
-    * constant. Every branch below therefore returns a DEFINITE boolean
-    * (never SQL NULL), which makes `forall`, `exists`, and
-    * `size(filter(...))` agree with each other and with the reference —
-    * previously the exists fast path resolved a null predicate to PASS
-    * while the counted path resolved it to non-match.
-    */
   /** Numeric bound literal: keep the int fast path for integral bounds
     * (identical plans to round-2), but NEVER truncate a fractional
     * bound — `minimum: 2.5` must compare at 2.5, not 2 (round-3
@@ -86,74 +72,6 @@ object ConstraintCompiler {
       pmod(f, numLit(k)) === lit(0)
     else pmod(f.cast("double"), lit(k)) === lit(0.0)
 
-  def elementPred(c: Constraint)(e: Column): Column =
-    if (extensions.isDefinedAt(c)) extensions(c)(e)
-    else
-      c match {
-        case Always(b)         => lit(b)
-        // --- string element keywords (round-2 VERDICT item 3: the
-        // reference descends with the FULL keyword set per element,
-        // PJS:validators.py:396-446 — `items: {minLength: 3}` over an
-        // array<string> column is the doc-pipeline tag/url case) ---
-        case MinLength(n) => coalesce(length(e) >= lit(n), lit(true))
-        case MaxLength(n) => coalesce(length(e) <= lit(n), lit(true))
-        case Pattern(re)  => coalesce(e.rlike(re), lit(true))
-        case Format(name) =>
-          // same explicit null gate as the top-level Format compile:
-          // try_to_timestamp(null).isNotNull is a definite FALSE
-          when(e.isNull, lit(true)).otherwise(coalesce(formatPred(name, e), lit(true)))
-        case Minimum(b, false) => coalesce(e >= numLit(b), lit(true))
-        case Minimum(b, true)  => coalesce(e > numLit(b), lit(true))
-        case Maximum(b, false) => coalesce(e <= numLit(b), lit(true))
-        case Maximum(b, true)  => coalesce(e < numLit(b), lit(true))
-        // same double-pmod form as the top-level compile: an int cast
-        // would turn multipleOf 0.5 into pmod-by-zero = always-pass
-        case MultipleOf(k)     => coalesce(multipleOfPred(e, k), lit(true))
-        case Enum(vs) =>
-          val nonNull = vs.filter(_ != null)
-          val base = if (nonNull.isEmpty) lit(false) else e.isin(nonNull: _*)
-          when(e.isNull, lit(vs.contains(null))).otherwise(coalesce(base, lit(false)))
-        case Const(null)    => e.isNull
-        case Const(v)       => coalesce(e === lit(v), lit(false))
-        case TypeIs("null") => e.isNull
-        case TypeIs(_)      => e.isNotNull
-        case AllOf(cs)         => cs.map(elementPred(_)(e)).reduce(_ && _)
-        case AnyOf(cs)         => cs.map(elementPred(_)(e)).reduce(_ || _)
-        case OneOf(cs) =>
-          cs.map(elementPred(_)(e).cast("int")).reduce(_ + _) === lit(1)
-        case Not(x) => !elementPred(x)(e)
-        case IfThenElse(i, t, el) =>
-          val tp = t.map(elementPred(_)(e)).getOrElse(lit(true))
-          val ep = el.map(elementPred(_)(e)).getOrElse(lit(true))
-          when(elementPred(i)(e), tp).otherwise(ep)
-        case other =>
-          throw new IllegalArgumentException(s"not an element-level constraint: $other")
-      }
-
-  /** Compile one field constraint to (pass, observed). `col(field)` may
-    * be any supported type; array-level keywords expect ArrayType.
-    *
-    * NULL semantics (critical for reference parity): JSON Schema
-    * assertion keywords are TYPE-GATED — each keyword no-ops (passes) on
-    * instances outside its type (e.g. `minimum` on a null/string
-    * instance passes; PJS:_keywords.py:150-151 `if not
-    * validator.is_type(instance, "number"): return`). A relational NULL
-    * is the JSON `null` instance, so every gated keyword compiles to
-    * `coalesce(pred, TRUE)` (SQL 3VL yields NULL on null input, which we
-    * resolve to pass). Only `required`/`type` fail nulls, and
-    * `enum`/`const` treat null as a comparable constant. The predicates
-    * returned by go() are always null-resolved booleans, so combinators
-    * are pure two-valued boolean algebra.
-    */
-  def compile(fc: FieldConstraint): Compiled = compile(fc, Set.empty)
-
-  /** `fusedIntArrays`: fields known (by the caller's schema) to be
-    * array<int> columns. Constraints on them compile against ONE fused
-    * single-pass [[graft.functions.TokenStats]] profile instead of
-    * separate forall/array_distinct/size traversals; Catalyst
-    * whole-stage-codegen subexpression elimination evaluates the shared
-    * token_stats() tree once per row across the whole projection.
-    */
   /** Format-checker registry (≙ FormatChecker.checks, PJS:_format.py:57-168):
     * each format is a Column predicate — `to_date`/`to_timestamp` parse
     * checks or anchored regexes, all codegen'd, UDF-free. Extend via
@@ -322,200 +240,227 @@ object ConstraintCompiler {
       if (d.columns.contains(profCol(f))) d
       else d.withColumn(profCol(f), graft.functions.TokenStats.token_stats(col(f))))
 
-  def compile(fc: FieldConstraint, fusedIntArrays: Set[String]): Compiled = {
-    val f = col(fc.field)
-    def obsSelf: Column = coalesce(f.cast("string"), lit("null"))
+  /** Compile one field constraint to (pass, observed). `col(field)` may
+    * be any supported type; array-level keywords expect ArrayType.
+    *
+    * ONE keyword table, `check(c, v, prof)`, serves every value: `v` is
+    * either the field column or an array element inside the
+    * forall/exists/filter/aggregate lambdas of items, prefixItems,
+    * contains and unevaluatedItems — the engine analogue of the
+    * reference's per-element `descend` (PJS:validators.py:396-446),
+    * minus its 75x interpretive cost. [[extensions]] are consulted
+    * before the built-in cases.
+    *
+    * `fusedIntArrays`: fields known (by the caller's schema) to be
+    * array<int> columns. For those, `prof` is the field's pre-projected
+    * [[graft.functions.TokenStats]] profile ([[profCol]]) and the
+    * `(keyword, Some(p))` cases read it instead of separate
+    * forall/array_distinct/size traversals; `prof` is None for every
+    * other field and for elements. Combinators pass it through.
+    *
+    * NULL semantics (critical for reference parity): JSON Schema
+    * assertion keywords are TYPE-GATED — each keyword no-ops (passes) on
+    * instances outside its type (e.g. `minimum` on a null/string
+    * instance passes; PJS:_keywords.py:150-151 `if not
+    * validator.is_type(instance, "number"): return`). A relational NULL
+    * — a null field or a null array element alike — is the JSON `null`
+    * instance, so every gated keyword compiles to `coalesce(pred, TRUE)`
+    * (SQL 3VL yields NULL on null input, which we resolve to pass). Only
+    * `required`/`type` fail nulls, and `enum`/`const` treat null as a
+    * comparable constant. Every pass predicate is therefore a DEFINITE
+    * boolean (never SQL NULL): combinators are pure two-valued boolean
+    * algebra, and `forall`, `exists` and `size(filter(...))` over
+    * elements agree with each other and with the reference.
+    */
+  def compile(fc: FieldConstraint, fusedIntArrays: Set[String] = Set.empty): Compiled = {
+    def shown(x: Column): Column = coalesce(x.cast("string"), lit("null"))
     def gated(pred: Column): Column = coalesce(pred, lit(true))
-    lazy val prof = col(profCol(fc.field))
-    val fuse = fusedIntArrays.contains(fc.field)
+    def profOf(field: String): Option[Column] =
+      if (fusedIntArrays.contains(field)) Some(col(profCol(field))) else None
 
-    def goFused: PartialFunction[Constraint, (Column, Column)] = {
-      case Items(Minimum(b, excl)) =>
-        val p = if (excl) prof("tmin") > numLit(b) else prof("tmin") >= numLit(b)
-        (gated(prof("n") === 0 || p), coalesce(prof("tmin").cast("string"), lit("null")))
-      case Items(Maximum(b, excl)) =>
-        val p = if (excl) prof("tmax") < numLit(b) else prof("tmax") <= numLit(b)
-        (gated(prof("n") === 0 || p), coalesce(prof("tmax").cast("string"), lit("null")))
-      case UniqueItems() =>
-        (gated(prof("dups") === 0), coalesce(prof("dups").cast("string"), lit("null")))
-      case MinItems(k) =>
-        (gated(prof("n") >= lit(k)), coalesce(prof("n").cast("string"), lit("null")))
-      case MaxItems(k) =>
-        (gated(prof("n") <= lit(k)), coalesce(prof("n").cast("string"), lit("null")))
-    }
+    def check(c: Constraint, v: Column, prof: Option[Column]): (Column, Column) = {
+      def obsSelf: Column = shown(v)
+      def pass(x: Constraint): Column = check(x, v, prof)._1
+      def elem(x: Constraint): Column => Column = e => check(x, e, None)._1
+      // every element passes; observed: the first offending element
+      // (try_: null-safe on empty, ANSI mode makes plain element_at throw)
+      def allElems(arr: Column, el: Constraint): (Column, Column) =
+        (gated(forall(arr, elem(el))),
+          shown(try_element_at(filter(arr, e => !elem(el)(e)), lit(1))))
 
-    def go(c: Constraint): (Column, Column) = if (fuse && goFused.isDefinedAt(c)) goFused(c) else c match {
-      case Always(b)  => (lit(b), lit("n/a"))
-      // --- presence / type (PJS:_keywords.py:282-309) ---
-      case Required() => (f.isNotNull, lit("null"))
-      case TypeIs("null") => (f.isNull, obsSelf)
-      case TypeIs(_)  => (f.isNotNull, lit("null"))
+      (c, prof) match {
+        case _ if extensions.isDefinedAt(c) => (extensions(c)(v), obsSelf)
+        case (Always(b), _) => (lit(b), lit("n/a"))
 
-      // --- scalar bounds (PJS:_keywords.py:127-191); numLit keeps an
-      //     integral bound an INT literal so int/long columns compare
-      //     without a per-row double promotion (and bigint values past
-      //     2^53 compare exactly), same as the element-level path ---
-      case Minimum(b, false) => (gated(f >= numLit(b)), obsSelf)
-      case Minimum(b, true)  => (gated(f > numLit(b)), obsSelf)
-      case Maximum(b, false) => (gated(f <= numLit(b)), obsSelf)
-      case Maximum(b, true)  => (gated(f < numLit(b)), obsSelf)
-      case MultipleOf(k)     => (gated(multipleOfPred(f, k)), obsSelf)
+        // --- presence / type (PJS:_keywords.py:282-309) ---
+        case (Required(), _)     => (v.isNotNull, lit("null"))
+        case (TypeIs("null"), _) => (v.isNull, obsSelf)
+        case (TypeIs(_), _)      => (v.isNotNull, lit("null"))
 
-      // --- string (PJS:_keywords.py:215-240; Spark length() is
-      //     code-point based on strings, matching the spec) ---
-      case Format(name) =>
-        // explicit null gate: try_to_timestamp(null).isNotNull is a
-        // definite FALSE (not NULL), so coalesce-gating can't apply
-        (when(f.isNull, lit(true)).otherwise(gated(formatPred(name, f))), obsSelf)
-      case PrefixItems(cs) =>
-        // element i checked only when present (PJS:_keywords.py:440-443
-        // zips schema list with instance prefix)
-        val preds = cs.zipWithIndex.map { case (c0, i) =>
-          size(f) <= lit(i) || elementPred(c0)(element_at(f, i + 1))
-        }
-        (gated(preds.reduce(_ && _)), obsSelf)
-      case MinLength(n) => (gated(length(f) >= lit(n)), coalesce(length(f).cast("string"), lit("null")))
-      case MaxLength(n) => (gated(length(f) <= lit(n)), coalesce(length(f).cast("string"), lit("null")))
-      case Pattern(re)  => (gated(f.rlike(re)), obsSelf)
+        // --- scalar bounds (PJS:_keywords.py:127-191); numLit keeps an
+        //     integral bound an INT literal so int/long values compare
+        //     without a per-row double promotion (and bigint values past
+        //     2^53 compare exactly) ---
+        case (Minimum(b, false), _) => (gated(v >= numLit(b)), obsSelf)
+        case (Minimum(b, true), _)  => (gated(v > numLit(b)), obsSelf)
+        case (Maximum(b, false), _) => (gated(v <= numLit(b)), obsSelf)
+        case (Maximum(b, true), _)  => (gated(v < numLit(b)), obsSelf)
+        case (MultipleOf(k), _)     => (gated(multipleOfPred(v, k)), obsSelf)
 
-      // --- enum/const: deep structural equality is native in Spark for
-      //     arrays/structs (PJS:_utils.py:127-153; SURVEY.md §1.2).
-      //     enum/const apply to ALL types including null, so null does
-      //     NOT gate: null passes iff null is among the constants. ---
-      case Enum(vs) =>
-        val nonNull = vs.filter(_ != null)
-        val base = if (nonNull.isEmpty) lit(false) else f.isin(nonNull: _*)
-        (when(f.isNull, lit(vs.contains(null))).otherwise(coalesce(base, lit(false))), obsSelf)
-      case Const(null) => (f.isNull, obsSelf)
-      case Const(v)    => (coalesce(f === lit(v), lit(false)), obsSelf)
+        // --- string (PJS:_keywords.py:215-240; Spark length() is
+        //     code-point based on strings, matching the spec) ---
+        case (Format(name), _) =>
+          // explicit null gate: try_to_timestamp(null).isNotNull is a
+          // definite FALSE (not NULL), so coalesce-gating can't apply
+          (when(v.isNull, lit(true)).otherwise(gated(formatPred(name, v))), obsSelf)
+        case (MinLength(n), _) => (gated(length(v) >= lit(n)), shown(length(v)))
+        case (MaxLength(n), _) => (gated(length(v) <= lit(n)), shown(length(v)))
+        case (Pattern(re), _)  => (gated(v.rlike(re)), obsSelf)
 
-      // --- array (PJS:_keywords.py:59-124,194-212) ---
-      case MinItems(n) => (gated(size(f) >= lit(n)), coalesce(size(f).cast("string"), lit("null")))
-      case MaxItems(n) => (gated(size(f) <= lit(n)), coalesce(size(f).cast("string"), lit("null")))
-      case UniqueItems() =>
-        // pairwise distinctness under structural equality; hash-based
-        // O(n) vs the reference's sort fast-path (PJS:_utils.py:156-181)
-        (gated(size(array_distinct(f)) === size(f)),
-          coalesce((size(f) - size(array_distinct(f))).cast("string"), lit("null")))
-      case Items(el) =>
+        // --- enum/const: deep structural equality is native in Spark for
+        //     arrays/structs (PJS:_utils.py:127-153; SURVEY.md §1.2).
+        //     enum/const apply to ALL types including null, so null does
+        //     NOT gate: null passes iff null is among the constants. ---
+        case (Enum(vs), _) =>
+          val nonNull = vs.filter(_ != null)
+          val base = if (nonNull.isEmpty) lit(false) else v.isin(nonNull: _*)
+          (when(v.isNull, lit(vs.contains(null))).otherwise(coalesce(base, lit(false))), obsSelf)
+        case (Const(null), _) => (v.isNull, obsSelf)
+        case (Const(x), _)    => (coalesce(v === lit(x), lit(false)), obsSelf)
+
+        // --- array (PJS:_keywords.py:59-124,194-212); a `Some(p)` case
+        //     reads the fused single-pass TokenStats profile instead of
+        //     traversing the array ---
+        case (MinItems(k), Some(p))   => (gated(p("n") >= lit(k)), shown(p("n")))
+        case (MinItems(n), _)         => (gated(size(v) >= lit(n)), shown(size(v)))
+        case (MaxItems(k), Some(p))   => (gated(p("n") <= lit(k)), shown(p("n")))
+        case (MaxItems(n), _)         => (gated(size(v) <= lit(n)), shown(size(v)))
+        case (UniqueItems(), Some(p)) => (gated(p("dups") === 0), shown(p("dups")))
+        case (UniqueItems(), _) =>
+          // pairwise distinctness under structural equality; hash-based
+          // O(n) vs the reference's sort fast-path (PJS:_utils.py:156-181)
+          (gated(size(array_distinct(v)) === size(v)), shown(size(v) - size(array_distinct(v))))
+        case (PrefixItems(cs), _) =>
+          // element i checked only when present (PJS:_keywords.py:440-443
+          // zips schema list with instance prefix)
+          val preds = cs.zipWithIndex.map { case (c0, i) =>
+            size(v) <= lit(i) || elem(c0)(element_at(v, i + 1))
+          }
+          (gated(preds.reduce(_ && _)), obsSelf)
+        case (Items(Minimum(b, excl)), Some(p)) =>
+          val ok = if (excl) p("tmin") > numLit(b) else p("tmin") >= numLit(b)
+          (gated(p("n") === 0 || ok), shown(p("tmin")))
+        case (Items(Maximum(b, excl)), Some(p)) =>
+          val ok = if (excl) p("tmax") < numLit(b) else p("tmax") <= numLit(b)
+          (gated(p("n") === 0 || ok), shown(p("tmax")))
         // THE hot path: codegen'd forall over array<int> — recovers the
         // reference's 75x per-element descent overhead (BASELINE.md)
-        (gated(forall(f, e => elementPred(el)(e))),
-          // observed: first offending element (try_: null-safe on empty,
-          // ANSI mode makes plain element_at throw)
-          coalesce(try_element_at(filter(f, e => !elementPred(el)(e)), lit(1)).cast("string"), lit("null")))
-      case ItemsFrom(k, el) =>
+        case (Items(el), _) => allElems(v, el)
         // items after prefixItems: two-arg filter lambda keeps elements
         // at index >= k without slice's negative-length edge cases
-        val rest = filter(f, (e, i) => i >= lit(k))
-        (gated(forall(rest, e => elementPred(el)(e))),
-          coalesce(try_element_at(filter(rest, e => !elementPred(el)(e)), lit(1)).cast("string"), lit("null")))
-      case UnevaluatedItems(base, gp, ge, bc, gc, u) =>
-        // linear encoding: prefix-max / contains-union / everything-OR
-        // over the ACTIVE contributors only. Gates are row-level
-        // predicates that may themselves be O(n) over this same array
-        // (a contains gate is an exists, minItems is a size) — inside a
-        // per-element lambda they would re-run once PER ELEMENT, an
-        // O(k·n²)-per-row scan. aggregate()'s SEED is evaluated once
-        // per row, so every gate result rides the fold as a struct
-        // field and each element costs only field reads.
-        val effSeed = (lit(base) +: gp.map { case (g, p) =>
-          when(go(g)._1, lit(p)).otherwise(lit(0))
-        }) match {
-          case Seq(one)  => one
-          case prefixes  => greatest(prefixes: _*)
-        }
-        val skipSeed = ge.map(go(_)._1).foldLeft(lit(false))(_ || _)
-        val zero = struct(
-          Seq(lit(0).as("i"), lit(true).as("ok"),
-            lit(null).cast("string").as("bad"),
-            effSeed.as("eff"), skipSeed.as("skip")) ++
-            gc.zipWithIndex.map { case ((g, _), j) => go(g)._1.as(s"g$j") }: _*)
-        // same truth table as the forall/filter pair it replaces:
-        // `&&`-fold ≙ forall (false dominates, then null), `(!ok)===true`
-        // ≙ filter-keeps-true for the first offending element
-        def elemOk(acc: Column, e: Column): Column =
-          (bc.map(c => elementPred(c)(e)) ++
-            gc.zipWithIndex.map { case ((_, c), j) => acc(s"g$j") && elementPred(c)(e) } :+
-            elementPred(u)(e)).reduce(_ || _)
-        val agg = aggregate(f, zero, (acc, e) => {
-          val evaluated = acc("i") < acc("eff")
-          val ok = elemOk(acc, e)
-          struct(
-            Seq((acc("i") + 1).as("i"),
-              (acc("ok") && (evaluated || ok)).as("ok"),
-              coalesce(acc("bad"),
-                when(!evaluated && coalesce(!ok, lit(false)), e.cast("string"))).as("bad"),
-              acc("eff").as("eff"), acc("skip").as("skip")) ++
-              gc.indices.map(j => acc(s"g$j").as(s"g$j")): _*)
-        })
-        (gated(agg("skip") || agg("ok")), coalesce(agg("bad"), lit("null")))
-      case Contains(el, 1, Int.MaxValue) =>
-        // common case (minContains=1, no max): `exists` short-circuits on
-        // first match and allocates nothing, vs filter()'s per-row result
-        // array (measured 2.8s -> sub-second on 1M x 264-token rows).
-        // Mirrors the reference's own early-exit (PJS:_keywords.py:103-110).
-        (gated(exists(f, e => elementPred(el)(e))),
-          // a failing row by definition contains zero matches
-          lit("0"))
-      case Contains(el, mn, mx) =>
-        val cnt = size(filter(f, e => elementPred(el)(e)))
-        val pass =
-          if (mx == Int.MaxValue) cnt >= lit(mn)
-          else cnt >= lit(mn) && cnt <= lit(mx)
-        (gated(pass), coalesce(cnt.cast("string"), lit("null")))
+        case (ItemsFrom(k, el), _) => allElems(filter(v, (e, i) => i >= lit(k)), el)
+        case (UnevaluatedItems(base, gp, ge, bc, gc, u), _) =>
+          // linear encoding: prefix-max / contains-union / everything-OR
+          // over the ACTIVE contributors only. Gates are row-level
+          // predicates that may themselves be O(n) over this same array
+          // (a contains gate is an exists, minItems is a size) — inside a
+          // per-element lambda they would re-run once PER ELEMENT, an
+          // O(k·n²)-per-row scan. aggregate()'s SEED is evaluated once
+          // per row, so every gate result rides the fold as a struct
+          // field and each element costs only field reads.
+          val effSeed = (lit(base) +: gp.map { case (g, p) =>
+            when(pass(g), lit(p)).otherwise(lit(0))
+          }) match {
+            case Seq(one)  => one
+            case prefixes  => greatest(prefixes: _*)
+          }
+          val skipSeed = ge.map(pass).foldLeft(lit(false))(_ || _)
+          val zero = struct(
+            Seq(lit(0).as("i"), lit(true).as("ok"),
+              lit(null).cast("string").as("bad"),
+              effSeed.as("eff"), skipSeed.as("skip")) ++
+              gc.zipWithIndex.map { case ((g, _), j) => pass(g).as(s"g$j") }: _*)
+          // same truth table as the forall/filter pair it replaces:
+          // `&&`-fold ≙ forall (false dominates, then null), `(!ok)===true`
+          // ≙ filter-keeps-true for the first offending element
+          def elemOk(acc: Column, e: Column): Column =
+            (bc.map(c => elem(c)(e)) ++
+              gc.zipWithIndex.map { case ((_, c), j) => acc(s"g$j") && elem(c)(e) } :+
+              elem(u)(e)).reduce(_ || _)
+          val agg = aggregate(v, zero, (acc, e) => {
+            val evaluated = acc("i") < acc("eff")
+            val ok = elemOk(acc, e)
+            struct(
+              Seq((acc("i") + 1).as("i"),
+                (acc("ok") && (evaluated || ok)).as("ok"),
+                coalesce(acc("bad"),
+                  when(!evaluated && coalesce(!ok, lit(false)), e.cast("string"))).as("bad"),
+                acc("eff").as("eff"), acc("skip").as("skip")) ++
+                gc.indices.map(j => acc(s"g$j").as(s"g$j")): _*)
+          })
+          (gated(agg("skip") || agg("ok")), coalesce(agg("bad"), lit("null")))
+        case (Contains(el, 1, Int.MaxValue), _) =>
+          // common case (minContains=1, no max): `exists` short-circuits on
+          // first match and allocates nothing, vs filter()'s per-row result
+          // array (measured 2.8s -> sub-second on 1M x 264-token rows).
+          // Mirrors the reference's own early-exit (PJS:_keywords.py:103-110).
+          // A failing row by definition contains zero matches.
+          (gated(exists(v, elem(el))), lit("0"))
+        case (Contains(el, mn, mx), _) =>
+          val cnt = size(filter(v, elem(el)))
+          val ok =
+            if (mx == Int.MaxValue) cnt >= lit(mn)
+            else cnt >= lit(mn) && cnt <= lit(mx)
+          (gated(ok), shown(cnt))
 
-      // --- combinators (PJS:_keywords.py:332-389); children are already
-      //     null-resolved, so plain boolean algebra is exact ---
-      case AllOf(cs) => (cs.map(go(_)._1).reduce(_ && _), obsSelf)
-      case AnyOf(cs) => (cs.map(go(_)._1).reduce(_ || _), obsSelf)
-      case OneOf(cs) => (cs.map(go(_)._1.cast("int")).reduce(_ + _) === lit(1), obsSelf)
-      case Not(x)    => (!go(x)._1, obsSelf)
-      case IfThenElse(i, t, e) =>
-        val tp = t.map(go(_)._1).getOrElse(lit(true))
-        val ep = e.map(go(_)._1).getOrElse(lit(true))
-        (when(go(i)._1, tp).otherwise(ep), obsSelf)
+        // --- combinators (PJS:_keywords.py:332-389); children are already
+        //     null-resolved, so plain boolean algebra is exact ---
+        case (AllOf(cs), _) => (cs.map(pass).reduce(_ && _), obsSelf)
+        case (AnyOf(cs), _) => (cs.map(pass).reduce(_ || _), obsSelf)
+        case (OneOf(cs), _) => (cs.map(pass(_).cast("int")).reduce(_ + _) === lit(1), obsSelf)
+        case (Not(x), _)    => (!pass(x), obsSelf)
+        case (IfThenElse(i, t, e), _) =>
+          val tp = t.map(pass).getOrElse(lit(true))
+          val ep = e.map(pass).getOrElse(lit(true))
+          (when(pass(i), tp).otherwise(ep), obsSelf)
 
-      // --- cross-field / referential (engine keywords, not JSON Schema:
-      //     null FAILS — data-quality semantics, `required` not implied) ---
-      case EqSizeOf(arr) if fusedIntArrays.contains(arr) =>
-        val an = col(profCol(arr))("n")
-        (coalesce(f === an, lit(false)),
-          concat_ws("!=", coalesce(f.cast("string"), lit("null")), an.cast("string")))
-      case EqSizeOf(arr) =>
-        (coalesce(f === size(col(arr)), lit(false)),
-          concat_ws("!=", coalesce(f.cast("string"), lit("null")), size(col(arr)).cast("string")))
-      case EqLengthOf(sf) =>
-        (coalesce(f === length(col(sf)), lit(false)),
-          concat_ws("!=", coalesce(f.cast("string"), lit("null")), length(col(sf)).cast("string")))
-      case DependentRequired(fields) =>
-        (!f.isNotNull || fields.map(col(_).isNotNull).reduce(_ && _), obsSelf)
-      case PresentCount(mn, mx, cols) =>
-        // min/maxProperties: present keys = non-null columns
-        // (PJS:_keywords.py:312-329 over the fixed column universe)
-        val cnt = cols.map(col(_).isNotNull.cast("int")).reduce(_ + _)
-        val pass =
-          if (mx == Int.MaxValue) cnt >= lit(mn)
-          else if (mn <= 0) cnt <= lit(mx)
-          else cnt >= lit(mn) && cnt <= lit(mx)
-        (pass, cnt.cast("string"))
-      case WhenPresent(trigger, inner) =>
-        // dependentSchemas implication (PJS:_keywords.py:257-266):
-        // inner applies to THIS field only when `trigger` is present
-        val (p, o) = go(inner)
-        (!col(trigger).isNotNull || p, o)
-      case FieldPresent(nm) =>
-        // cross-field presence gate (conditionally-evaluated keys)
-        (col(nm).isNotNull, obsSelf)
-      case OnField(nm, inner) =>
-        // re-anchor: compile `inner` against the named field (branch-
-        // validity gates for conditionally-evaluated keys)
-        (compile(FieldConstraint(fc.id, nm, inner), fusedIntArrays).pass, obsSelf)
-      case Ref(n) =>
-        throw new IllegalStateException(s"unresolved $$ref '$n' — call Suite.resolved first")
+        // --- cross-field / referential (engine keywords, not JSON Schema:
+        //     null FAILS — data-quality semantics, `required` not implied) ---
+        case (EqSizeOf(arr), _) =>
+          val an = profOf(arr).fold(size(col(arr)))(_("n"))
+          (coalesce(v === an, lit(false)), concat_ws("!=", obsSelf, an.cast("string")))
+        case (EqLengthOf(sf), _) =>
+          (coalesce(v === length(col(sf)), lit(false)),
+            concat_ws("!=", obsSelf, length(col(sf)).cast("string")))
+        case (DependentRequired(fields), _) =>
+          (!v.isNotNull || fields.map(col(_).isNotNull).reduce(_ && _), obsSelf)
+        case (PresentCount(mn, mx, cols), _) =>
+          // min/maxProperties: present keys = non-null columns
+          // (PJS:_keywords.py:312-329 over the fixed column universe)
+          val cnt = cols.map(col(_).isNotNull.cast("int")).reduce(_ + _)
+          val ok =
+            if (mx == Int.MaxValue) cnt >= lit(mn)
+            else if (mn <= 0) cnt <= lit(mx)
+            else cnt >= lit(mn) && cnt <= lit(mx)
+          (ok, cnt.cast("string"))
+        case (WhenPresent(trigger, inner), _) =>
+          // dependentSchemas implication (PJS:_keywords.py:257-266):
+          // inner applies to THIS value only when `trigger` is present
+          val (p, o) = check(inner, v, prof)
+          (!col(trigger).isNotNull || p, o)
+        case (FieldPresent(nm), _) =>
+          // cross-field presence gate (conditionally-evaluated keys)
+          (col(nm).isNotNull, obsSelf)
+        case (OnField(nm, inner), _) =>
+          // re-anchor: check `inner` against the named field (branch-
+          // validity gates for conditionally-evaluated keys)
+          (check(inner, col(nm), profOf(nm))._1, obsSelf)
+        case (Ref(n), _) =>
+          throw new IllegalStateException(s"unresolved $$ref '$n' — call Suite.resolved first")
+      }
     }
 
-    val (p, o) = go(fc.constraint)
+    val (p, o) = check(fc.constraint, col(fc.field), profOf(fc.field))
     Compiled(fc.id, p, coalesce(o, lit("null")))
   }
 
@@ -523,9 +468,7 @@ object ConstraintCompiler {
     * array<struct<cid,pass,observed>> — ONE projection, one table scan,
     * all constraints (SURVEY.md §4.3.2).
     */
-  def checksColumn(suite: Suite): Column = checksColumn(suite, Set.empty)
-
-  def checksColumn(suite: Suite, fusedIntArrays: Set[String]): Column = {
+  def checksColumn(suite: Suite, fusedIntArrays: Set[String] = Set.empty): Column = {
     val cs = suite.resolved.constraints.map(compile(_, fusedIntArrays))
     // observed is computed LAZILY (only on failure): codegen evaluates the
     // when-branch conditionally, so passing rows never pay for the
@@ -574,9 +517,7 @@ object ConstraintCompiler {
     * `row_valid` conjunction (≙ is_valid short-circuit AND,
     * PJS:validators.py:485-500).
     */
-  def withVerdicts(df: DataFrame, suite: Suite): DataFrame = withVerdicts(df, suite, Set.empty)
-
-  def withVerdicts(df: DataFrame, suite: Suite, fusedIntArrays: Set[String]): DataFrame = {
+  def withVerdicts(df: DataFrame, suite: Suite, fusedIntArrays: Set[String] = Set.empty): DataFrame = {
     val cs = suite.resolved.constraints.map(compile(_, fusedIntArrays))
     val withCols = cs.foldLeft(withProfiles(df, fusedIntArrays))((d, c) => d.withColumn(c.id, c.pass))
     // constraint ids contain dots — backtick-quote (doubling embedded

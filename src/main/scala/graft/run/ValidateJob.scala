@@ -40,21 +40,26 @@ object ValidateJob {
 
   /** `files`: the partition's data files as `name:size` fingerprints at
     * validation time — the lineage that makes restarts INCREMENTAL (see
-    * [[completedDetail]]). Empty for pre-lineage entries and
-    * non-partitioned layouts (those keep whole-partition semantics).
+    * [[completedDetail]]). Empty for non-partitioned layouts (those keep
+    * whole-partition semantics).
     */
   final case class ManifestEntry(partition: String, suiteHash: String, rows: Long,
-      violations: Long, wallMs: Long, ts: Long, files: Seq[String] = Nil)
+      violations: Long, wallMs: Long, ts: Long, files: Seq[String])
 
+  /** Content address of the resolved suite: SHA-256 hex of its text, so
+    * every suite edit changes it. A 32-bit hash collides on one-character
+    * regex/enum edits (`"^Aa"` vs `"^BB"`), and a collision would skip
+    * every partition and keep stale verdicts.
+    */
   def suiteHash(s: Suite): String =
-    java.lang.Integer.toHexString(s.resolved.toString.hashCode)
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.resolved.toString.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
 
   /** Per-partition lineage from the manifest (last line per partition
     * wins): recorded file fingerprints + CUMULATIVE row/violation
     * counts for entries written under the given suite hash.
     */
-  final case class PartState(files: Set[String], rows: Long, violations: Long,
-      hasLineage: Boolean = true)
+  final case class PartState(files: Set[String], rows: Long, violations: Long)
 
   /** Manifest line codec: a REAL JSON parser/emitter (Jackson, already
     * on the Spark classpath), not regexes — a partition value or file
@@ -87,19 +92,13 @@ object ValidateJob {
       val h = strField("suiteHash")
       val rows = longField("rows")
       val viol = longField("violations")
-      // files field ABSENT (pre-lineage manifest) is distinct from
-      // PRESENT-but-empty (a validated empty or non-partitioned slice):
-      // only the former falls back to whole-partition skip semantics
-      val filesOpt = Option(node.get("files")).filter(_.isArray).map { arr =>
+      val files = Option(node.get("files")).filter(_.isArray).toSeq.flatMap { arr =>
         (0 until arr.size).map(i => arr.get(i).asText).filter(_.nonEmpty)
       }
       (part, h, rows, viol) match {
         // a later entry under a DIFFERENT hash invalidates the partition
         case (Some(p), Some(hh), Some(r), Some(v)) =>
-          byPart(p) = if (hh == hash)
-            Some(PartState(filesOpt.getOrElse(Seq.empty).toSet, r, v,
-              hasLineage = filesOpt.isDefined))
-          else None
+          byPart(p) = if (hh == hash) Some(PartState(files.toSet, r, v)) else None
         case _ => ()
       }
       }
@@ -281,7 +280,7 @@ object ValidateJob {
     //    cumulative counts + full file list
     //  - files removed/rewritten      -> full re-validate (compaction,
     //    replace) — the only sound answer without row-level lineage
-    //  - no lineage (old manifest / non-partitioned layout) -> classic
+    //  - non-partitioned layout (no file list) -> classic
     //    whole-partition skip-if-completed
     // A partition to validate scans `files` and adds its counts to
     // `prior`; a full revalidation has no prior counts and overwrites.
@@ -295,15 +294,14 @@ object ValidateJob {
           // and its manifest line — that append may have half-landed, so
           // only a full Overwrite re-validate is sound (round-4 review)
           full
-        case Some(st) if st.hasLineage =>
+        case Some(st) =>
           if (st.files == nowFiles.toSet) None
           else if (nowFiles.isEmpty)
             full // directory emptied under us: the manifest counts are stale
           else if (st.files.subsetOf(nowFiles.toSet))
             Some(Work(nowFiles.filterNot(st.files), Some(st)))
           else full
-        case Some(_) => None // pre-lineage entry: whole-partition resume
-        case None    => full
+        case None => full
       }
       (p, plan, nowFiles)
     }

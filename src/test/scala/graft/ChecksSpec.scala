@@ -86,6 +86,28 @@ class ChecksSpec extends SparkSpec {
     assert(Drift.ksBinned(longer, snapshot).head().getDouble(0) > 0.15)
   }
 
+  test("sketch profile: HLL distincts within 3 rsd, quantiles within the sketches' rank error") {
+    val r = Stats.sketchProfile(toks).head()
+    // approx_count_distinct at rsd 0.01: within 3·rsd of the exact count
+    for (c <- Seq("doc_id", "source")) {
+      val exact = toks.select(countDistinct(c)).head().getLong(0)
+      val approx = r.getAs[Long](s"${c}_approx_distinct")
+      assert(math.abs(approx - exact).toDouble / exact <= 0.03, s"$c: approx $approx vs exact $exact")
+    }
+    // a value q answers quantile p within rank error eps when
+    // rank(< q) - eps <= p <= rank(<= q) + eps (tie-aware: n_tok repeats)
+    val xs = toks.select("n_tok").collect().map(_.getInt(0))
+    def withinRank(q: Double, p: Double, eps: Double): Boolean =
+      xs.count(_ < q).toDouble / xs.length - eps <= p && p <= xs.count(_ <= q).toDouble / xs.length + eps
+    val ps = Seq(0.5, 0.9, 0.99)
+    // percentile_approx at accuracy 10000: rank error 1/accuracy
+    for ((p, q) <- ps.zip(r.getAs[Seq[Int]]("n_tok_p50_p90_p99")))
+      assert(withinRank(q, p, 1.0 / 10000), s"percentile_approx p=$p gave $q")
+    // t-digest at k=200: the 2% rank error SketchSpec pins
+    for ((p, q) <- ps.zip(r.getAs[Seq[Double]]("n_tok_td_p50_p90_p99")))
+      assert(withinRank(q, p, 0.02), s"t-digest p=$p gave $q")
+  }
+
   test("token vocab approx within 5% of exact") {
     val approx = Stats.tokenVocabApprox(toks).head().getLong(0)
     val exact = toks.select(explode(col("tokens")).as("t")).select(countDistinct("t")).head().getLong(0)

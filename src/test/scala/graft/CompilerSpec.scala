@@ -36,6 +36,12 @@ class CompilerSpec extends SparkSpec {
     val got = df.select(compiled.pass).collect().map(_.getBoolean(0))
     val want = arrays.map(a => a.forall(t => t >= 0 && t <= 255))
     assert(got.toSeq == want)
+    // an array keyword over an element value: items of items over
+    // array<array<int>> compiles through the same keyword table
+    val nested = arrays.map(_.grouped(3).toList)
+    val nestedPass = ConstraintCompiler.compile(FieldConstraint("n", "v", Items(c))).pass
+    assert(nested.map(a => Tuple1(a)).toDF("v").select(nestedPass).collect().map(_.getBoolean(0)).toSeq ==
+      nested.map(_.forall(_.forall(t => t >= 0 && t <= 255))))
   }
 
   test("contains counting property") {
@@ -76,6 +82,10 @@ class CompilerSpec extends SparkSpec {
       val df = Seq(Tuple1(Seq(2, 4)), Tuple1(Seq(2, 3))).toDF("v")
       val compiled = ConstraintCompiler.compile(FieldConstraint("e", "v", Items(Even)))
       assert(df.select(compiled.pass).collect().map(_.getBoolean(0)).toSeq == Seq(true, false))
+      // the same registry compiles a field value: one keyword table
+      val ints = Seq(2, 3, 4).toDF("n")
+      val field = ConstraintCompiler.compile(FieldConstraint("f", "n", Even))
+      assert(ints.select(field.pass).collect().map(_.getBoolean(0)).toSeq == Seq(true, false, true))
     } finally ConstraintCompiler.extensions = PartialFunction.empty
   }
 

@@ -32,7 +32,7 @@ abstract class GoldenCorpusSpec(resource: String) extends SparkSpec {
     case "bool"        => BooleanType
     case "array<int>"  => ArrayType(IntegerType, containsNull = false)
     // null elements reachable: the JSON `null` instance inside an array
-    // (element keywords must type-gate it, ConstraintCompiler.elementPred)
+    // (element keywords must type-gate it, ConstraintCompiler.compile's check)
     case "array<int?>"    => ArrayType(IntegerType, containsNull = true)
     case "array<string>"  => ArrayType(StringType, containsNull = false)
     case "array<string?>" => ArrayType(StringType, containsNull = true)
@@ -192,7 +192,7 @@ class FuzzDoubleSuiteSpec extends GoldenCorpusSpec("golden/fuzz_double_cases.jso
   * (minLength/maxLength/pattern/enum/const + the exact-semantics
   * formats uuid/ipv4) inside items/prefixItems/contains over
   * array<string> and array<string?> columns, plus array-level keywords
-  * and unevaluatedItems — pins the elementPred string path with
+  * and unevaluatedItems — pins the element-level string path with
   * in-array null gating against the reference.
   */
 class FuzzStrArraySuiteSpec extends GoldenCorpusSpec("golden/fuzz_strarray_cases.json")

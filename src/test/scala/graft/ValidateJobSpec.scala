@@ -180,7 +180,7 @@ class ValidateJobSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(v("web") == 0, "verdict table must not carry stale counts")
 
-    // a third run is stable: validated-empty ≠ pre-lineage, so it skips
+    // a third run is stable: the recorded empty file list matches, so it skips
     val lines = Files.readAllLines(Paths.get(ckpt, "manifest.jsonl")).size()
     ValidateJob.run(spark, table, out, ckpt)
     assert(Files.readAllLines(Paths.get(ckpt, "manifest.jsonl")).size() == lines,
@@ -464,5 +464,14 @@ class ValidateJobSpec extends SparkSpec {
     val otherSuite = NorthStar.suite.copy(name = "other",
       constraints = NorthStar.suite.constraints.take(2))
     assert(ValidateJob.completedDetail(ckpt, ValidateJob.suiteHash(otherSuite)).isEmpty)
+
+    // a one-pattern edit whose suite texts share a 32-bit String.hashCode
+    // ("^Aa" vs "^BB") is still a suite change
+    def withPattern(re: String) = NorthStar.suite.copy(constraints = NorthStar.suite.constraints :+
+      graft.suite.FieldConstraint("doc_id.pattern", "doc_id", graft.suite.Constraint.Pattern(re)))
+    val ckpt2 = tmp("c2b")
+    ValidateJob.run(spark, table, tmp("o3b"), ckpt2, suite = withPattern("^Aa"))
+    assert(ValidateJob.completedDetail(ckpt2, ValidateJob.suiteHash(withPattern("^Aa"))).nonEmpty)
+    assert(ValidateJob.completedDetail(ckpt2, ValidateJob.suiteHash(withPattern("^BB"))).isEmpty)
   }
 }

@@ -1202,7 +1202,7 @@ print(f"wrote {len(dbl_groups)} double groups / {dbtotal} cases "
 # pattern/enum/const + the exact-semantics formats uuid/ipv4) inside
 # items / prefixItems / contains over array<string> and array<string?>
 # columns, plus the array-level keywords and unevaluatedItems — the
-# elementPred string path with in-array null gating. Own RNG stream.
+# element-level string path with in-array null gating. Own RNG stream.
 # ---------------------------------------------------------------------------
 
 arng = random.Random(SEED + 111)

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Compare two PlanDump directories after masking what differs run to run:
-expression ids, plan ids, RDD ids and call sites, temp paths and the
-graft barrier's metric names. Prints each file whose masked plan differs
-and exits 1 if any does.
+expression ids, plan ids, RDD ids and call sites, temp paths, the graft
+barrier's metric names and lambda-variable counters. Prints each file
+whose masked plan differs and exits 1 if any does.
 Usage: plan_parity.py <dirA> <dirB>
 """
 import os, re, sys, difflib
@@ -15,6 +15,9 @@ MASKS = [
     (re.compile(r"/tmp/\S+?(?=[\s\]/])"), "/tmp/T"),
     # barrier metric names: graft_barrier_<k> now, fixed *_base names before
     (re.compile(r"\bgraft_barrier_\d+\b|\b\w+_base\b(?=,)"), "BARRIER"),
+    # lambda variables draw names from a process-wide counter, so building
+    # lambdas in another order renames every later one (x_75 -> x_80)
+    (re.compile(r"\b[xy]_\d+\b"), "x_N"),
 ]
 
 
