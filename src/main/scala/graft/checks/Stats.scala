@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Column profiler — per-column min/max/null-rate, approx-distinct
-  * (HLL++), token-length quantiles (QuantileSummaries sketch via
-  * percentile_approx), per BASELINE.json north_star. These are the
-  * reference's per-row keywords (minimum/maximum/required,
-  * PJS:_keywords.py:149-164,304-309) lifted to table-scale aggregates.
+  * (HLL sketch, [[Uniqueness.approxDistinct]]), token-length quantiles
+  * (QuantileSummaries sketch via percentile_approx), per BASELINE.json
+  * north_star. These are the reference's per-row keywords
+  * (minimum/maximum/required, PJS:_keywords.py:149-164,304-309) lifted
+  * to table-scale aggregates.
   *
   * Scale design: everything here is ONE partial+final hash aggregation —
   * sketches (HLL, quantile summaries) merge associatively on executors,
@@ -67,15 +68,15 @@ object Stats {
       array_join(array_sort(collect_set(col("source"))), ",").as("srcs"),
       sum(coalesce(col("source").contains(",").cast("long"), lit(0L))).as("srccomma"))
 
-  /** Sketch stats (approx, mergeable): HLL++ distinct + quantiles.
+  /** Sketch stats (approx, mergeable): HLL distinct + quantiles.
     * Not DuckDB-comparable bit-for-bit — checked by property bounds in
     * tests instead of the SQL oracle.
     */
   def sketchProfile(df: DataFrame): DataFrame = {
     import graft.functions.QuantileSketches._
     df.agg(
-      approx_count_distinct(col("doc_id"), 0.01).as("doc_id_approx_distinct"),
-      approx_count_distinct(col("source"), 0.01).as("source_approx_distinct"),
+      Uniqueness.approxDistinct(col("doc_id"), 0.01).as("doc_id_approx_distinct"),
+      Uniqueness.approxDistinct(col("source"), 0.01).as("source_approx_distinct"),
       percentile_approx(col("n_tok"), array(lit(0.5), lit(0.9), lit(0.99)), lit(10000))
         .as("n_tok_p50_p90_p99"),
       // the north star names t-digest for token-length histograms: the
@@ -97,7 +98,7 @@ object Stats {
 
   /** Approximate token vocabulary size: distinct token ids across all
     * rows. explode would shuffle 10^14 tokens; instead HLL-sketch each
-    * row's array elementwise... Spark's approx_count_distinct needs
+    * row's array elementwise... the HLL sketch aggregate needs
     * scalar input, so we explode AFTER per-partition projection but rely
     * on partial aggregation: the HLL update happens map-side, so nothing
     * but sketches cross the wire. (Generator is codegen'd; no shuffle of
@@ -105,6 +106,6 @@ object Stats {
     */
   def tokenVocabApprox(df: DataFrame, rsd: Double = 0.02): DataFrame = {
     df.select(explode(col("tokens")).as("t"))
-      .agg(approx_count_distinct(col("t"), rsd).as("vocab_approx"))
+      .agg(Uniqueness.approxDistinct(col("t"), rsd).as("vocab_approx"))
   }
 }

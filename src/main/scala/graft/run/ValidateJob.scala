@@ -30,7 +30,16 @@ import graft.gen.TokenData
   *    carries an `observe()` that collects (rows, violating rows) as the
   *    rows stream past (was: one agg scan + one violations-write scan);
   *  - the fused TokenStats path (`Set("tokens")`) is on, so the token
-  *    array is profiled once per row across all constraints.
+  *    array is profiled once per row across all constraints;
+  *  - the partition scans and the three whole-table checks (HLL
+  *    pre-filter, exact `doc_id` uniqueness, referential integrity) are
+  *    independent Spark jobs, submitted concurrently from a per-run
+  *    pool of `min(#tasks, defaultParallelism)` threads, so Spark's FIFO
+  *    scheduler fills the cores that one job's small stages leave idle;
+  *  - a partition slice is read with the table's schema (no
+  *    footer-reading inference job per partition), the HLL pre-filter
+  *    is a DataSketches sketch (no fixed per-query cost), and the
+  *    summary's global counts are observed on the writes (no read-back).
   *
   * Args: --table <path> --out <dir> [--checkpoint <dir>] [--salt N]
   *       [--partition-col source] [--suite <doc.json>]
@@ -246,9 +255,11 @@ object ValidateJob {
       Option(m("viol")).map(_.asInstanceOf[Long]).getOrElse(0L))
   }
 
-  /** Full run: per-partition loop with checkpoint skip + final verdict
-    * table + global (cross-partition) checks: doc_id uniqueness and
-    * referential integrity, which cannot be computed per-partition.
+  /** Full run: per-partition validation with checkpoint skip + global
+    * (cross-partition) checks: doc_id uniqueness and referential
+    * integrity, which cannot be computed per-partition. Both kinds run
+    * concurrently; the verdict table is written once all are done. The
+    * first failure is rethrown after every task has finished.
     */
   def run(spark: SparkSession, tablePath: String, outDir: String, checkpointDir: String,
           suite: Suite = NorthStar.suite, partitionCol: String = "source", salt: Int = 64): Unit = {
@@ -310,17 +321,24 @@ object ValidateJob {
     println(s"[validate] partitions=${parts.length} skip=$nSkip incremental=$nInc " +
       s"full=${parts.length - nSkip - nInc}")
 
-    for ((p, Some(Work(files, prior)), nowFiles) <- planned) {
+    // One task per partition to validate: intent marker -> one-scan
+    // validate -> manifest line -> marker deleted. A task that throws
+    // leaves its marker, so the next run revalidates that partition in
+    // full.
+    val manifestLock = new Object
+    def validateOne(p: String, w: Work, nowFiles: Seq[String]): Unit = {
       val t0 = System.currentTimeMillis()
       // Scan EXACTLY the fingerprinted files, not table's file-index
       // snapshot from run() start: a file landing in between would be
       // recorded as validated lineage without ever being scanned — and
-      // then skipped forever (round-4 review). Non-partitioned layouts
-      // (no per-partition listing) keep the filter path.
+      // then skipped forever (round-4 review). The table's schema is
+      // passed so no footer-reading inference job runs per partition
+      // and the partition column keeps the table's type. Non-partitioned
+      // layouts (no per-partition listing) keep the filter path.
       val slice =
-        if (files.nonEmpty)
-          spark.read.option("basePath", tablePath) // re-derives partitionCol
-            .parquet(files.map(f =>
+        if (w.files.nonEmpty)
+          spark.read.schema(table.schema).option("basePath", tablePath)
+            .parquet(w.files.map(f =>
               s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}"): _*)
         else table.filter(partitionFilter(partitionCol, p))
       // intent marker bracketing the write: present on the next startup
@@ -328,22 +346,15 @@ object ValidateJob {
       // Overwrite it is harmless: a leftover marker forces the same)
       val intent = intentFile(checkpointDir, p)
       Files.createDirectories(intent.getParent)
-      Files.write(intent, files.mkString("\n").getBytes("UTF-8"))
+      Files.write(intent, w.files.mkString("\n").getBytes("UTF-8"))
       val (rows, viol) = validatePartition(slice, suite, outDir, p, fused,
-        mode = if (prior.isDefined) SaveMode.Append else SaveMode.Overwrite)
-      appendManifest(checkpointDir, ManifestEntry(p, hash,
-        prior.fold(0L)(_.rows) + rows, prior.fold(0L)(_.violations) + viol,
-        System.currentTimeMillis() - t0, System.currentTimeMillis(),
-        files = nowFiles))
+        mode = if (w.prior.isDefined) SaveMode.Append else SaveMode.Overwrite)
+      val entry = ManifestEntry(p, hash,
+        w.prior.fold(0L)(_.rows) + rows, w.prior.fold(0L)(_.violations) + viol,
+        System.currentTimeMillis() - t0, System.currentTimeMillis(), files = nowFiles)
+      manifestLock.synchronized(appendManifest(checkpointDir, entry))
       Files.deleteIfExists(intent)
     }
-
-    // verdict table from the manifest (cheap, driver-side truth)
-    import spark.implicits._
-    val verdictRows = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
-      .map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
-    verdictRows.toDF("partition", "rows", "violations", "pass")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/verdicts")
 
     // global checks (cross-partition by nature). The HLL sketch is a
     // fast-FAIL signal only (estimate far below rows => dups certain,
@@ -351,23 +362,70 @@ object ValidateJob {
     // estimate has ~1% noise, so up to ~1% duplicates could hide inside
     // it (round-1 ADVICE, high). The exact salted pass ALWAYS runs and
     // is the only certification; the sketch verdict is recorded next to
-    // it so operators see both.
-    val pre = Uniqueness.hllPrefilter(table, "doc_id")
-    Seq((pre.rows, pre.approxDistinct, pre.mayHaveDups))
-      .toDF("rows", "approx_distinct", "sketch_suspects_dups")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/uniqueness_prefilter")
-    Uniqueness.duplicateKeys(table, "doc_id", salt)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dup_doc_ids")
-    Referential.violations(table, TokenData.allowedSources(spark))
-      .groupBy(col(partitionCol)).agg(count(lit(1)).as("bad_rows"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/referential_violations")
+    // it so operators see both. The summary's two numbers are observed
+    // on the writes, so nothing is read back.
+    import spark.implicits._
+    val dupObs = Observation(s"dup-doc-ids-${System.nanoTime()}")
+    val refObs = Observation(s"referential-${System.nanoTime()}")
+    val globalTasks: Seq[() => Unit] = Seq(
+      () => {
+        val pre = Uniqueness.hllPrefilter(table, "doc_id")
+        Seq((pre.rows, pre.approxDistinct, pre.mayHaveDups))
+          .toDF("rows", "approx_distinct", "sketch_suspects_dups")
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/uniqueness_prefilter")
+      },
+      () => Uniqueness.duplicateKeys(table, "doc_id", salt)
+        .observe(dupObs, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dup_doc_ids"),
+      () => Referential.violations(table, TokenData.allowedSources(spark))
+        .groupBy(col(partitionCol)).agg(count(lit(1)).as("bad_rows"))
+        .observe(refObs, coalesce(sum(col("bad_rows")), lit(0L)).as("n"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/referential_violations"))
+    runAll((globalTasks ++ planned.collect { case (p, Some(w), nowFiles) =>
+      () => validateOne(p, w, nowFiles) }).toIndexedSeq, spark.sparkContext.defaultParallelism)
 
-    // pretty console sink (≙ PJS:cli.py:76-118): formats the k-row
-    // outputs just written — no table re-scan
-    val dup = spark.read.parquet(s"$outDir/dup_doc_ids").count()
-    val refRow = spark.read.parquet(s"$outDir/referential_violations")
-      .agg(coalesce(sum(col("bad_rows")), lit(0L))).head()
-    println(formatSummary(verdictRows, dup, refRow.getLong(0)))
+    // verdict table from the manifest (cheap, driver-side truth), read
+    // once every partition task is done
+    val verdictRows = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
+      .map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
+    verdictRows.toDF("partition", "rows", "violations", "pass")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/verdicts")
+
+    // pretty console sink (≙ PJS:cli.py:76-118): formats the observed
+    // counts of the outputs just written — no table re-scan, no read-back
+    println(formatSummary(verdictRows, dupObs.get("n").asInstanceOf[Long],
+      refObs.get("n").asInstanceOf[Long]))
+  }
+
+  /** Runs independent tasks, each submitting its own Spark jobs, on
+    * `min(#tasks, parallelism)` daemon threads that take the tasks in
+    * order; Spark's FIFO scheduler hands idle cores to whichever job is
+    * next, so the whole-table checks and the partition scans overlap
+    * instead of each leaving cores idle in its small final stages.
+    * Waits for every task, so no thread outlives the call, then
+    * rethrows the first failure in task order. Tasks must not print: a
+    * caller capturing `Console` sees only its own thread.
+    */
+  private def runAll(tasks: IndexedSeq[() => Unit], parallelism: Int): Unit = {
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    val failures = new Array[Throwable](tasks.size)
+    val threads = (1 to math.min(tasks.size, parallelism)).map { i =>
+      val t = new Thread(() => {
+        var k = next.getAndIncrement()
+        while (k < tasks.size) {
+          try tasks(k)() catch { case e: Throwable => failures(k) = e }
+          k = next.getAndIncrement()
+        }
+      }, s"graft-validate-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    // an interrupted wait interrupts the workers rather than leaving
+    // their jobs running behind the caller's back
+    try threads.foreach(_.join())
+    finally threads.foreach(_.interrupt())
+    failures.find(_ != null).foreach(e => throw e)
   }
 
   /** Human-readable run summary — the engine's pretty console sink

@@ -33,6 +33,24 @@ class ChecksSpec extends SparkSpec {
     assert(!v.mayHaveDups || v.approxDistinct >= 9800) // no false certainty
   }
 
+  test("HLL prefilter: 200k distinct keys within 3·rsd; 5% injected duplicates set mayHaveDups") {
+    val rsd = 0.01
+    val keys = spark.range(200000).selectExpr("concat('doc-', cast(id as string)) as doc_id")
+    val clean = Uniqueness.hllPrefilter(keys, "doc_id", rsd)
+    assert(clean.rows == 200000)
+    assert(math.abs(clean.approxDistinct - 200000).toDouble / 200000 <= 3 * rsd,
+      s"estimate ${clean.approxDistinct} vs 200000")
+    assert(!clean.mayHaveDups, s"clean keys flagged: $clean")
+    // 5% of the rows repeat an existing key: 200k rows, 190k distinct
+    val dupd = keys.filter("cast(substr(doc_id, 5) as long) < 190000")
+      .union(spark.range(10000).selectExpr("concat('doc-', cast(id as string)) as doc_id"))
+    val v = Uniqueness.hllPrefilter(dupd, "doc_id", rsd)
+    assert(v.rows == 200000)
+    assert(math.abs(v.approxDistinct - 190000).toDouble / 190000 <= 3 * rsd,
+      s"estimate ${v.approxDistinct} vs 190000")
+    assert(v.mayHaveDups, s"5% duplicates not flagged: $v")
+  }
+
   test("referential broadcast anti-join finds exactly the bad sources") {
     val dim = TokenData.allowedSources(spark)
     val bad = Referential.violations(toks, dim)
@@ -88,7 +106,7 @@ class ChecksSpec extends SparkSpec {
 
   test("sketch profile: HLL distincts within 3 rsd, quantiles within the sketches' rank error") {
     val r = Stats.sketchProfile(toks).head()
-    // approx_count_distinct at rsd 0.01: within 3·rsd of the exact count
+    // the HLL sketch at rsd 0.01: within 3·rsd of the exact count
     for (c <- Seq("doc_id", "source")) {
       val exact = toks.select(countDistinct(c)).head().getLong(0)
       val approx = r.getAs[Long](s"${c}_approx_distinct")

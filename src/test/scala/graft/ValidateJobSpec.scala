@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.run.ValidateJob
+import graft.compilex.ConstraintCompiler
 import graft.io.PartitionedParquetIO
 import graft.gen.TokenData
 import graft.suite.NorthStar
@@ -443,6 +444,118 @@ class ValidateJobSpec extends SparkSpec {
     val expected = spark.read.parquet(table).where("doc_id IS NOT NULL").count()
     assert(violations === expected,
       s"every present non-uuid doc_id must fail format: got $violations, expected $expected")
+  }
+
+  /** The north-star suite without its `source` constraints, over a
+    * token table re-keyed into `n` partitions `p0..p<n-1>`.
+    */
+  private val noSourceSuite = NorthStar.suite.copy(
+    constraints = NorthStar.suite.constraints.filterNot(_.field == "source"))
+  private def writeSpread(table: String, rows: Long, n: Int): Set[String] = {
+    new PartitionedParquetIO("source").write(TokenData.tokenTable(spark, rows, 4)
+      .withColumn("source", concat(lit("p"), pmod(xxhash64(col("doc_id")), lit(n.toLong)).cast("string"))),
+      table)
+    (0 until n).map(i => s"p$i").toSet
+  }
+
+  test("partition jobs run concurrently; one parseable manifest line per partition; verdicts == groupBy truth") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val table = tmp("conc"); val out = tmp("concout"); val ckpt = tmp("concckpt")
+    val parts = writeSpread(table, 6000, 10)
+    // partition jobs, told apart by call site; the listener bus delivers
+    // job starts and ends in order, so `active` is the live count
+    val partJobs = scala.collection.mutable.Set.empty[Int]
+    var active = 0; var maxActive = 0; var ended = 0
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+        if (j.stageInfos.exists(_.details.contains("validatePartition"))) {
+          partJobs += j.jobId; active += 1; maxActive = math.max(maxActive, active)
+        }
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+        if (partJobs.contains(j.jobId)) { active -= 1; ended += 1 }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ValidateJob.run(spark, table, out, ckpt, suite = noSourceSuite)
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 30000
+      while (listener.synchronized(ended) < parts.size && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    listener.synchronized {
+      assert(ended == parts.size, s"expected one job per partition, saw $ended")
+      assert(maxActive >= 2, s"partition jobs never overlapped (max active $maxActive)")
+    }
+
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val records = manifestRecords(ckpt).map(mapper.readTree)
+    assert(records.size == parts.size)
+    assert(records.forall(r => Seq("partition", "suiteHash", "rows", "violations", "wallMs", "ts", "files")
+      .forall(r.has)), s"incomplete manifest records: $records")
+    assert(records.map(_.get("partition").asText).toSet == parts)
+
+    val truth = ConstraintCompiler.withVerdicts(spark.read.parquet(table), noSourceSuite)
+      .groupBy("source")
+      .agg(count(lit(1)), sum(when(col("row_valid") === false, 1L).otherwise(0L)))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val got = spark.read.parquet(s"$out/verdicts").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == truth)
+    assert(truth.exists(_._3 > 0), "the generator injects violations")
+  }
+
+  test("a failing partition keeps its intent marker while the others land; the next run revalidates it alone") {
+    import scala.jdk.CollectionConverters._
+    val table = tmp("corrupt"); val out = tmp("corruptout"); val ckpt = tmp("corruptckpt")
+    val parts = writeSpread(table, 4000, 8)
+    val bad = "p5"
+    val corrupt = Paths.get(table, s"source=$bad", "part-corrupt.parquet")
+    Files.write(corrupt, "this is not a parquet file".getBytes("UTF-8"))
+
+    intercept[Exception](ValidateJob.run(spark, table, out, ckpt, suite = noSourceSuite))
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName.startsWith("graft-validate") && t.isAlive), "a validate thread outlived run")
+    val hash = ValidateJob.suiteHash(noSourceSuite)
+    assert(ValidateJob.completedDetail(ckpt, hash).keySet == parts - bad)
+    assert(Files.exists(ValidateJob.intentFile(ckpt, bad)), "the failed partition must keep its marker")
+
+    Files.delete(corrupt)
+    val before = manifestRecords(ckpt).size
+    ValidateJob.run(spark, table, out, ckpt, suite = noSourceSuite)
+    val lines = manifestRecords(ckpt)
+    assert(lines.size == before + 1, "only the failed partition revalidates")
+    assert(lines.last.contains(s"\"partition\":\"$bad\""))
+    assert(!Files.exists(ValidateJob.intentFile(ckpt, bad)))
+    val st = ValidateJob.completedDetail(ckpt, hash)
+    assert(st.keySet == parts)
+    assert(st(bad).rows == spark.read.parquet(table).filter(col("source") === bad).count())
+  }
+
+  test("summary's global counts equal the written outputs (observed, not read back)") {
+    def summaryCounts(table: String): ((Long, Long), (Long, Long)) = {
+      val out = tmp("sumout"); val ckpt = tmp("sumckpt")
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(
+        ValidateJob.run(spark, table, out, ckpt))
+      val m = """duplicate doc_ids=(\d+)  referential violations=(\d+)""".r
+        .findFirstMatchIn(buf.toString("UTF-8")).getOrElse(fail(s"no summary in:\n$buf"))
+      val dup = spark.read.parquet(s"$out/dup_doc_ids").count()
+      val ref = spark.read.parquet(s"$out/referential_violations")
+        .agg(coalesce(sum(col("bad_rows")), lit(0L))).head().getLong(0)
+      ((m.group(1).toLong, m.group(2).toLong), (dup, ref))
+    }
+    val dirty = tmp("sumdirty")
+    new PartitionedParquetIO("source").write(TokenData.tokenTable(spark, 3000, 4), dirty)
+    val (printed, written) = summaryCounts(dirty)
+    assert(written._1 > 0 && written._2 > 0, "the generator injects duplicates and spam rows")
+    assert(printed == written)
+    // below row 1000 no duplicate is injected; without spam nothing is unreferenced
+    val clean = tmp("sumclean")
+    new PartitionedParquetIO("source").write(
+      TokenData.tokenTable(spark, 999, 4).filter(col("source") =!= "spam"), clean)
+    assert(summaryCounts(clean) == ((0L, 0L), (0L, 0L)))
   }
 
   test("formatSummary renders the pretty console sink (PJS:cli.py:76-118 analogue)") {
