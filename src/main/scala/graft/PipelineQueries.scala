@@ -13,7 +13,11 @@ import graft.pipeline.TextOps._
   * AnnQueries).
   *
   * Scale design notes:
-  *  - every per-doc signal is a codegen'd projection (no UDF, no shuffle)
+  *  - every per-doc signal is a projection (no UDF, no shuffle); the
+  *    array lambdas in it (transform/filter/aggregate) are
+  *    `CodegenFallback` in Spark 4.1, so a row-level value they read is
+  *    bound once per row, never recomputed inside the lambda
+  *    (TextOps.withWords)
   *  - dedup candidate generation is LSH band-bucketing: shuffle keys are
   *    (band, signature) — fine-grained, skew-free; verification joins
   *    only touch bucket collisions, never all pairs
@@ -183,9 +187,11 @@ object PipelineQueries {
     * queries: one shingle projection, 4 band signatures, exploded.
     */
   private[graft] def lshLongFrom(d0: DataFrame): DataFrame =
+    // one shingling per doc: the minhash reads the distinct set (a min
+    // over a set equals the min over its multiset; empty gives P)
     Barrier(d0
-      .withColumn("_sh", shingleHashes(col("text")))
       .withColumn("sh", array_distinct(shingles3(col("text"))))
+      .withColumn("_sh", transform(col("sh"), h32(_)))
       .select(col("doc_id"), col("sh"),
         array((0 until 4).map(b => struct(lit(b).as("band"),
           concat_ws("_", minhash(col("_sh"), 2 * b), minhash(col("_sh"), 2 * b + 1)).as("sig"))): _*).as("bands")))
@@ -354,18 +360,20 @@ object PipelineQueries {
   private[graft] def isBenchCol: Column =
     substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
 
-  /** The (doc_id, source, is_bench, ng) frame every decontamination
-    * view derives from — ONE definition of the bench split + the
-    * 8-gram shingling (d_decontam, contamDocIds, CurateJob all hang
-    * off it; unused columns are pruned by Catalyst per consumer).
+  /** The (doc_id, source, ng) frame of one side of the bench split
+    * (`bench` = the benchmark slice, else the train side) that every
+    * decontamination view derives from — ONE definition of the split +
+    * the 8-gram shingling (d_decontam, contamDocIds, CurateJob all hang
+    * off it). The side filter sits below the fence, which blocks filter
+    * pushdown, so each document's n-grams are built on its side only.
     */
-  private[graft] def ngBase(s: SparkSession, dir: String): DataFrame =
-    Barrier(docs(s, dir).select(col("doc_id"), col("source"),
-      isBenchCol.as("is_bench"), wordNgramHashes(col("text"), 8).as("ng")))
+  private[graft] def ngBase(s: SparkSession, dir: String, bench: Boolean): DataFrame =
+    Barrier(docs(s, dir).filter(if (bench) isBenchCol else !isBenchCol)
+      .select(col("doc_id"), col("source"), wordNgramHashes(col("text"), 8).as("ng")))
 
   /** The benchmark slice's distinct n-gram set (the broadcast side). */
-  private[graft] def benchNgrams(base: DataFrame): DataFrame =
-    base.filter(col("is_bench")).select(explode(col("ng")).as("ng")).distinct()
+  private[graft] def benchNgrams(s: SparkSession, dir: String): DataFrame =
+    ngBase(s, dir, bench = true).select(explode(col("ng")).as("ng")).distinct()
 
   /** Row-count ceiling for BROADCASTING the benchmark n-gram set. In
     * production the benchmark side is a bounded eval-suite dim table and
@@ -396,13 +404,11 @@ object PipelineQueries {
   }
 
   /** Train doc_ids sharing any word-8-gram with the benchmark slice. */
-  private[graft] def contamDocIds(s: SparkSession, dir: String): DataFrame = {
-    val base = ngBase(s, dir)
+  private[graft] def contamDocIds(s: SparkSession, dir: String): DataFrame =
     joinBenchNgrams(
-        base.filter(!col("is_bench")).select(col("doc_id"), explode(col("ng")).as("ng")),
-        benchNgrams(base))
+        ngBase(s, dir, bench = false).select(col("doc_id"), explode(col("ng")).as("ng")),
+        benchNgrams(s, dir))
       .select(col("doc_id")).distinct()
-  }
 
   /** doc_ids dropped by canonical dedup (cluster node ≠ min-id). */
   private[graft] def droppedDocIds(s: SparkSession, dir: String): DataFrame =
@@ -641,7 +647,7 @@ object PipelineQueries {
     * lexer projects each document to array<int> token ids, id =
     * md5(token-string) first-8-hex mod 2^18 — the deterministic
     * vocabulary hash both engines recompute exactly. Map-only: zero
-    * shuffle, whole-stage codegen'd, embarrassingly parallel at any
+    * shuffle, one projection, embarrassingly parallel at any
     * corpus size — this is the ingest step that feeds the validation
     * engine's (doc_id, tokens, n_tok, source) input. The driver-gate
     * output is the per-doc ledger (n_tok, ORDER-SENSITIVE positional
@@ -675,14 +681,13 @@ object PipelineQueries {
     * training.
     */
   def decontam(s: SparkSession, dir: String): DataFrame = {
-    val base = ngBase(s, dir)
-    val benchNg = benchNgrams(base)
-    val trainNg = base.filter(!col("is_bench"))
+    val trainNg = ngBase(s, dir, bench = false)
       .select(col("doc_id"), col("source"), explode(col("ng")).as("ng"))
     // size-thresholded broadcast-vs-shuffle_hash strategy (joinBenchNgrams)
-    val perDocHits = joinBenchNgrams(trainNg, benchNg)
+    val perDocHits = joinBenchNgrams(trainNg, benchNgrams(s, dir))
       .groupBy(col("doc_id"), col("source")).agg(count(lit(1)).as("hits"))
-    val checked = base.filter(!col("is_bench"))
+    // needs no n-grams: counted from the docs, with no fence
+    val checked = docs(s, dir).filter(!isBenchCol)
       .groupBy(col("source")).agg(count(lit(1)).as("docs_checked"))
     checked.join(
         perDocHits.groupBy(col("source"))
@@ -693,12 +698,14 @@ object PipelineQueries {
 
   /** Intra-document REPETITION metrics (the Gopher quality-filter
     * family): duplicate-word fraction, duplicate-bigram fraction, and
-    * the top-bigram share per document. The fractions are single-pass
-    * codegen'd array expressions; the top-bigram mode is the one signal
-    * that genuinely needs an aggregation — explode + two keyed aggs
-    * ((doc_id, bigram) then doc_id), both on well-spread keys, so a
-    * 100k-word document never materializes an O(len²) per-row loop the
-    * way a filter-count-per-distinct-element projection would.
+    * the top-bigram share per document. The fractions are array
+    * expressions over the words and bigrams, built once per row
+    * (interpreted: the bigram lambda is `CodegenFallback`); the
+    * top-bigram mode is the one signal that genuinely needs an
+    * aggregation — explode + two keyed aggs ((doc_id, bigram) then
+    * doc_id), both on well-spread keys, instead of a
+    * filter-count-per-distinct-element projection, which would loop
+    * O(len²) per row.
     */
   def repetition(s: SparkSession, dir: String): DataFrame = {
     val w = words(col("text"))
@@ -722,7 +729,7 @@ object PipelineQueries {
     * ledger): cumulative per-stage survival counts per source — length
     * floor → stopword-ratio floor → duplicate-word ceiling →
     * duplicate-bigram ceiling. All four signals come out of ONE
-    * codegen'd projection over the same scan (thresholds compare the
+    * projection over the same scan (thresholds compare the
     * round-6 signals, so both engines compare identical doubles); the
     * only shuffle is the per-source rollup of five conditional sums —
     * the report a pipeline prints before committing a filter config.

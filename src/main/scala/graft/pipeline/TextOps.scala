@@ -27,13 +27,25 @@ object TextOps {
   val bpeishPattern = "[a-z]+|[A-Z][a-z]*|[0-9]+|[^a-zA-Z0-9 ]"
   def bpeishCount(text: Column): Column = size(regexp_extract_all(text, lit(bpeishPattern), lit(0)))
 
+  /** Binds `words(text)` once per row for a word-window builder. In
+    * Spark 4.1 `ArrayTransform`, `ArrayFilter` and `ArrayAggregate` are
+    * `CodegenFallback`, and a lambda body re-evaluates every
+    * sub-expression that reads no lambda variable once per element: a
+    * `split(text)` inside a window lambda re-splits the document once
+    * per window, O(words²) per row. A one-element outer lambda holds
+    * the split in its variable, so the split runs once and the window
+    * lambda reads the bound array (the same trick as `aggregate()`'s
+    * seed in ConstraintCompiler's unevaluatedItems).
+    */
+  private def withWords(text: Column)(f: Column => Column): Column =
+    transform(array(words(text)), f).getItem(0)
+
   /** md5 hashes of the word n-grams of `text` (all positions, the
     * decontamination unit — GPT-3's 13-gram rule shape); empty for
-    * texts shorter than n words. Codegen'd; DuckDB recomputes it as
+    * texts shorter than n words. DuckDB recomputes it as
     * md5(array_to_string(ws[i:i+n-1], ' ')).
     */
-  def wordNgramHashes(text: Column, n: Int): Column = {
-    val w = words(text)
+  def wordNgramHashes(text: Column, n: Int): Column = withWords(text) { w =>
     when(size(w) >= n,
       transform(sequence(lit(1), size(w) - (n - 1)),
         i => md5(concat_ws(" ", slice(w, i, lit(n))))))
@@ -44,8 +56,7 @@ object TextOps {
     * DuckDB mirror: list_transform(range(1, greatest(len(ws),1)),
     * i -> ws[i] || ' ' || ws[i+1]).
     */
-  def wordBigrams(text: Column): Column = {
-    val w = words(text)
+  def wordBigrams(text: Column): Column = withWords(text) { w =>
     when(size(w) >= 2,
       transform(sequence(lit(1), size(w) - 1), i => concat_ws(" ", slice(w, i, lit(2)))))
       .otherwise(array().cast("array<string>"))
@@ -54,8 +65,7 @@ object TextOps {
   /** Word 3-gram shingles: "w1 w2 w3" strings (n-2 of them; empty for
     * <3 words — guard needed because sequence(1,0) would be DESCENDING).
     */
-  def shingles3(text: Column): Column = {
-    val w = words(text)
+  def shingles3(text: Column): Column = withWords(text) { w =>
     when(size(w) >= 3,
       transform(sequence(lit(1), size(w) - 2),
         i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
@@ -105,7 +115,7 @@ object TextOps {
     aggregate(transform(filter(words(text), w => w =!= lit("")), h32(_)), lit(0L),
       (acc, h) => pmod(acc * 31 + h, lit(FpP)))
 
-  // ---- quality signals (cheap, codegen'd, per-document) ----
+  // ---- quality signals (cheap, per-document) ----
   val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 
   def nWords(text: Column): Column = size(words(text))
@@ -124,7 +134,7 @@ object TextOps {
 
   /** Language-ID heuristic: per-language stopword hit counts; the argmax
     * is the prediction. Tiny fixed lexicons — the n-gram-free variant of
-    * fastText-style ID that suits a codegen'd column expression.
+    * fastText-style ID that suits a plain column expression.
     */
   val LangLexicon: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "is"),

@@ -1,6 +1,7 @@
 package graft.run
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** spark-submit main for the END-TO-END curation pipeline: documents →
   * benchmark-slice exclusion → quality funnel → decontamination →
@@ -32,9 +33,12 @@ object CurateJob {
     val (contam, dropped) = graft.PipelineQueries.curationIdFrames(spark, sfDir)
     graft.PipelineQueries.curateLedgerWith(spark, sfDir, contam, dropped)
       .coalesce(1).write.mode("overwrite").json(s"$outDir/ledger")
+    // the printed count is observed on the write
+    val curated = Observation()
     graft.PipelineQueries.curatedTokensWith(spark, sfDir, contam, dropped)
+      .observe(curated, count(lit(1)).as("n"))
       .write.mode("overwrite").partitionBy("source").parquet(s"$outDir/curated")
-    val kept = spark.read.parquet(s"$outDir/curated").count()
+    val kept = curated.get("n").asInstanceOf[Long]
     println(s"[curate] $sfDir -> $outDir: $kept curated sequences")
   }
 }

@@ -439,7 +439,8 @@ class PipelineSpec extends SparkSpec {
 
   test("curate pipeline end-to-end: ledger stages are monotone and n_final matches the written corpus") {
     val out = java.nio.file.Files.createTempDirectory("graft_curate").toString
-    graft.run.CurateJob.run(spark, dir, out)
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(graft.run.CurateJob.run(spark, dir, out))
     val ledger = spark.read.json(s"$out/ledger").collect()
     assert(ledger.map(_.getAs[Long]("n_docs")).sum == docs.count())
     ledger.foreach { r =>
@@ -450,6 +451,10 @@ class PipelineSpec extends SparkSpec {
     val curated = spark.read.parquet(s"$out/curated")
     assert(curated.count() == ledger.map(_.getAs[Long]("n_final")).sum,
       "the written corpus must be exactly the ledger's n_final survivors")
+    // the printed count is observed on the write; it must equal what landed
+    val printed = """: (\d+) curated sequences""".r.findFirstMatchIn(buf.toString("UTF-8"))
+      .getOrElse(fail(s"no count in:\n$buf")).group(1).toLong
+    assert(printed == curated.count())
     assert(curated.columns.sorted.toSeq == Seq("doc_id", "n_tok", "source", "tokens"))
     // the curated output feeds the validation engine's shape directly
     val row = curated.head()
