@@ -17,7 +17,7 @@ import graft.pipeline.TextOps._
   *    array lambdas in it (transform/filter/aggregate) are
   *    `CodegenFallback` in Spark 4.1, so a row-level value they read is
   *    bound once per row, never recomputed inside the lambda
-  *    (TextOps.withWords)
+  *    (TextOps.bindOnce)
   *  - dedup candidate generation is LSH band-bucketing: shuffle keys are
   *    (band, signature) — fine-grained, skew-free; verification joins
   *    only touch bucket collisions, never all pairs

@@ -27,25 +27,29 @@ object TextOps {
   val bpeishPattern = "[a-z]+|[A-Z][a-z]*|[0-9]+|[^a-zA-Z0-9 ]"
   def bpeishCount(text: Column): Column = size(regexp_extract_all(text, lit(bpeishPattern), lit(0)))
 
-  /** Binds `words(text)` once per row for a word-window builder. In
-    * Spark 4.1 `ArrayTransform`, `ArrayFilter` and `ArrayAggregate` are
+  /** Binds a row-level value `v` (the split words, the word hashes)
+    * once per row for the array lambdas in `f`. In Spark 4.1
+    * `ArrayTransform`, `ArrayFilter` and `ArrayAggregate` are
     * `CodegenFallback`, and a lambda body re-evaluates every
     * sub-expression that reads no lambda variable once per element: a
     * `split(text)` inside a window lambda re-splits the document once
-    * per window, O(words²) per row. A one-element outer lambda holds
-    * the split in its variable, so the split runs once and the window
-    * lambda reads the bound array (the same trick as `aggregate()`'s
-    * seed in ConstraintCompiler's unevaluatedItems).
+    * per window, O(words²) per row; the arguments of `CodegenFallback`
+    * expressions also escape subexpression elimination, so sixteen
+    * `aggregate`s over one `transform(words(text), h32)` split and hash
+    * every word sixteen times. A one-element outer lambda holds `v` in
+    * its variable, so `v` is computed once and the inner lambdas read
+    * the bound value (the same trick as `aggregate()`'s seed in
+    * ConstraintCompiler's unevaluatedItems).
     */
-  private def withWords(text: Column)(f: Column => Column): Column =
-    transform(array(words(text)), f).getItem(0)
+  private def bindOnce(v: Column)(f: Column => Column): Column =
+    transform(array(v), f).getItem(0)
 
   /** md5 hashes of the word n-grams of `text` (all positions, the
     * decontamination unit — GPT-3's 13-gram rule shape); empty for
     * texts shorter than n words. DuckDB recomputes it as
     * md5(array_to_string(ws[i:i+n-1], ' ')).
     */
-  def wordNgramHashes(text: Column, n: Int): Column = withWords(text) { w =>
+  def wordNgramHashes(text: Column, n: Int): Column = bindOnce(words(text)) { w =>
     when(size(w) >= n,
       transform(sequence(lit(1), size(w) - (n - 1)),
         i => md5(concat_ws(" ", slice(w, i, lit(n))))))
@@ -56,7 +60,7 @@ object TextOps {
     * DuckDB mirror: list_transform(range(1, greatest(len(ws),1)),
     * i -> ws[i] || ' ' || ws[i+1]).
     */
-  def wordBigrams(text: Column): Column = withWords(text) { w =>
+  def wordBigrams(text: Column): Column = bindOnce(words(text)) { w =>
     when(size(w) >= 2,
       transform(sequence(lit(1), size(w) - 1), i => concat_ws(" ", slice(w, i, lit(2)))))
       .otherwise(array().cast("array<string>"))
@@ -65,7 +69,7 @@ object TextOps {
   /** Word 3-gram shingles: "w1 w2 w3" strings (n-2 of them; empty for
     * <3 words — guard needed because sequence(1,0) would be DESCENDING).
     */
-  def shingles3(text: Column): Column = withWords(text) { w =>
+  def shingles3(text: Column): Column = bindOnce(words(text)) { w =>
     when(size(w) >= 3,
       transform(sequence(lit(1), size(w) - 2),
         i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
@@ -91,8 +95,7 @@ object TextOps {
   /** 16-bit SimHash over word hashes: bit b is set iff
     * sum over words of (bit_b(h32(w)) ? +1 : -1) > 0.
     */
-  def simhash16(text: Column): Column = {
-    val hs = transform(words(text), h32(_))
+  def simhash16(text: Column): Column = bindOnce(transform(words(text), h32(_))) { hs =>
     (0 until 16).map { b =>
       val bitSum = aggregate(hs, lit(0L),
         (acc, h) => acc + (shiftright(h, b).bitwiseAND(lit(1L)) * 2 - 1))

@@ -8,29 +8,34 @@ import graft.suite.Constraint._
   *
   * The engine's analogue of the reference's schema compile
   * (PJS:validators.py:282-304): a schema is data (JSON), parsed once on
-  * the driver into the ADT, `$ref` resolved by compile-time inlining.
+  * the driver into the ADT, every reference resolved by compile-time
+  * inlining.
   *
-  * `$ref` resolution (round-2, VERDICT item 6): any intra-document
-  * fragment reference resolves — `#` (root), `#/arbitrary/json/pointer`
-  * (RFC 6901 walk with ~0/~1 unescaping and array indices, mirroring
-  * REF:_core.py:653-698's pointer lookup), and `#anchor` (`$anchor`
-  * lookup by subtree scan, mirroring the reference's BFS subschema
-  * cache, PJS:validators.py:1254-1262). Remote/absolute refs raise
-  * (zero-egress; suites must be self-contained, mirroring
-  * referencing.exceptions.Unresolvable). Circular refs raise at parse —
+  * References: `$ref` resolves intra-document fragments — `#` (root),
+  * `#/arbitrary/json/pointer` (RFC 6901 walk with ~0/~1 unescaping and
+  * array indices, mirroring REF:_core.py:653-698's pointer lookup) and
+  * `#anchor` (`$anchor` lookup by subtree scan, mirroring the
+  * reference's BFS subschema cache, PJS:validators.py:1254-1262) — and
+  * absolute refs against the caller-supplied resource registry (an
+  * unknown base URI raises like referencing.exceptions.Unresolvable:
+  * zero-egress). `$dynamicRef` and the 2019-09 `$recursiveRef` resolve
+  * with full re-binding: inlining makes the reference's dynamic scope
+  * static at every site. One resolver ([[withRef]]) follows all three
+  * for the document-level walker, the field-level walker and the
+  * unevaluatedItems evaluated-index walk. Circular refs raise at parse —
   * inlining cannot represent them.
   *
-  * Unknown keywords (round-2, VERDICT item 5): ANNOTATIONS (title,
-  * description, default, examples, …) are ignored like the reference
-  * ignores non-assertion keywords; unsupported APPLICATORS (the
-  * re-binding cases of $dynamicRef and of 2019-09 $recursiveRef,
-  * object keywords inside field subschemas, the data-dependent cases of
-  * unevaluated*) RAISE — a silently dropped applicator would silently
-  * weaken the suite. patternProperties / schema-form
-  * additionalProperties / propertyNames resolve against the declared
-  * column list (round 3), and unevaluatedItems/unevaluatedProperties
-  * are supported in their STATIC subset (unconditional evaluation
-  * only).
+  * Unknown keywords: ANNOTATIONS (title, description, default,
+  * examples, …) are ignored like the reference ignores non-assertion
+  * keywords; unsupported APPLICATORS (object keywords inside field
+  * subschemas, keywords outside the dialect's vocabulary, unknown
+  * keywords) RAISE — a silently dropped applicator would silently
+  * weaken the suite. patternProperties / additionalProperties /
+  * propertyNames resolve against the declared column list.
+  * unevaluatedItems and unevaluatedProperties are exact: unconditional
+  * evaluation is a compile-time constant, conditional evaluation
+  * (dependentSchemas triggers, anyOf/oneOf branches, if/then/else arms)
+  * becomes per-row gates.
   *
   * Boolean schemas: `true` → always-pass, `false` → always-fail
   * (PJS:validators.py:290-291,369-379).
@@ -39,9 +44,9 @@ object SuiteLoader {
   private val mapper = new ObjectMapper()
 
   /** Annotation keywords: legal to ignore (no assertion semantics).
-    * `definitions` is the pre-2019 reserved location — ignored as a
-    * keyword (spec-legal in every draft) but merged into the $defs
-    * scope so `#/definitions/...` refs resolve.
+    * `$defs` and its pre-2019 spelling `definitions` assert nothing
+    * themselves; `#/$defs/...` and `#/definitions/...` refs reach them by
+    * pointer walk like any other location.
     */
   private val Annotations = Set(
     "$id", "$schema", "$anchor", "$comment", "$vocabulary", "$defs",
@@ -125,18 +130,11 @@ object SuiteLoader {
     "dependentSchemas", "dependentRequired", "required",
     "minProperties", "maxProperties", "dependencies")
 
-  /** Per-document parse state for the decidable-subset `unevaluated*`
-    * support: which fields the name-driven applicators evaluated
-    * unconditionally, plus — r4 — which fields are evaluated only under
-    * a per-row GATE (dependentSchemas: trigger present; anyOf/oneOf:
-    * branch valid), mirroring
-    * find_evaluated_property_keys_by_schema (PJS:_utils.py:261-350)
-    * pointwise instead of raising. `not` branches contribute nothing
-    * (the tracker never recurses into `not`). Scoped to one
-    * parseSuiteDocument call.
-    */
   /** One `unevaluatedProperties` annotation SCOPE: the document root, or
-    * the target of a doc-level $ref/$recursiveRef/$dynamicRef. 2020-12
+    * a subschema parsed in its own frame ([[framed]]: a doc-level
+    * $ref/$recursiveRef/$dynamicRef target, an allOf branch, a
+    * dependentSchemas subschema, a combinator branch or a conditional
+    * arm). 2020-12
     * annotation flow is UPWARD only (the referrer's unevaluated* sees
     * the target's annotations, never vice versa —
     * find_evaluated_property_keys_by_schema recurses INTO $ref), so a
@@ -155,6 +153,16 @@ object SuiteLoader {
     var up: Option[JsonNode] = None
   }
 
+  /** Per-document parse state for the decidable-subset `unevaluated*`
+    * support: which fields the name-driven applicators evaluated
+    * unconditionally, plus — r4 — which fields are evaluated only under
+    * a per-row GATE (dependentSchemas: trigger present; anyOf/oneOf:
+    * branch valid), mirroring
+    * find_evaluated_property_keys_by_schema (PJS:_utils.py:261-350)
+    * pointwise instead of raising. `not` branches contribute nothing
+    * (the tracker never recurses into `not`). Scoped to one
+    * parseSuiteDocument call.
+    */
   private final class DocParseState {
     val rootFrame = new UpFrame(0)
     // open annotation scopes, innermost first (head = current)
@@ -171,7 +179,7 @@ object SuiteLoader {
     // INSIDE the branch) must still receive marks directly, or their
     // own unevaluatedProperties would resolve against an empty
     // evaluated set (round-4 review, repro-pinned).
-    var markSink: Option[(scala.collection.mutable.ArrayBuffer[(String, List[Constraint])], Int)] = None
+    var markSink: Option[(Marks, Int)] = None
     def markEvaluated(field: String): Unit = commitMark(field, gateStack)
     private def commitTo(frs: List[UpFrame], field: String, gates: List[Constraint]): Unit =
       frs.foreach { fr =>
@@ -198,6 +206,11 @@ object SuiteLoader {
     }
   }
   private val docStateVar = new scala.util.DynamicVariable[Option[DocParseState]](None)
+
+  /** Evaluated-field marks held back for a branch-validity gate: (field,
+    * the gates active when it was marked).
+    */
+  private type Marks = scala.collection.mutable.ArrayBuffer[(String, List[Constraint])]
 
   /** The chain of schema RESOURCES the parse has entered, innermost
     * first (head = the resource currently being parsed). Because `$ref`
@@ -238,7 +251,7 @@ object SuiteLoader {
   def parseSchema(json: String): Constraint = {
     val n = mapper.readTree(json)
     dynScopeVar.withValue(if (hasBaseUri(n)) List(n) else Nil) {
-      toConstraint(n, Map.empty, n, Set.empty, draftOf(n, ModernDraft))
+      toConstraint(n, n, Set.empty, draftOf(n, ModernDraft))
     }
   }
 
@@ -319,11 +332,6 @@ object SuiteLoader {
   def parseSuiteDocument(json: String, resources: Seq[String], tableColumns: Seq[String]): Suite =
     tableColumnsVar.withValue(tableColumns) { parseSuiteDocument(json, resources) }
 
-  private def nodeDefs(n: JsonNode): Map[String, JsonNode] =
-    Seq("$defs", "definitions").flatMap(k =>
-      Option(n.get(k)).toSeq.flatMap(d =>
-        d.properties().asScala.map(e => e.getKey -> e.getValue))).toMap
-
   /** Parse a whole SUITE document — a JSON Schema object whose
     * `properties` map the table's columns (≙ the reference's root-schema
     * entry, PJS:validators.py:1265-1332): each keyword inside a field's
@@ -350,8 +358,7 @@ object SuiteLoader {
     val state = new DocParseState
     dynScopeVar.withValue(if (hasBaseUri(root)) List(root) else Nil) {
     docStateVar.withValue(Some(state)) {
-      parseObjectLevel(root, nodeDefs(root), root, "", identity, Set.empty, cs,
-        draftOf(root, ModernDraft))
+      parseObjectLevel(root, root, "", identity, Set.empty, cs, draftOf(root, ModernDraft))
       // unevaluatedProperties (2020-12 annotation semantics,
       // PJS:_keywords.py:407-436, decidable subset): evaluation flows
       // from properties / patternProperties / additionalProperties —
@@ -362,8 +369,7 @@ object SuiteLoader {
       // (dependentSchemas, anyOf/oneOf branches) lands in condEvaluated
       // as per-row gates (r4). Inner frames (ref targets) were already
       // resolved at their pop; this is the root frame's turn.
-      resolveUnevaluated(state.rootFrame, root, nodeDefs(root), "", identity,
-        draftOf(root, ModernDraft), cs, state)
+      resolveUnevaluated(state.rootFrame, root, "", identity, draftOf(root, ModernDraft), cs, state)
     }
     }
     // keep ids unique when allOf branches repeat a (field, keyword) pair
@@ -390,12 +396,11 @@ object SuiteLoader {
     * is invalid regardless; a row passing it has those keys evaluated).
     */
   private def resolveUnevaluated(fr: UpFrame, root: JsonNode,
-                                 scope: Map[String, JsonNode],
                                  prefix: String,
                                  wrap: Constraint => Constraint, draft: Int,
                                  out: scala.collection.mutable.ArrayBuffer[FieldConstraint],
                                  st: DocParseState): Unit = if (fr.up.nonEmpty) {
-    resolveUnevaluatedCore(fr, root, scope, prefix, wrap, draft, out, st)
+    resolveUnevaluatedCore(fr, root, prefix, wrap, draft, out, st)
     tableColumnsVar.value.foreach(st.markEvaluated)
   }
 
@@ -405,7 +410,6 @@ object SuiteLoader {
     * under the branch-validity gate for combinator/conditional arms).
     */
   private def resolveUnevaluatedCore(fr: UpFrame, root: JsonNode,
-                                 scope: Map[String, JsonNode],
                                  prefix: String,
                                  wrap: Constraint => Constraint, draft: Int,
                                  out: scala.collection.mutable.ArrayBuffer[FieldConstraint],
@@ -427,12 +431,12 @@ object SuiteLoader {
       if (ungated.nonEmpty) {
         val props = mapper.createObjectNode()
         ungated.foreach(c => props.set[JsonNode](c, up))
-        parseProperties(props, scope, root, s"${prefix}unevaluatedProperties.", wrap, out, draft)
+        parseProperties(props, root, s"${prefix}unevaluatedProperties.", wrap, out, draft)
       }
       gated.foreach { c =>
         val props = mapper.createObjectNode()
         props.set[JsonNode](c, up)
-        parseProperties(props, scope, root, s"${prefix}unevaluatedProperties.",
+        parseProperties(props, root, s"${prefix}unevaluatedProperties.",
           cc => wrap(AnyOf(gatesFor(c) :+ cc)), out, draft)
       }
     }
@@ -447,67 +451,76 @@ object SuiteLoader {
     * any other branch mark; resolution-time marks are suppressed (they
     * would reach outer frames UNgated).
     */
-  private def resolveBranchFrame(fr: UpFrame,
-      marks: scala.collection.mutable.ArrayBuffer[(String, List[Constraint])],
-      root: JsonNode, scope: Map[String, JsonNode], prefix: String, draft: Int,
-      buf: scala.collection.mutable.ArrayBuffer[FieldConstraint],
+  private def resolveBranchFrame(fr: UpFrame, marks: Marks, root: JsonNode, prefix: String,
+      draft: Int, buf: scala.collection.mutable.ArrayBuffer[FieldConstraint],
       st: DocParseState): Unit = {
     marks.foreach { case (f, gates) => st.commitToFrame(fr, f, gates) }
     if (fr.up.nonEmpty) {
       val saved = st.markSink
       st.markSink = Some((scala.collection.mutable.ArrayBuffer.empty, st.frames.length))
-      try resolveUnevaluatedCore(fr, root, scope, prefix, identity, draft, buf, st)
+      try resolveUnevaluatedCore(fr, root, prefix, identity, draft, buf, st)
       finally st.markSink = saved
       tableColumnsVar.value.foreach(c => marks += ((c, st.gateStack)))
     }
   }
 
-  /** Parse the target of a doc-level $ref/$recursiveRef/$dynamicRef
-    * inside its own annotation frame: marks made within flow upward into
-    * every open frame, the target's own unevaluatedProperties (if any)
-    * resolves at pop against only what the target subtree evaluated.
+  /** The one frame bracket of the document-level walker: parse `body`
+    * inside its own annotation frame. Marks made within flow upward into
+    * every open frame; at pop the frame's own unevaluatedProperties (if
+    * any) resolves against only what `body` evaluated — through
+    * [[resolveUnevaluated]], or, when `marks` is given (a combinator
+    * branch or conditional arm, whose marks wait for the branch-validity
+    * gate and are buffered there meanwhile), through
+    * [[resolveBranchFrame]].
     */
-  private def parseRefTarget(target: JsonNode, tScope: Map[String, JsonNode],
-                             tRoot: JsonNode, prefix: String,
-                             wrap: Constraint => Constraint, refs: Set[RefId],
-                             out: scala.collection.mutable.ArrayBuffer[FieldConstraint],
-                             tDraft: Int): Unit = {
+  private def framed(root: JsonNode, prefix: String, wrap: Constraint => Constraint, draft: Int,
+                     out: scala.collection.mutable.ArrayBuffer[FieldConstraint],
+                     marks: Option[Marks] = None)(body: => Unit): Unit = {
     val st = docStateVar.value
-    st.foreach(s => s.frames = new UpFrame(s.gateStack.length) :: s.frames)
-    try inResource(tRoot) {
-      parseObjectLevel(target, tScope, tRoot, prefix, wrap, refs, out, tDraft)
-    } finally st.foreach { s =>
+    val savedSink = st.flatMap(_.markSink)
+    st.foreach { s =>
+      s.frames = new UpFrame(s.gateStack.length) :: s.frames
+      marks.foreach(m => s.markSink = Some((m, s.frames.length)))
+    }
+    try body
+    finally st.foreach { s =>
+      s.markSink = savedSink
       val fr = s.frames.head
       s.frames = s.frames.tail
-      resolveUnevaluated(fr, tRoot, tScope, prefix, wrap, tDraft, out, s)
+      marks match {
+        case Some(m) => resolveBranchFrame(fr, m, root, prefix, draft, out, s)
+        case None    => resolveUnevaluated(fr, root, prefix, wrap, draft, out, s)
+      }
     }
   }
 
-  /** One object-level schema (document root, allOf branch, or a
-    * dependentSchemas trigger subschema) → FieldConstraints appended to
-    * `out`, each wrapped by `wrap` (identity at root; WhenPresent under
+  /** One object-level schema (the document root, or a subschema parsed
+    * in its own [[framed]] frame) → FieldConstraints appended to `out`,
+    * each wrapped by `wrap` (identity at root; WhenPresent under
     * dependentSchemas).
     */
-  private def parseObjectLevel(n: JsonNode, scope: Map[String, JsonNode], root: JsonNode,
+  private def parseObjectLevel(n: JsonNode, root: JsonNode,
                                prefix: String, wrap: Constraint => Constraint,
                                activeRefs: Set[RefId],
                                out: scala.collection.mutable.ArrayBuffer[FieldConstraint],
-                               inheritedDraft: Int = ModernDraft): Unit = {
-    val localScope = scope ++ nodeDefs(n)
+                               inheritedDraft: Int): Unit = {
     val draft = draftOf(n, inheritedDraft)
+
+    // a doc-level $ref/$recursiveRef/$dynamicRef target parses in its own
+    // annotation frame: its marks flow upward into every open frame, its
+    // own unevaluatedProperties resolves at pop against only what the
+    // target subtree evaluated
+    def parseRef(kind: String, text: String): Unit =
+      withRef(kind, text, root, draft, activeRefs) { t =>
+        require(t.node.isObject, s"doc-level $kind '$text' must target an object schema")
+        framed(t.root, prefix, wrap, t.draft, out) {
+          parseObjectLevel(t.node, t.root, prefix, wrap, t.refs, out, t.draft)
+        }
+      }
 
     // pre-2019 drafts: a document-level $ref overrides its siblings too
     // (same ignore_ref_siblings rule as the field-level path)
-    if (refOverridesSiblings(draft) && n.has("$ref")) {
-      val ref = n.get("$ref").asText()
-      require(!activeRefs.contains(refKey(root, ref)), s"circular doc-level $$ref '$ref'")
-      val (tRoot, target) = resolveFragmentWithRoot(ref, root, localScope)
-      require(target.isObject, s"doc-level $$ref '$ref' must target an object schema")
-      val (tScope, tDraft) =
-        if (tRoot eq root) (localScope, draft) else (nodeDefs(tRoot), draftOf(tRoot, draft))
-      parseRefTarget(target, tScope, tRoot, prefix, wrap, activeRefs + refKey(root, ref), out, tDraft)
-      return
-    }
+    if (refOverridesSiblings(draft) && n.has("$ref")) return parseRef("$ref", n.get("$ref").asText())
 
     // shared by dependentSchemas (2019-09+) and the schema-valued arm of
     // legacy `dependencies` (PJS:_legacy_keywords.py:24-38)
@@ -524,24 +537,39 @@ object SuiteLoader {
         // (PJS:_utils.py:318-325, with NO validity check on the
         // subschema), so every key it evaluates is gated on
         // FieldPresent(trigger) — pointwise-exact, no raise needed (r4)
-        docStateVar.value.foreach { s =>
-          s.gateStack = FieldPresent(trigger) :: s.gateStack
-          // own annotation scope whose base includes the trigger gate
-          s.frames = new UpFrame(s.gateStack.length) :: s.frames
-        }
-        try parseObjectLevel(sub, localScope ++ nodeDefs(sub), root,
-          s"$prefix$trigger.$kw.",
-          c => wrap(WhenPresent(trigger, c)), activeRefs, out, draft)
-        finally docStateVar.value.foreach { s =>
-          val fr = s.frames.head
-          s.frames = s.frames.tail
-          // resolve BEFORE popping the gate so the cascade marks stay
-          // conditioned on the trigger's presence
-          resolveUnevaluated(fr, root, localScope ++ nodeDefs(sub),
-            s"$prefix$trigger.$kw.", c => wrap(WhenPresent(trigger, c)), draft, out, s)
-          s.gateStack = s.gateStack.tail
-        }
+        val (p, w) = (s"$prefix$trigger.$kw.", (c: Constraint) => wrap(WhenPresent(trigger, c)))
+        docStateVar.value.foreach(s => s.gateStack = FieldPresent(trigger) :: s.gateStack)
+        // own annotation scope whose base includes the trigger gate; it
+        // resolves BEFORE the gate pops so the cascade marks stay
+        // conditioned on the trigger's presence
+        try framed(root, p, w, draft, out)(parseObjectLevel(sub, root, p, w, activeRefs, out, draft))
+        finally docStateVar.value.foreach(s => s.gateStack = s.gateStack.tail)
       }
+
+    // one anyOf/oneOf/not branch or if/then/else arm: its own frame, its
+    // FieldConstraints in a private buffer, its marks held back for the
+    // branch-validity gate; a uP inside is part of BRANCH validity (r4b)
+    def parseBranch(node: JsonNode, label: String): (Seq[FieldConstraint], Seq[(String, List[Constraint])]) = {
+      require(node.isObject, s"doc-level $label must be an object or boolean schema")
+      val buf = scala.collection.mutable.ArrayBuffer.empty[FieldConstraint]
+      val marks: Marks = scala.collection.mutable.ArrayBuffer.empty
+      framed(root, "", identity, draft, buf, Some(marks)) {
+        parseObjectLevel(node, root, "", identity, activeRefs, buf, draft)
+      }
+      (buf.toSeq, marks.toSeq)
+    }
+
+    // declared columns matched by NEITHER `properties` nor any
+    // `patternProperties` regex (find_additional_properties,
+    // PJS:_utils.py:69-84) — the key universe is the declared column list
+    def additionalColumns: Seq[String] = {
+      val cols = declaredColumns("additionalProperties")
+      val named = Option(n.get("properties"))
+        .map(_.properties().asScala.map(_.getKey).toSet).getOrElse(Set.empty[String])
+      val ppRes = Option(n.get("patternProperties"))
+        .map(_.properties().asScala.map(_.getKey.r).toSeq).getOrElse(Nil)
+      cols.filterNot(c => named(c) || ppRes.exists(_.findFirstIn(c).isDefined))
+    }
 
     n.properties().asScala.foreach { entry =>
       entry.getKey match {
@@ -582,16 +610,8 @@ object SuiteLoader {
             // each branch is its own annotation scope (r4b): a uP inside
             // it sees only the branch subtree; its marks still flow
             // upward into every open frame
-            val st0 = docStateVar.value
-            st0.foreach(s => s.frames = new UpFrame(s.gateStack.length) :: s.frames)
-            try parseObjectLevel(branch, localScope ++ nodeDefs(branch), root,
-              s"${prefix}allOf[$i].", wrap, activeRefs, out, draft)
-            finally st0.foreach { s =>
-              val fr = s.frames.head
-              s.frames = s.frames.tail
-              resolveUnevaluated(fr, root, localScope ++ nodeDefs(branch),
-                s"${prefix}allOf[$i].", wrap, draft, out, s)
-            }
+            val p = s"${prefix}allOf[$i]."
+            framed(root, p, wrap, draft, out)(parseObjectLevel(branch, root, p, wrap, activeRefs, out, draft))
           }
         case kw @ ("anyOf" | "oneOf" | "not") =>
           requireDraft(kw, 4, draft)
@@ -623,30 +643,13 @@ object SuiteLoader {
               (Seq.empty[FieldConstraint], Seq.empty[(String, List[Constraint])],
                 Some(Always(branch.asBoolean()): Constraint))
             else {
-              require(branch.isObject, s"doc-level $kw[$i] must be an object or boolean schema")
-              val buf = scala.collection.mutable.ArrayBuffer.empty[FieldConstraint]
-              val marks = scala.collection.mutable.ArrayBuffer.empty[(String, List[Constraint])]
-              val (savedSink, st) = (docStateVar.value.map(_.markSink), docStateVar.value)
-              st.foreach { s =>
-                s.frames = new UpFrame(s.gateStack.length) :: s.frames // r4b
-                s.markSink = Some((marks, s.frames.length))
-              }
-              try parseObjectLevel(branch, localScope ++ nodeDefs(branch), root, "",
-                identity, activeRefs, buf, draft)
-              finally st.foreach { s =>
-                s.markSink = savedSink.flatten
-                val fr = s.frames.head
-                s.frames = s.frames.tail
-                // a uP in the branch is part of BRANCH validity (r4b)
-                resolveBranchFrame(fr, marks, root, localScope ++ nodeDefs(branch),
-                  "", draft, buf, s)
-              }
               // an annotation-only branch ({} / title-only / bare
               // properties with empty schemas) asserts nothing: it is
               // Always(true) — but its MARKS still count (a branch
               // {"properties":{"a":true}} evaluates key 'a' whenever
               // the row matches, which is always)
-              (buf.toSeq, marks.toSeq, None)
+              val (fcs, marks) = parseBranch(branch, s"$kw[$i]")
+              (fcs, marks, None)
             }
           }
           // attribution field: first asserting branch's first field;
@@ -692,31 +695,13 @@ object SuiteLoader {
               : (Option[Constraint], Option[String], Seq[(String, List[Constraint])]) =
             if (node.isBoolean) (Some(Always(node.asBoolean())), None, Nil)
             else {
-              require(node.isObject, s"doc-level $label must be an object or boolean schema")
-              val buf = scala.collection.mutable.ArrayBuffer.empty[FieldConstraint]
-              val marks = scala.collection.mutable.ArrayBuffer.empty[(String, List[Constraint])]
-              val (savedSink, st) = (docStateVar.value.map(_.markSink), docStateVar.value)
-              st.foreach { s =>
-                s.frames = new UpFrame(s.gateStack.length) :: s.frames // r4b
-                s.markSink = Some((marks, s.frames.length))
-              }
-              try parseObjectLevel(node, localScope ++ nodeDefs(node), root, "",
-                identity, activeRefs, buf, draft)
-              finally st.foreach { s =>
-                s.markSink = savedSink.flatten
-                val fr = s.frames.head
-                s.frames = s.frames.tail
-                // a uP in the arm is part of ARM validity (r4b)
-                resolveBranchFrame(fr, marks, root, localScope ++ nodeDefs(node),
-                  "", draft, buf, s)
-              }
-              val armCs: Seq[Constraint] = buf.toSeq.map(fc => OnField(fc.field, fc.constraint))
-              val c: Option[Constraint] = armCs match {
+              val (fcs, marks) = parseBranch(node, label)
+              val c: Option[Constraint] = fcs.map(fc => OnField(fc.field, fc.constraint)) match {
                 case Seq()    => None // annotation-only arm: asserts nothing
                 case Seq(one) => Some(one)
                 case cs       => Some(AllOf(cs))
               }
-              (c, buf.headOption.map(_.field), marks.toSeq)
+              (c, fcs.headOption.map(_.field), marks)
             }
           val (condC, condField, condMarks) = parseArm(entry.getValue, "if")
           val thenArm = Option(n.get("then")).map(parseArm(_, "then"))
@@ -743,49 +728,22 @@ object SuiteLoader {
           // without one the reference never descends into them
           // (the if_ validator is the only reader — PJS:_keywords.py:382-389)
           ()
-        case "$ref" =>
-          val ref = entry.getValue.asText()
-          require(!activeRefs.contains(refKey(root, ref)), s"circular doc-level $$ref '$ref'")
-          val (tRoot, target) = resolveFragmentWithRoot(ref, root, localScope)
-          require(target.isObject, s"doc-level $$ref '$ref' must target an object schema")
-          val (tScope, tDraft) =
-            if (tRoot eq root) (localScope, draft) else (nodeDefs(tRoot), draftOf(tRoot, draft))
-          parseRefTarget(target, tScope, tRoot, prefix, wrap, activeRefs + refKey(root, ref), out, tDraft)
+        case "$ref" => parseRef("$ref", entry.getValue.asText())
         case "$recursiveRef" =>
           require2019Only("$recursiveRef", draft)
-          // static non-rebinding subset: resolves to the owning document
-          // root (see resolveRecursiveTarget); a literal-root occurrence
-          // is caught as circular on re-entry like any other self-ref
-          val tRoot = resolveRecursiveTarget(entry.getValue.asText(), root)
-          val key = refKey(tRoot, "$recursive:#")
-          require(!activeRefs.contains(key),
-            "circular doc-level $recursiveRef '#' — compile-time inlining cannot represent cycles")
-          require(tRoot.isObject, "doc-level $recursiveRef must target an object schema")
-          parseRefTarget(tRoot, nodeDefs(tRoot), tRoot, prefix, wrap, activeRefs + key, out,
-            draftOf(tRoot, draft))
+          parseRef("$recursiveRef", entry.getValue.asText())
         case "$recursiveAnchor" =>
           require2019Only("$recursiveAnchor", draft)
           require(entry.getValue.isBoolean, "$recursiveAnchor must be a boolean")
         case "$dynamicRef" =>
           requireDraft("$dynamicRef", 2020, draft)
-          // full compile-time resolution incl. re-binding (r4) — the
-          // statically-known scope chain replaces the runtime walk; same
-          // resolver as the column-constraint path
-          val ref = entry.getValue.asText()
-          val (tRoot, target) = resolveDynamicTarget(ref, root)
-          val key = refKey(tRoot, "$dynamic:" + ref)
-          require(!activeRefs.contains(key),
-            s"circular doc-level $$dynamicRef '$ref' — compile-time inlining cannot represent cycles")
-          require(target.isObject, s"doc-level $$dynamicRef '$ref' must target an object schema")
-          val (tScope, tDraft) =
-            if (tRoot eq root) (localScope, draft) else (nodeDefs(tRoot), draftOf(tRoot, draft))
-          parseRefTarget(target, tScope, tRoot, prefix, wrap, activeRefs + key, out, tDraft)
+          parseRef("$dynamicRef", entry.getValue.asText())
         case "$dynamicAnchor" =>
           requireDraft("$dynamicAnchor", 2020, draft)
           // declaration marker only (names this node for the resolver)
           require(entry.getValue.isTextual, "$dynamicAnchor must be a string")
         case "properties" =>
-          parseProperties(entry.getValue, localScope, root, prefix, wrap, out, draft)
+          parseProperties(entry.getValue, root, prefix, wrap, out, draft)
         case "minProperties" =>
           requireDraft("minProperties", 4, draft)
           // present keys = non-null columns over the declared universe
@@ -817,22 +775,13 @@ object SuiteLoader {
             val matched = cols.filter(c => re.findFirstIn(c).isDefined)
             val props = mapper.createObjectNode()
             matched.foreach(c => props.set[JsonNode](c, pp.getValue))
-            parseProperties(props, localScope, root, s"${prefix}patternProperties.", wrap, out, draft)
+            parseProperties(props, root, s"${prefix}patternProperties.", wrap, out, draft)
           }
         case "additionalProperties" if !entry.getValue.isBoolean =>
-          // schema form: applies to every column matched by NEITHER
-          // `properties` nor any `patternProperties` regex
-          // (find_additional_properties, PJS:_utils.py:69-84) — the key
-          // universe is the declared column list
-          val cols = declaredColumns("additionalProperties")
-          val named = Option(n.get("properties"))
-            .map(_.properties().asScala.map(_.getKey).toSet).getOrElse(Set.empty[String])
-          val ppRes = Option(n.get("patternProperties"))
-            .map(_.properties().asScala.map(_.getKey.r).toSeq).getOrElse(Nil)
-          val rest = cols.filterNot(c => named(c) || ppRes.exists(_.findFirstIn(c).isDefined))
+          // schema form: applies to every additional column
           val props = mapper.createObjectNode()
-          rest.foreach(c => props.set[JsonNode](c, entry.getValue))
-          parseProperties(props, localScope, root, s"${prefix}additionalProperties.", wrap, out, draft)
+          additionalColumns.foreach(c => props.set[JsonNode](c, entry.getValue))
+          parseProperties(props, root, s"${prefix}additionalProperties.", wrap, out, draft)
         case "additionalProperties" =>
           // boolean form: `false` forbids the PRESENCE of any declared
           // column matched by neither `properties` nor a
@@ -845,23 +794,15 @@ object SuiteLoader {
           // `true` evaluates everything vacuously. Either way every
           // remaining key counts as evaluated, so
           // unevaluatedProperties downstream sees nothing.
-          if (!entry.getValue.asBoolean()) {
-            val cols = declaredColumns("additionalProperties")
-            val named = Option(n.get("properties"))
-              .map(_.properties().asScala.map(_.getKey).toSet).getOrElse(Set.empty[String])
-            val ppRes = Option(n.get("patternProperties"))
-              .map(_.properties().asScala.map(_.getKey.r).toSeq).getOrElse(Nil)
-            cols.filterNot(c => named(c) || ppRes.exists(_.findFirstIn(c).isDefined))
-              .foreach(c => out += FieldConstraint(s"${prefix}additionalProperties.$c", c,
-                wrap(WhenPresent(c, Always(false)))))
-          }
+          if (!entry.getValue.asBoolean())
+            additionalColumns.foreach(c => out += FieldConstraint(s"${prefix}additionalProperties.$c", c,
+              wrap(WhenPresent(c, Always(false)))))
           docStateVar.value.foreach(st => tableColumnsVar.value.foreach(st.markEvaluated))
         case "unevaluatedProperties" =>
           requireDraft("unevaluatedProperties", 2019, draft)
-          // deferred to parseSuiteDocument's post-pass (the evaluated-key
-          // set must be complete first); only meaningful at the document
-          // ROOT — annotation flow INTO branches is out of the static
-          // subset
+          // deferred to the pop of the current frame ([[framed]], or
+          // parseSuiteDocument's post-pass for the root): the frame's
+          // evaluated-key set must be complete first
           docStateVar.value match {
             case Some(st) =>
               // one uP per annotation SCOPE (frame): the document root
@@ -890,7 +831,7 @@ object SuiteLoader {
           val cols = declaredColumns("propertyNames")
           val nameFails: String => Boolean =
             if (pv.isBoolean) { _ => !pv.asBoolean() }
-            else { val c = toConstraint(pv, localScope, root, activeRefs, draft); s => !evalString(c, s) }
+            else { val c = toConstraint(pv, root, activeRefs, draft); s => !evalString(c, s) }
           cols.filter(nameFails).foreach(c =>
             out += FieldConstraint(s"$prefix$c.propertyNames", c,
               wrap(WhenPresent(c, Always(false)))))
@@ -903,7 +844,7 @@ object SuiteLoader {
   }
 
   /** `properties`: one FieldConstraint per (field, keyword) slice. */
-  private def parseProperties(props: JsonNode, scope: Map[String, JsonNode], root: JsonNode,
+  private def parseProperties(props: JsonNode, root: JsonNode,
                               prefix: String, wrap: Constraint => Constraint,
                               out: scala.collection.mutable.ArrayBuffer[FieldConstraint],
                               draft: Int): Unit = {
@@ -942,7 +883,7 @@ object SuiteLoader {
         // early-return implements the discard; hand it the whole
         // subschema instead of slicing.
         if (refOverridesSiblings(subDraft) && sub.has("$ref")) {
-          val c = toConstraint(sub, scope ++ nodeDefs(sub), root, Set.empty, subDraft)
+          val c = toConstraint(sub, root, Set.empty, subDraft)
           out += FieldConstraint(s"$prefix$field.$$ref", field, wrap(c))
         } else {
         val anchored = Set("minContains", "maxContains", "then", "else", "$defs") ++
@@ -956,11 +897,10 @@ object SuiteLoader {
             // prefixItems/items/contains/combinators/refs from the node
             // itself — no slice, no extraction); vacuous → no constraint
             requireDraft("unevaluatedItems", 2019, subDraft)
-            unevaluatedItemsConstraint(sub, scope ++ nodeDefs(sub), root, Set.empty, subDraft)
+            unevaluatedItemsConstraint(sub, root, Set.empty, subDraft)
               .foreach(c => out += FieldConstraint(s"$prefix$field.$k", field, wrap(c)))
           } else if (!anchored.contains(k) && !Annotations.contains(k)) {
-            // single-keyword slice, carrying the anchored siblings +
-            // document $defs scope along
+            // single-keyword slice, carrying the anchored siblings along
             val slice = mapper.createObjectNode()
             slice.set[JsonNode](k, e.getValue)
             val carry = Map(
@@ -971,7 +911,7 @@ object SuiteLoader {
               "maximum"  -> Seq("exclusiveMaximum").filter(_ => anchored("exclusiveMaximum")))
             carry.getOrElse(k, Nil)
               .foreach(s => Option(sub.get(s)).foreach(slice.set[JsonNode](s, _)))
-            val c = toConstraint(slice, scope ++ nodeDefs(sub), root, Set.empty, subDraft)
+            val c = toConstraint(slice, root, Set.empty, subDraft)
             // the prefixItems slice inside a MODERN items-slice is only
             // there to offset items; it emits its own constraint from
             // its own keyword iteration, so drop it from the items slice
@@ -996,8 +936,7 @@ object SuiteLoader {
   }
 
   def toConstraint(n: JsonNode): Constraint =
-    toConstraint(n, Map.empty, n, Set.empty,
-      if (n.isObject) draftOf(n, ModernDraft) else ModernDraft)
+    toConstraint(n, n, Set.empty, if (n.isObject) draftOf(n, ModernDraft) else ModernDraft)
 
   private def anyVal(n: JsonNode): Any =
     if (n.isIntegralNumber) n.asLong()
@@ -1014,8 +953,10 @@ object SuiteLoader {
     * since each contributes positions 0..len-1), `contains` = compiled
     * contains subschemas whose matches are evaluated pointwise,
     * `everything` = some applicator in the closure evaluates every
-    * element (uI vacuous). The walk recurses through `allOf` branches
-    * and `$ref` targets (r4b); branch-dependent shapes raise.
+    * element (uI vacuous), `cond` = contributions gated on a branch's
+    * per-row validity. The walk recurses through applicator branches and
+    * through `$ref`/`$dynamicRef`/`$recursiveRef` targets (r4b), the
+    * latter via [[withRef]] like the assertion compiled beside it.
     */
   private final case class EvalIdx(prefixLen: Int, contains: Seq[Constraint],
                                    everything: Boolean,
@@ -1024,13 +965,11 @@ object SuiteLoader {
     def nonEmptyBase: Boolean = prefixLen > 0 || contains.nonEmpty || everything
   }
 
-  private def evaluatedIndexInfo(n: JsonNode, scope: Map[String, JsonNode],
-                                 root: JsonNode, seen: Set[RefId],
+  private def evaluatedIndexInfo(n: JsonNode, root: JsonNode, seen: Set[RefId],
                                  inheritedDraft: Int,
                                  ownUi: Boolean = true): EvalIdx = {
     if (n.isBoolean) return EvalIdx(0, Nil, everything = false, Nil)
     val draft = draftOf(n, inheritedDraft)
-    val defs = scope ++ nodeDefs(n)
     var plen = 0
     var everything = false
     val cont = Seq.newBuilder[Constraint]
@@ -1068,7 +1007,7 @@ object SuiteLoader {
     // branch's uI validated (round-5 fix, live-pinned by the
     // fuzz_boundary corpus branch-ui groups).
     (if (ownUi) Seq("contains", "unevaluatedItems") else Seq("contains")).foreach(kw =>
-      Option(n.get(kw)).foreach(c => cont += toConstraint(c, defs, root, seen, draft)))
+      Option(n.get(kw)).foreach(c => cont += toConstraint(c, root, seen, draft)))
     // allOf merges UNCONDITIONALLY: the tracker gates on branch validity,
     // but a failing allOf branch fails the row anyway — verdict-exact.
     // Boolean branches contribute nothing (the tracker returns [] for
@@ -1080,24 +1019,23 @@ object SuiteLoader {
       // rely on the separate main allOf parse path (r5 ADVICE)
       require(b.isObject || b.isBoolean,
         s"allOf branch must be an object or boolean schema, got: $b")
-      merge(evaluatedIndexInfo(b, defs, root, seen, draft))
+      merge(evaluatedIndexInfo(b, root, seen, draft))
     })
     // anyOf/oneOf: each branch contributes iff the row VALIDATES against
     // it (find_evaluated_item_indexes_by_schema's errs-is-None gate)
     Seq("anyOf", "oneOf").foreach { kw =>
       Option(n.get(kw)).foreach(_.asScala.foreach { b =>
-        gatedMerge(toConstraint(b, defs, root, seen, draft),
-          evaluatedIndexInfo(b, defs, root, seen, draft))
+        gatedMerge(toConstraint(b, root, seen, draft), evaluatedIndexInfo(b, root, seen, draft))
       })
     }
     // if/then under if-validity; else under its negation. `not` is NOT
     // in the tracker's keyword set — it contributes nothing and is
     // deliberately ignored here (it asserts via its own slice).
     Option(n.get("if")).foreach { ifN =>
-      val g = toConstraint(ifN, defs, root, seen, draft)
-      val ifInfo = evaluatedIndexInfo(ifN, defs, root, seen, draft)
+      val g = toConstraint(ifN, root, seen, draft)
+      val ifInfo = evaluatedIndexInfo(ifN, root, seen, draft)
       val thenInfo = Option(n.get("then"))
-        .map(evaluatedIndexInfo(_, defs, root, seen, draft))
+        .map(evaluatedIndexInfo(_, root, seen, draft))
         .getOrElse(EvalIdx(0, Nil, everything = false, Nil))
       gatedMerge(g, EvalIdx(
         math.max(ifInfo.prefixLen, thenInfo.prefixLen),
@@ -1105,26 +1043,14 @@ object SuiteLoader {
         ifInfo.everything || thenInfo.everything,
         ifInfo.cond ++ thenInfo.cond))
       Option(n.get("else")).foreach(e =>
-        gatedMerge(Not(g), evaluatedIndexInfo(e, defs, root, seen, draft)))
+        gatedMerge(Not(g), evaluatedIndexInfo(e, root, seen, draft)))
     }
-    def follow(ref: String, cycleTag: String, resolve: => (JsonNode, JsonNode)): Unit = {
-      val (tRoot, target) = resolve
-      val key = refKey(tRoot, cycleTag + ref)
-      require(!seen.contains(key),
-        s"circular '$ref' in the unevaluatedItems evaluated-index walk")
-      merge(
-        if (tRoot eq root) evaluatedIndexInfo(target, defs, root, seen + key, draft)
-        else evaluatedIndexInfo(target, nodeDefs(tRoot), tRoot, seen + key,
-          draftOf(tRoot, draft)))
-    }
-    Option(n.get("$ref")).map(_.asText()).foreach(r =>
-      follow(r, "", resolveFragmentWithRoot(r, root, defs)))
-    Option(n.get("$dynamicRef")).map(_.asText()).foreach(r =>
-      follow(r, "$dynamic:", resolveDynamicTarget(r, root)))
-    Option(n.get("$recursiveRef")).map(_.asText()).foreach { r =>
-      val tRoot = resolveRecursiveTarget(r, root) // legacy tracker follows it too
-      follow(r, "$recursive:", (tRoot, tRoot))
-    }
+    // ref targets merge unconditionally; the tracker follows all three
+    // kinds (the 2019-09 one too), inside the target's resource
+    Seq("$ref", "$dynamicRef", "$recursiveRef").foreach(kind =>
+      Option(n.get(kind)).foreach(r => merge(withRef(kind, r.asText(), root, draft, seen) { t =>
+        evaluatedIndexInfo(t.node, t.root, t.refs, t.draft)
+      })))
     EvalIdx(plen, cont.result(), everything, cond.result())
   }
 
@@ -1138,13 +1064,11 @@ object SuiteLoader {
     * Returns None when every element is unconditionally evaluated
     * (vacuous). Ungated shapes keep the plain ItemsFrom fast path.
     */
-  private def unevaluatedItemsConstraint(n: JsonNode, scope: Map[String, JsonNode],
-                                         root: JsonNode, seen: Set[RefId],
+  private def unevaluatedItemsConstraint(n: JsonNode, root: JsonNode, seen: Set[RefId],
                                          draft: Int): Option[Constraint] = {
-    val info = evaluatedIndexInfo(n, scope, root, seen, draft, ownUi = false)
+    val info = evaluatedIndexInfo(n, root, seen, draft, ownUi = false)
     if (info.everything) return None
-    val defs = scope ++ nodeDefs(n)
-    val u = toConstraint(n.get("unevaluatedItems"), defs, root, seen, draft)
+    val u = toConstraint(n.get("unevaluatedItems"), root, seen, draft)
     if (info.cond.isEmpty)
       Some(ItemsFrom(info.prefixLen,
         if (info.contains.isEmpty) u else AnyOf(info.contains :+ u)))
@@ -1162,14 +1086,14 @@ object SuiteLoader {
   private def unescapePointer(seg: String): String =
     seg.replace("~1", "/").replace("~0", "~")
 
-  /** Cycle-guard key for an active $ref: scoped to the OWNING DOCUMENT
-    * by true reference identity, not the raw ref string — with the
-    * multi-resource registry the same fragment string ("#/$defs/s")
-    * legitimately appears in several documents, and string-only keying
-    * misreported that as circular (round-3 review). identityHashCode
-    * participates only in hashing; equality is `eq` on the document
-    * node, so two distinct documents sharing a hash can never collide
-    * into a false cycle (round-3 ADVICE, low).
+  /** Cycle-guard key for an active reference (see [[withRef]]): scoped
+    * to a DOCUMENT by true reference identity, not the raw ref string —
+    * with the multi-resource registry the same fragment string
+    * ("#/$defs/s") legitimately appears in several documents, and
+    * string-only keying misreported that as circular (round-3 review).
+    * identityHashCode participates only in hashing; equality is `eq` on
+    * the document node, so two distinct documents sharing a hash can
+    * never collide into a false cycle (round-3 ADVICE, low).
     */
   private final class RefId(val root: JsonNode, val ref: String) {
     override def hashCode: Int = System.identityHashCode(root) * 31 + ref.hashCode
@@ -1179,7 +1103,43 @@ object SuiteLoader {
     }
     override def toString: String = ref
   }
-  private def refKey(root: JsonNode, ref: String): RefId = new RefId(root, ref)
+
+  /** A resolved reference: the target node, its owning resource, the
+    * dialect it inherits, and the active-ref set with this reference's
+    * cycle key added.
+    */
+  private final case class RefTarget(node: JsonNode, root: JsonNode, draft: Int, refs: Set[RefId])
+
+  /** The one reference resolver of the loader, shared by the
+    * document-level walker, the field-level walker and the
+    * unevaluatedItems evaluated-index walk: resolve `text` (the value of
+    * keyword `kind`: `$ref`, `$dynamicRef` or `$recursiveRef`) from
+    * resource `root`, refuse a cycle, and run `body` on the target inside
+    * the target's resource. The reference likewise follows every ref —
+    * its evaluated-item walk included (PJS:_utils.py:200-219) — through
+    * one resolver lookup and scope push (REF:_core.py:709-725).
+    *
+    * Cycle key: a `$ref` target is a pure function of (root, text), so
+    * its key is the referring resource plus the text; a `$dynamicRef` or
+    * `$recursiveRef` target depends on the dynamic scope, so its key is
+    * the target's resource plus the kind and text. Dialect: a
+    * same-resource `$ref`/`$dynamicRef` target inherits the referrer's;
+    * a cross-resource target, and a `$recursiveRef` (always a resource
+    * root), starts from its resource's `$schema`.
+    */
+  private def withRef[A](kind: String, text: String, root: JsonNode, draft: Int,
+                         active: Set[RefId])(body: RefTarget => A): A = {
+    val (tRoot, target) = kind match {
+      case "$ref"        => resolveRefTarget(text, root)
+      case "$dynamicRef" => resolveDynamicTarget(text, root)
+      case _             => val r = resolveRecursiveTarget(text, root); (r, r)
+    }
+    val key = new RefId(if (kind == "$ref") root else tRoot, kind + text)
+    if (active.contains(key))
+      throw new IllegalArgumentException(s"circular $kind '$text' — compile-time inlining cannot represent cycles")
+    val tDraft = if ((tRoot eq root) && kind != "$recursiveRef") draft else draftOf(tRoot, draft)
+    inResource(tRoot)(body(RefTarget(target, tRoot, tDraft, active + key)))
+  }
 
   /** RFC 6901 JSON-pointer walk from `root` (objects by key, arrays by
     * index). Returns None when any step is missing.
@@ -1242,7 +1202,7 @@ object SuiteLoader {
     *     overwrite in the innermost→outermost loop); plain `$anchor`s
     *     in scope never participate (isinstance DynamicAnchor check).
     *  3. Recursion through a re-bound target still raises via the
-    *     cycle guard at the call site, and a declaring document with a
+    *     cycle guard in [[withRef]], and a declaring document with a
     *     NESTED `$id` sub-resource raises — the flat registry does not
     *     model anchor ownership across embedded resources.
     */
@@ -1297,8 +1257,8 @@ object SuiteLoader {
     * `dynamic_scope()` loop with its `break`). The scope chain is
     * statically known under inlining (dynScopeVar), so the walk runs at
     * compile time. The genuinely recursive shapes (the re-bound outer
-    * root transitively re-reaches the ref) raise via the cycle guard at
-    * the call site; a nested `$id` sub-resource would re-base `#` to an
+    * root transitively re-reaches the ref) raise via the cycle guard in
+    * [[withRef]]; a nested `$id` sub-resource would re-base `#` to an
     * inner root the flat registry does not model → RAISE likewise.
     */
   private def resolveRecursiveTarget(ref: String, root: JsonNode): JsonNode = {
@@ -1350,10 +1310,6 @@ object SuiteLoader {
     found
   }
 
-  /** Resolve an intra-document fragment reference to its target node. */
-  private def resolveFragment(ref: String, root: JsonNode, scope: Map[String, JsonNode]): JsonNode =
-    resolveFragmentWithRoot(ref, root, scope)._2
-
   /** Resolve a reference to (owningDocument, targetNode). A fragment ref
     * resolves inside `root`; an ABSOLUTE ref ("uri" / "uri#/ptr" /
     * "uri#anchor") switches to the registry resource for that base URI
@@ -1363,8 +1319,7 @@ object SuiteLoader {
     * mirroring referencing.exceptions.Unresolvable (zero-egress: the
     * caller-supplied registry is the closed world).
     */
-  private def resolveFragmentWithRoot(ref: String, root: JsonNode,
-                                      scope: Map[String, JsonNode]): (JsonNode, JsonNode) =
+  private def resolveRefTarget(ref: String, root: JsonNode): (JsonNode, JsonNode) =
     if (ref == "#" || ref == "") (root, root)
     else if (ref.startsWith("#/")) {
       // RFC 6901: "#/" is the pointer "/" — ONE empty segment (the
@@ -1388,40 +1343,28 @@ object SuiteLoader {
         throw new IllegalArgumentException(
           s"non-fragment $$ref '$ref' not in the resource registry: zero-egress, suites must be " +
             "self-contained (mirrors referencing.exceptions.Unresolvable, REF:_core.py:658-686)"))
-      (doc, resolveFragment(if (frag.isEmpty) "#" else frag, doc, nodeDefs(doc)))
+      (doc, resolveRefTarget(if (frag.isEmpty) "#" else frag, doc)._2)
     }
 
-  /** `scope` carries the lexically-enclosing $defs registry down the
-    * tree; `root` is the whole document for pointer/anchor refs;
-    * `activeRefs` guards against circular inlining.
+  /** `root` is the resource the node belongs to, for pointer/anchor
+    * refs; `activeRefs` guards against circular inlining.
     */
-  private def toConstraint(n: JsonNode, scope: Map[String, JsonNode],
-                           root: JsonNode, activeRefs: Set[RefId],
-                           inheritedDraft: Int = ModernDraft): Constraint = {
+  private def toConstraint(n: JsonNode, root: JsonNode, activeRefs: Set[RefId],
+                           inheritedDraft: Int): Constraint = {
     if (n.isBoolean) return Always(n.asBoolean())
     require(n.isObject, s"schema must be object or boolean, got $n")
     val draft = draftOf(n, inheritedDraft)
     val cs = scala.collection.mutable.ArrayBuffer.empty[Constraint]
-    val defs: Map[String, JsonNode] = scope ++ nodeDefs(n)
 
-    def resolveRef(ref: String): Constraint = {
-      if (activeRefs.contains(refKey(root, ref)))
-        throw new IllegalArgumentException(s"circular $$ref '$ref' — compile-time inlining cannot represent cycles")
-      val (tRoot, target) = resolveFragmentWithRoot(ref, root, defs)
-      if (tRoot eq root) toConstraint(target, defs, root, activeRefs + refKey(root, ref), draft)
-      // cross-document: the resource's own $defs scope and $schema
-      // dialect take over (lexical scoping, REF:_core.py resolver push)
-      else inResource(tRoot) {
-        toConstraint(target, nodeDefs(tRoot), tRoot, activeRefs + refKey(root, ref), draftOf(tRoot, draft))
-      }
-    }
+    def ref(kind: String, v: JsonNode): Constraint =
+      withRef(kind, v.asText(), root, draft, activeRefs)(t => toConstraint(t.node, t.root, t.refs, t.draft))
 
     // pre-2019 drafts: $ref OVERRIDES its siblings — everything else in
     // this object is discarded (ignore_ref_siblings,
     // PJS:_legacy_keywords.py:9-21)
-    if (refOverridesSiblings(draft) && n.has("$ref")) return resolveRef(n.get("$ref").asText())
+    if (refOverridesSiblings(draft) && n.has("$ref")) return ref("$ref", n.get("$ref"))
 
-    def sub(v: JsonNode): Constraint = toConstraint(v, defs, root, activeRefs, draft)
+    def sub(v: JsonNode): Constraint = toConstraint(v, root, activeRefs, draft)
 
     // draft-4 boolean exclusive-bound forms: `exclusiveMinimum: true`
     // modifies the sibling `minimum` (PJS:_legacy_keywords.py:124-149)
@@ -1510,7 +1453,7 @@ object SuiteLoader {
           // is a CYCLIC ref reachable from the walk — compile-time
           // inlining cannot represent cycles (pinned by the boundary
           // fuzz kind, fuzz_boundary_cases.json).
-          unevaluatedItemsConstraint(n, scope, root, activeRefs, draft).foreach(cs += _)
+          unevaluatedItemsConstraint(n, root, activeRefs, draft).foreach(cs += _)
         case "contains" =>
           requireDraft("contains", 6, draft)
           // min/maxContains are 2019-09+: under draft-6/7 the reference
@@ -1533,20 +1476,13 @@ object SuiteLoader {
           cs += IfThenElse(sub(v),
             Option(n.get("then")).map(sub),
             Option(n.get("else")).map(sub))
-        case "$ref" => cs += resolveRef(v.asText())
+        case "$ref" => cs += ref(k, v)
         case "$dynamicRef" =>
           requireDraft("$dynamicRef", 2020, draft)
           // full compile-time resolution incl. re-binding (r4) — see
           // resolveDynamicTarget; the statically-known scope chain
           // replaces the reference's runtime walk
-          val (tRoot, target) = resolveDynamicTarget(v.asText(), root)
-          val key = refKey(tRoot, "$dynamic:" + v.asText())
-          require(!activeRefs.contains(key),
-            s"circular $$dynamicRef '${v.asText()}' — compile-time inlining cannot represent cycles")
-          cs += (if (tRoot eq root) toConstraint(target, defs, root, activeRefs + key, draft)
-                 else inResource(tRoot) {
-                   toConstraint(target, nodeDefs(tRoot), tRoot, activeRefs + key, draftOf(tRoot, draft))
-                 })
+          cs += ref(k, v)
         case "$dynamicAnchor" =>
           requireDraft("$dynamicAnchor", 2020, draft)
           // declaration marker only (names this node); the re-binding
@@ -1556,13 +1492,7 @@ object SuiteLoader {
           require2019Only("$recursiveRef", draft)
           // full compile-time resolution incl. the outward dynamic-scope
           // walk (r4) — see resolveRecursiveTarget
-          val tRoot = resolveRecursiveTarget(v.asText(), root)
-          val key = refKey(tRoot, "$recursive:#")
-          require(!activeRefs.contains(key),
-            "circular $recursiveRef '#' — compile-time inlining cannot represent cycles")
-          cs += inResource(tRoot) {
-            toConstraint(tRoot, nodeDefs(tRoot), tRoot, activeRefs + key, draftOf(tRoot, draft))
-          }
+          cs += ref(k, v)
         case "$recursiveAnchor" =>
           require2019Only("$recursiveAnchor", draft)
           // declaration marker only; the re-binding guard lives at

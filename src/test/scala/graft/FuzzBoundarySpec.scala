@@ -49,6 +49,12 @@ class FuzzBoundaryRaiseSpec extends AnyFunSuite {
   private val corpus = mapper.readTree(
     scala.io.Source.fromResource("golden/fuzz_boundary_raises.json")(scala.io.Codec.UTF8).mkString)
 
+  /** The phrase each family's refusal message carries. */
+  private val Reasons = Map(
+    "cycle-ref"    -> "circular",
+    "draft-gate"   -> "vocabulary",
+    "field-object" -> "unsupported inside a field subschema")
+
   corpus.asScala.foreach { group =>
     val desc = group.get("description").asText()
     val family = group.get("family").asText()
@@ -67,6 +73,11 @@ class FuzzBoundaryRaiseSpec extends AnyFunSuite {
       assert(thrown.isInstanceOf[IllegalArgumentException] ||
         thrown.isInstanceOf[UnsupportedOperationException],
         s"expected an explicit loader raise, got ${thrown.getClass}: ${thrown.getMessage}")
+      // ... and it must name the family's refusal, not some other one
+      // (a cycle refused as "unresolvable" would be a wrong reason)
+      val reason = Reasons.getOrElse(family, fail(s"unknown raise family '$family'"))
+      assert(String.valueOf(thrown.getMessage).contains(reason),
+        s"[$family] expected a message naming '$reason', got: ${thrown.getMessage}")
     }
   }
 }

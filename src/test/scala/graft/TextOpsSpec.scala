@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Md5, StringSplit}
 import org.apache.spark.sql.functions._
 import graft.pipeline.TextOps
 
 /** The word-window builders (shingles3, wordNgramHashes, wordBigrams)
   * split each document once per row, and give exactly what the
   * composed definition below gives, whose window lambda re-splits the
-  * document once per window.
+  * document once per window. simhash16 likewise splits and hashes each
+  * word once per row, where its composed definition did so once per bit.
   */
 class TextOpsSpec extends SparkSpec {
 
@@ -34,6 +35,14 @@ class TextOpsSpec extends SparkSpec {
         transform(sequence(lit(1), size(w) - 2),
           i => concat_ws(" ", element_at(w, i), element_at(w, i + 1), element_at(w, i + 2))))
         .otherwise(array().cast("array<string>"))
+    }
+    def simhash16(text: Column): Column = {
+      val hs = transform(words(text), TextOps.h32(_))
+      (0 until 16).map { b =>
+        val bitSum = aggregate(hs, lit(0L),
+          (acc, h) => acc + (shiftright(h, b).bitwiseAND(lit(1L)) * 2 - 1))
+        when(bitSum > 0, lit(1L << b)).otherwise(lit(0L))
+      }.reduce(_ + _)
     }
   }
 
@@ -104,5 +113,24 @@ class TextOpsSpec extends SparkSpec {
         .flatMap(_.collect { case s: StringSplit => s })
       assert(inLambda.isEmpty, s"$name splits inside a lambda body")
     }
+  }
+
+  test("simhash16 equals its composed definition on sf0.01 documents and edge texts, interpreted and codegen") {
+    for ((path, conf) <- paths) withConf(conf: _*) {
+      val rows = texts.select(col("text"), TextOps.simhash16(col("text")).as("b"),
+        Composed.simhash16(col("text")).as("c")).collect()
+      assert(rows.length === 500 + edgeTexts.size)
+      assert(rows.exists(r => !r.isNullAt(1) && r.getLong(1) != 0L), s"simhash16 ($path) is all zero")
+      rows.foreach(r => assert(r.get(1) === r.get(2), s"simhash16 ($path) on ${r.getString(0)}"))
+    }
+  }
+
+  test("d_simhashes splits and md5-hashes the words once per row") {
+    val exprs = SparkEntry.queries("d_simhashes")(spark, "/root/testdata/sf0.01")
+      .queryExecution.optimizedPlan.collect { case n => n.expressions }.flatten
+    val splits = exprs.flatMap(_.collect { case s: StringSplit => s })
+    val md5s = exprs.flatMap(_.collect { case m: Md5 => m })
+    assert(splits.size === 1, s"d_simhashes holds ${splits.size} splits")
+    assert(md5s.size === 1, s"d_simhashes holds ${md5s.size} md5s")
   }
 }
