@@ -410,7 +410,9 @@ object PipelineQueries {
         benchNgrams(s, dir))
       .select(col("doc_id")).distinct()
 
-  /** doc_ids dropped by canonical dedup (cluster node ≠ min-id). */
+  /** doc_ids dropped by canonical dedup (cluster node ≠ min-id): the
+    * leaves of the converged star forest, a filter over its checkpoint.
+    */
   private[graft] def droppedDocIds(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.ConnectedComponents.components(
         lshPairs(s, dir).filter(col("is_dup")).select(col("id_a"), col("id_b")))
@@ -464,30 +466,31 @@ object PipelineQueries {
     curateLedgerWith(s, dir, contam, dropped)
   }
 
-  /** The contaminated and dropped doc_id frames, localCheckpoint'ed
-    * (eager) — what [[curateLedger]] and [[graft.run.CurateJob]] build
-    * the ledger and the curated corpus from. Without the checkpoint a
-    * single-action plan re-runs the whole LSH + connected-components
-    * chain inside droppedDocIds and re-scans/re-shingles the corpus
-    * inside contamDocIds once per consumer (round-4 VERDICT "what's
-    * wrong" #2). The frames are doc_id lists — tiny next to the corpus
-    * — so materializing them is the scale-correct shape at any corpus
-    * size (swap for reliable checkpoint + a checkpoint dir on a real
-    * cluster, as ConnectedComponents notes).
+  /** The contaminated and dropped doc_id frames, materialized (eager)
+    * — what [[curateLedger]] and [[graft.run.CurateJob]] build the
+    * ledger and the curated corpus from. Without that a single-action
+    * plan re-runs the whole LSH + connected-components chain inside
+    * droppedDocIds and re-scans/re-shingles the corpus inside
+    * contamDocIds once per consumer (round-4 VERDICT "what's wrong"
+    * #2). The contaminated frame is localCheckpoint'ed; the dropped one
+    * already is a filter over the connected-components checkpoint,
+    * which the eager round loop has materialized. The frames are
+    * doc_id lists — tiny next to the corpus — so materializing them is
+    * the scale-correct shape at any corpus size (swap for reliable
+    * checkpoint + a checkpoint dir on a real cluster, as
+    * ConnectedComponents notes).
     * r6: the two chains are INDEPENDENT, and the dedup side is a
     * sequential multi-round loop (LSH + connected components) that
-    * cannot fill the cluster by itself — materialize them from two
-    * driver threads so the decontamination jobs back-fill the dedup
-    * chain's stragglers (guide §2.6 "overlap independent jobs"); the
-    * scheduler interleaves the jobs, results are unchanged.
+    * cannot fill the cluster by itself — materialize them side by side
+    * on [[graft.run.TaskRunner]] so the decontamination jobs back-fill
+    * the dedup chain's stragglers (guide §2.6 "overlap independent
+    * jobs"); the scheduler interleaves the jobs, results are unchanged.
     */
   private[graft] def curationIdFrames(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fContam = Future { contamDocIds(s, dir).localCheckpoint(true) }
-    val fDropped = Future { droppedDocIds(s, dir).localCheckpoint(true) }
-    (Await.result(fContam, Duration.Inf), Await.result(fDropped, Duration.Inf))
+    val Seq(contam, dropped) = graft.run.TaskRunner.runAll("graft-curation-ids", IndexedSeq(
+      () => contamDocIds(s, dir).localCheckpoint(true),
+      () => droppedDocIds(s, dir)), s.sparkContext.defaultParallelism)
+    (contam, dropped)
   }
 
   /** [[curateLedger]] over PRE-COMPUTED contaminated/dropped id frames

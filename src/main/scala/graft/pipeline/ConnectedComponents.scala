@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an edge list, by alternating
@@ -11,17 +12,45 @@ import org.apache.spark.sql.functions._
   * of near-dup docs propagates one hop per round there), and the reason
   * this is the shape that survives a 100-TB dedup graph.
   *
-  * Per round: two groupBy-min shuffles keyed on node id (no collect_set
-  * — a high-degree hub contributes one MIN per partition via partial
-  * aggregation, so boilerplate mega-clusters don't skew a reducer), and
-  * one `localCheckpoint` to truncate the iterative lineage (swap for
-  * reliable `checkpoint` + a checkpoint dir on a real cluster). The
-  * driver-side loop carries only a (count, checksum) pair per round.
+  * State: the symmetric edge set plus a self-loop per node (the node
+  * universe: a node whose only input edge is (x, x) stays a singleton
+  * component instead of vanishing), one (u, v, m) row per directed
+  * edge, where m = min(N(u) ∪ {u}) — the min over u's rows, self-loop
+  * included. The input is symmetrized into that shape by ONE
+  * checkpoint action; each round is one more.
+  *
+  * A round is two shuffles, both keyed on u:
+  *   1. large-star: every row with v > u emits (v, m(u)) — every larger
+  *      neighbour is attached to u's min — and every self-loop stays;
+  *   2. repartition on u;
+  *   3. distinct, then the min over u (a window over the partition the
+  *      exchange already made), the min of u's smaller neighbours;
+  *   4. small-star: every smaller neighbour v ≠ m of u is attached to m,
+  *      u itself too, each edge emitted in both orientations;
+  *   5. repartition on u;
+  *   6. distinct, then the (min, degree) per node for the next round —
+  *      all in the round's `localCheckpoint` action, which truncates the
+  *      iterative lineage (swap for reliable `checkpoint` + a checkpoint
+  *      dir on a real cluster).
+  * Each round begins with its own repartition because a checkpoint's
+  * partitioning cannot be relied on: under AQE a `localCheckpoint`
+  * reports `UnknownPartitioning(0)`, so a plan over it re-shuffles for
+  * any keyed operator anyway.
+  *
+  * Stop test: the checkpoint action also observes how many nodes have a
+  * smaller neighbour (m < u) and more than one neighbour. Zero means
+  * every non-root has exactly one neighbour, which is smaller and has
+  * no smaller neighbour itself: each component is a star centred on
+  * its min — a star forest, which both stars map to itself. So zero is
+  * exactly the fixpoint, the loop stops on the round that reaches it
+  * (no confirming round; an input that is already a star forest runs
+  * no round at all), and no set fingerprint can collide.
   *
   * Result: one row per node that appears in any edge — (node,
   * component) with component = MIN node id of the connected component
   * (deterministic, engine-independent: the DuckDB oracle recomputes it
-  * via a recursive-CTE transitive closure).
+  * via a recursive-CTE transitive closure). In the converged forest
+  * that is m on each node's self-loop row, so labeling is a filter.
   */
 object ConnectedComponents {
 
@@ -33,99 +62,68 @@ object ConnectedComponents {
     *                  hitting it RAISES (never a silently-partial
     *                  clustering).
     */
-  def components(edges: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val Seq(uc, vc) = edges.columns.take(2).toSeq
-    // r6: materialize the input edge list ONCE — it feeds both the node
-    // universe below and the symmetrized round-0 set, and in every
-    // production caller `edges` is the full LSH candidate chain, which
-    // would otherwise re-run end to end for the second consumer. The
-    // edge list is id pairs (tiny next to the corpus), the same
-    // localCheckpoint pattern the round loop already uses.
-    val raw = edges.select(col(uc).as("u"), col(vc).as("v")).localCheckpoint(true)
-    // full node universe BEFORE dropping self-loops: a node whose only
-    // edge is (x, x) is a singleton component, not absent (the doc
-    // contract is one row per node appearing in ANY edge; round-4
-    // review). One distinct over the edge endpoints — same magnitude
-    // as the output itself.
-    val allNodes = raw.select(col("u").as("node"))
-      .unionByName(raw.select(col("v").as("node"))).distinct()
-    // r6: the set fingerprint rides the SAME action that materializes
-    // the round's edge set — observe() metrics are computed by
-    // accumulator during the localCheckpoint job, so each round is ONE
-    // Spark job instead of two (checkpoint + separate checksum scan).
-    // At test scale the rounds are pure scheduling overhead, and on a
-    // cluster this halves the number of sequential driver round-trips.
-    def checkpointWithChecksum(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation() // fresh unique name
-      val out = df.observe(obs, count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("x"))
-        .localCheckpoint(true)
-      val r = obs.get
-      (out, (r("n").asInstanceOf[Long], r("x").asInstanceOf[Long]))
-    }
-    var (e, cur) = checkpointWithChecksum(symmetrize(raw.filter(col("u") =!= col("v"))))
-    var prev = (-1L, -1L)
+  def components(edges: DataFrame, maxRounds: Int = 25): DataFrame =
+    componentsWithRounds(edges, maxRounds)._1
+
+  /** [[components]] and the number of rounds it ran. */
+  private[graft] def componentsWithRounds(edges: DataFrame, maxRounds: Int): (DataFrame, Int) = {
+    val Seq(a, b) = edges.columns.take(2).map(col).toSeq
+    var (e, open) = checkpointRound(
+      edges.select(explode(array(pair(a, b), pair(b, a), pair(a, a), pair(b, b))).as("p")))
     var round = 0
-    while (cur != prev && round < maxRounds) {
-      val (e2, c2) = checkpointWithChecksum(smallStar(largeStar(e)))
+    while (open > 0 && round < maxRounds) {
+      val (e2, open2) = checkpointRound(smallStar(largeStar(e)))
       e = e2
-      prev = cur
-      cur = c2
+      open = open2
       round += 1
     }
-    require(cur == prev,
+    require(open == 0,
       s"connected components did not converge in $maxRounds rounds — " +
         "raise maxRounds (bound is ~log2(n) rounds)")
-    // converged ⇒ star forest: every non-root's sole smaller neighbor is
-    // its component min; roots (no smaller neighbor) map to themselves
-    val nonRoots = e.filter(col("v") < col("u"))
-      .select(col("u").as("node"), col("v").as("component"))
-    val labeled = nonRoots.unionByName(
-      nonRoots.select(col("component")).distinct()
-        .select(col("component").as("node"), col("component")))
-    // self-loop-only nodes never enter the star loop: map them to
-    // themselves so the output covers the whole node universe
-    allNodes.join(labeled, Seq("node"), "left")
-      .select(col("node"), coalesce(col("component"), col("node")).as("component"))
+    (e.filter(col("v") === col("u")).select(col("u").as("node"), col("m").as("component")),
+      round)
   }
 
-  private def symmetrize(e: DataFrame): DataFrame =
-    e.unionByName(e.select(col("v").as("u"), col("u").as("v"))).distinct()
+  private def pair(u: Column, v: Column): Column = struct(u.as("u"), v.as("v"))
 
-  /** min(N(u) ∪ {u}) per center node, joined back onto the edges. */
-  private def withMin(e: DataFrame): DataFrame =
-    e.join(
-      e.groupBy("u").agg(min(col("v")).as("_mn"))
-        .select(col("u"), least(col("_mn"), col("u")).as("m")), "u")
+  private val byNode = Window.partitionBy("u")
 
-  /** Large-star: every neighbor v > u is connected to u's min m.
-    *
-    * r6: emitted ORIENTED (u > v always, since m <= center < v) instead
-    * of symmetrized — the only consumer is [[smallStar]], whose first
-    * step re-filters the symmetric set back to exactly this orientation
-    * (symmetrize(X).filter(v < u) == X.distinct for big→small X), so
-    * the union and the doubled rows through the dedup exchange were
-    * pure waste. The round's OUTPUT (smallStar) stays symmetrized, so
-    * loop fixpoint detection and the final star-forest read-out are
-    * unchanged.
+  /** Steps 5-6 over a frame of `p` = (u, v) structs: the (u, v, m)
+    * state, checkpointed, and the number of nodes that keep the graph
+    * from being a star forest, observed on the same action.
+    */
+  private def checkpointRound(pairs: DataFrame): (DataFrame, Long) = {
+    val obs = Observation() // fresh unique name
+    val out = pairs.select(col("p.u").as("u"), col("p.v").as("v"))
+      .repartition(col("u")).distinct()
+      .withColumn("m", min(col("v")).over(byNode))
+      .withColumn("n", count(lit(1)).over(byNode)) // degree + 1 (the self-loop)
+      .observe(obs, count(when(col("v") === col("u") && col("m") < col("u") &&
+        col("n") > 2, 1)).as("open"))
+      .select(col("u"), col("v"), col("m"))
+      .localCheckpoint(true)
+    (out, obs.get("open").asInstanceOf[Long])
+  }
+
+  /** Step 1: (v, m(u)) for every larger neighbour v of u, oriented
+    * big→small (m <= u < v), plus every self-loop.
     */
   private def largeStar(e: DataFrame): DataFrame =
-    withMin(e).filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    e.filter(col("v") >= col("u"))
+      .select(col("v").as("u"), when(col("v") > col("u"), col("m")).otherwise(col("v")).as("v"))
 
-  /** Small-star: over edges oriented big→small, every smaller neighbor
-    * (and u itself) is connected to the min m. (The (u, m) branch's
-    * per-branch dedup is subsumed by symmetrize's distinct — r6.)
+  /** Steps 2-4 over the big→small large-star edges: u's rows are its
+    * smaller neighbours and its self-loop, so their min m is the
+    * small-star centre. Each row v ≠ m emits (v, m) and (m, v) — on the
+    * self-loop row that is u's own edge to m — and each self-loop
+    * re-emits itself.
     */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val d = e.filter(col("v") < col("u"))
-    val dm = withMin(d)
-    symmetrize(
-      dm.filter(col("v") =!= col("m")).select(col("v").as("u"), col("m").as("v"))
-        .unionByName(dm.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")))
-  }
-
+  private def smallStar(ls: DataFrame): DataFrame =
+    ls.repartition(col("u")).distinct()
+      .withColumn("m", min(col("v")).over(byNode))
+      .select(explode(array(
+        when(col("v") =!= col("m"), pair(col("v"), col("m"))),
+        when(col("v") =!= col("m"), pair(col("m"), col("v"))),
+        when(col("v") === col("u"), pair(col("u"), col("u"))))).as("p"))
+      .filter(col("p").isNotNull)
 }

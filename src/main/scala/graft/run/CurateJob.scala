@@ -31,13 +31,17 @@ object CurateJob {
     // and the decontamination n-gram join — feed BOTH writes; they are
     // materialized once, not once per output (round-4 review)
     val (contam, dropped) = graft.PipelineQueries.curationIdFrames(spark, sfDir)
-    graft.PipelineQueries.curateLedgerWith(spark, sfDir, contam, dropped)
-      .coalesce(1).write.mode("overwrite").json(s"$outDir/ledger")
-    // the printed count is observed on the write
+    // the two writes are independent: run them side by side so each
+    // one's small final stages leave no core idle. The printed count is
+    // observed on the curated write.
     val curated = Observation()
-    graft.PipelineQueries.curatedTokensWith(spark, sfDir, contam, dropped)
-      .observe(curated, count(lit(1)).as("n"))
-      .write.mode("overwrite").partitionBy("source").parquet(s"$outDir/curated")
+    TaskRunner.runAll("graft-curate", IndexedSeq(
+      () => graft.PipelineQueries.curateLedgerWith(spark, sfDir, contam, dropped)
+        .coalesce(1).write.mode("overwrite").json(s"$outDir/ledger"),
+      () => graft.PipelineQueries.curatedTokensWith(spark, sfDir, contam, dropped)
+        .observe(curated, count(lit(1)).as("n"))
+        .write.mode("overwrite").partitionBy("source").parquet(s"$outDir/curated")),
+      spark.sparkContext.defaultParallelism)
     val kept = curated.get("n").asInstanceOf[Long]
     println(s"[curate] $sfDir -> $outDir: $kept curated sequences")
   }

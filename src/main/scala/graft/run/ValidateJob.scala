@@ -381,8 +381,10 @@ object ValidateJob {
         .groupBy(col(partitionCol)).agg(count(lit(1)).as("bad_rows"))
         .observe(refObs, coalesce(sum(col("bad_rows")), lit(0L)).as("n"))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/referential_violations"))
-    runAll((globalTasks ++ planned.collect { case (p, Some(w), nowFiles) =>
-      () => validateOne(p, w, nowFiles) }).toIndexedSeq, spark.sparkContext.defaultParallelism)
+    TaskRunner.runAll("graft-validate",
+      (globalTasks ++ planned.collect { case (p, Some(w), nowFiles) =>
+        () => validateOne(p, w, nowFiles) }).toIndexedSeq,
+      spark.sparkContext.defaultParallelism)
 
     // verdict table from the manifest (cheap, driver-side truth), read
     // once every partition task is done
@@ -395,37 +397,6 @@ object ValidateJob {
     // counts of the outputs just written — no table re-scan, no read-back
     println(formatSummary(verdictRows, dupObs.get("n").asInstanceOf[Long],
       refObs.get("n").asInstanceOf[Long]))
-  }
-
-  /** Runs independent tasks, each submitting its own Spark jobs, on
-    * `min(#tasks, parallelism)` daemon threads that take the tasks in
-    * order; Spark's FIFO scheduler hands idle cores to whichever job is
-    * next, so the whole-table checks and the partition scans overlap
-    * instead of each leaving cores idle in its small final stages.
-    * Waits for every task, so no thread outlives the call, then
-    * rethrows the first failure in task order. Tasks must not print: a
-    * caller capturing `Console` sees only its own thread.
-    */
-  private def runAll(tasks: IndexedSeq[() => Unit], parallelism: Int): Unit = {
-    val next = new java.util.concurrent.atomic.AtomicInteger
-    val failures = new Array[Throwable](tasks.size)
-    val threads = (1 to math.min(tasks.size, parallelism)).map { i =>
-      val t = new Thread(() => {
-        var k = next.getAndIncrement()
-        while (k < tasks.size) {
-          try tasks(k)() catch { case e: Throwable => failures(k) = e }
-          k = next.getAndIncrement()
-        }
-      }, s"graft-validate-$i")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    // an interrupted wait interrupts the workers rather than leaving
-    // their jobs running behind the caller's back
-    try threads.foreach(_.join())
-    finally threads.foreach(_.interrupt())
-    failures.find(_ != null).foreach(e => throw e)
   }
 
   /** Human-readable run summary — the engine's pretty console sink

@@ -461,6 +461,41 @@ class PipelineSpec extends SparkSpec {
     assert(row.getSeq[Int](row.fieldIndex("tokens")).length == row.getAs[Int]("n_tok"))
   }
 
+  test("droppedDocIds on sf0.01: the non-root nodes of the near-dup components") {
+    val sf = "/root/testdata/sf0.01"
+    val edges = PipelineQueries.lshPairs(spark, sf).filter(col("is_dup"))
+      .select(col("id_a"), col("id_b"))
+    val got = PipelineQueries.droppedDocIds(spark, sf).collect().map(_.getLong(0)).toSet
+    val viaComponents = graft.pipeline.ConnectedComponents.components(edges)
+      .filter(col("node") =!= col("component")).select(col("node"))
+      .collect().map(_.getLong(0)).toSet
+    assert(got == viaComponents)
+    // and by a driver-side union-find over the same edges
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+    edges.collect().foreach { r =>
+      val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    assert(got.nonEmpty && got == parent.keys.filter(n => find(n) != n).toSet)
+  }
+
+  test("curate on a corpus with no near-dup pair drops nothing at the dedup stage") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_nodup").toString
+    val dupNodes = PipelineQueries.lshPairs(spark, dir).filter(col("is_dup"))
+      .select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
+    docs.join(dupNodes, Seq("doc_id"), "left_anti")
+      .write.parquet(s"$tmp/in/documents.parquet")
+    assert(PipelineQueries.lshPairs(spark, s"$tmp/in").filter(col("is_dup")).isEmpty)
+    Console.withOut(new java.io.PrintStream(new java.io.ByteArrayOutputStream(), true, "UTF-8"))(
+      graft.run.CurateJob.run(spark, s"$tmp/in", s"$tmp/out"))
+    val ledger = spark.read.json(s"$tmp/out/ledger").collect()
+    assert(ledger.nonEmpty)
+    ledger.foreach { r =>
+      assert(r.getAs[Long]("n_final") == r.getAs[Long]("n_clean"), r.getAs[String]("source"))
+    }
+  }
+
   test("source overlap matrix: pair counts partition the verified near-dup pairs") {
     val overlap = PipelineQueries.sourceOverlap(spark, dir).collect()
     val nDup = PipelineQueries.lshPairs(spark, dir).filter(col("is_dup")).count()
