@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.compilex.Barrier
+import graft.compilex.ExactExplode
 import graft.pipeline.TextOps._
 
 /** Training-data pipeline operators over the `documents` and
@@ -183,20 +183,20 @@ object PipelineQueries {
     */
   val LshBucketCap = 64
 
-  /** (doc_id, shingles, band, sig) long form shared by the LSH pair
-    * queries: one shingle projection, 4 band signatures, exploded.
+  /** (doc_id, band, sig) long form shared by the LSH pair queries: one
+    * shingle projection, 4 band signatures, exploded.
     */
-  private[graft] def lshLongFrom(d0: DataFrame): DataFrame =
+  private[graft] def lshLongFrom(d0: DataFrame): DataFrame = {
     // one shingling per doc: the minhash reads the distinct set (a min
     // over a set equals the min over its multiset; empty gives P)
-    Barrier(d0
-      .withColumn("sh", array_distinct(shingles3(col("text"))))
-      .withColumn("_sh", transform(col("sh"), h32(_)))
-      .select(col("doc_id"), col("sh"),
+    val bands = d0
+      .withColumn("_sh", transform(array_distinct(shingles3(col("text"))), h32(_)))
+      .select(col("doc_id"),
         array((0 until 4).map(b => struct(lit(b).as("band"),
-          concat_ws("_", minhash(col("_sh"), 2 * b), minhash(col("_sh"), 2 * b + 1)).as("sig"))): _*).as("bands")))
-      .select(col("doc_id"), col("sh"), explode(col("bands")).as("bs"))
-      .select(col("doc_id"), col("sh"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+          concat_ws("_", minhash(col("_sh"), 2 * b), minhash(col("_sh"), 2 * b + 1)).as("sig"))): _*).as("bands"))
+    ExactExplode(bands, col("doc_id"))(col("bands"), "bs")
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+  }
 
   private def lshLong(s: SparkSession, dir: String): DataFrame = lshLongFrom(docs(s, dir))
 
@@ -210,25 +210,16 @@ object PipelineQueries {
     * cap² (one window count over the SAME (band, sig) shuffle key the
     * join uses — no extra scan of the shingle projection).
     */
-  def lshPairs(s: SparkSession, dir: String): DataFrame = {
-    val d0 = docs(s, dir)
+  def lshPairs(s: SparkSession, dir: String): DataFrame = lshPairsFrom(docs(s, dir), LshBucketCap)
+
+  private[graft] def lshPairsFrom(d0: DataFrame, cap: Int): DataFrame = {
     // the shingle-attach side built as a PLAIN projection of the docs:
-    // deriving it from the band-exploded long frame (the default
-    // overload below) computes the minhash band chain in branches that
-    // only ever read (doc_id, sh) — struct-field pruning cannot reach
-    // inside the exploded band struct (r6; visible in
-    // plans/r06/d_lsh_pairs_after.txt Projects 35/47 pre-fix)
+    // deriving it from the band-exploded long frame computes the minhash
+    // band chain in branches that only ever read (doc_id, sh) —
+    // struct-field pruning cannot reach inside the exploded band struct
+    // (r6; visible in plans/r06/d_lsh_pairs_after.txt Projects 35/47
+    // pre-fix)
     val sh = d0.select(col("doc_id"), array_distinct(shingles3(col("text"))).as("sh"))
-    lshPairsFrom(lshLongFrom(d0), sh, cap = LshBucketCap)
-  }
-
-  private[graft] def lshPairsFrom(longAll: DataFrame, cap: Int): DataFrame =
-    // one (doc_id, sh) row per doc: every doc emits band 0, and sh is
-    // identical across its band copies
-    lshPairsFrom(longAll,
-      longAll.filter(col("band") === 0).select(col("doc_id"), col("sh")), cap)
-
-  private[graft] def lshPairsFrom(longAll: DataFrame, sh: DataFrame, cap: Int): DataFrame = {
     // r6 shape (guide §8: decide with small rows, move big rows once).
     // The old plan carried every doc's shingle ARRAY (KBs per row, x4
     // band copies) through the bucket-cap window exchange AND the bucket
@@ -240,7 +231,7 @@ object PipelineQueries {
     // Jaccard exactly once per unique pair. jac is band-independent, so
     // max-over-collisions == the single computation; row set unchanged.
     val wcnt = Window.partitionBy(col("band"), col("sig"))
-    val long = longAll.select(col("doc_id"), col("band"), col("sig"))
+    val long = lshLongFrom(d0)
       .withColumn("_bn", count(lit(1)).over(wcnt))
       .filter(col("_bn") <= cap)
       .drop("_bn")
@@ -360,20 +351,23 @@ object PipelineQueries {
   private[graft] def isBenchCol: Column =
     substring(md5(col("doc_id").cast("string")), 1, 1) === "0"
 
-  /** The (doc_id, source, ng) frame of one side of the bench split
+  /** The (doc_id, source, ng) rows of one side of the bench split
     * (`bench` = the benchmark slice, else the train side) that every
     * decontamination view derives from — ONE definition of the split +
-    * the 8-gram shingling (d_decontam, contamDocIds, CurateJob all hang
-    * off it). The side filter sits below the fence, which blocks filter
-    * pushdown, so each document's n-grams are built on its side only.
+    * the exploded 8-gram shingling (d_decontam, contamDocIds, CurateJob
+    * all hang off it). The side filter is written above the shingling
+    * projection and the optimizer pushes it below, so each document's
+    * n-grams are built on its side only.
     */
   private[graft] def ngBase(s: SparkSession, dir: String, bench: Boolean): DataFrame =
-    Barrier(docs(s, dir).filter(if (bench) isBenchCol else !isBenchCol)
-      .select(col("doc_id"), col("source"), wordNgramHashes(col("text"), 8).as("ng")))
+    ExactExplode(
+        docs(s, dir).select(col("doc_id"), col("source"), wordNgramHashes(col("text"), 8).as("ng"))
+          .filter(if (bench) isBenchCol else !isBenchCol),
+        col("doc_id"), col("source"))(col("ng"), "ng")
 
   /** The benchmark slice's distinct n-gram set (the broadcast side). */
   private[graft] def benchNgrams(s: SparkSession, dir: String): DataFrame =
-    ngBase(s, dir, bench = true).select(explode(col("ng")).as("ng")).distinct()
+    ngBase(s, dir, bench = true).select(col("ng")).distinct()
 
   /** Row-count ceiling for BROADCASTING the benchmark n-gram set. In
     * production the benchmark side is a bounded eval-suite dim table and
@@ -406,7 +400,7 @@ object PipelineQueries {
   /** Train doc_ids sharing any word-8-gram with the benchmark slice. */
   private[graft] def contamDocIds(s: SparkSession, dir: String): DataFrame =
     joinBenchNgrams(
-        ngBase(s, dir, bench = false).select(col("doc_id"), explode(col("ng")).as("ng")),
+        ngBase(s, dir, bench = false).select(col("doc_id"), col("ng")),
         benchNgrams(s, dir))
       .select(col("doc_id")).distinct()
 
@@ -685,11 +679,10 @@ object PipelineQueries {
     */
   def decontam(s: SparkSession, dir: String): DataFrame = {
     val trainNg = ngBase(s, dir, bench = false)
-      .select(col("doc_id"), col("source"), explode(col("ng")).as("ng"))
     // size-thresholded broadcast-vs-shuffle_hash strategy (joinBenchNgrams)
     val perDocHits = joinBenchNgrams(trainNg, benchNgrams(s, dir))
       .groupBy(col("doc_id"), col("source")).agg(count(lit(1)).as("hits"))
-    // needs no n-grams: counted from the docs, with no fence
+    // needs no n-grams: counted from the docs
     val checked = docs(s, dir).filter(!isBenchCol)
       .groupBy(col("source")).agg(count(lit(1)).as("docs_checked"))
     checked.join(
@@ -713,14 +706,14 @@ object PipelineQueries {
   def repetition(s: SparkSession, dir: String): DataFrame = {
     val w = words(col("text"))
     val bg = wordBigrams(col("text"))
-    val d = Barrier(docs(s, dir).select(col("doc_id"), w.as("w"), bg.as("bg")))
+    val d = docs(s, dir).select(col("doc_id"), w.as("w"), bg.as("bg"))
     val perDoc = d.select(col("doc_id"),
       size(col("w")).as("n_words"),
       dupFrac(col("w")).as("dup_word_frac"),
       size(col("bg")).as("n_bigrams"),
       dupFrac(col("bg")).as("dup_bigram_frac"),
       col("bg"))
-    val top = perDoc.select(col("doc_id"), explode(col("bg")).as("b"))
+    val top = ExactExplode(perDoc, col("doc_id"))(col("bg"), "b")
       .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("n"))
       .groupBy(col("doc_id")).agg(max(col("n")).as("top_n"), sum(col("n")).as("tot"))
       .select(col("doc_id"), round(col("top_n").cast("double") / col("tot"), 6).as("top_bigram_frac"))
@@ -838,9 +831,9 @@ object PipelineQueries {
     * duplicated set, not the corpus.
     */
   def dupNgrams(s: SparkSession, dir: String): DataFrame = {
-    val base = Barrier(docs(s, dir).select(col("doc_id"), col("source"),
-      array_distinct(wordNgramHashes(col("text"), 8)).as("ng")))
-    val ex = base.select(col("doc_id"), col("source"), explode(col("ng")).as("ng"))
+    val base = docs(s, dir).select(col("doc_id"), col("source"),
+      array_distinct(wordNgramHashes(col("text"), 8)).as("ng"))
+    val ex = ExactExplode(base, col("doc_id"), col("source"))(col("ng"), "ng")
     // r6: support counts via ONE window over the exploded frame instead
     // of groupBy(ng) + join-back — the old plan computed the explode
     // (and the md5 8-gram projection behind it) TWICE, once for the
@@ -905,13 +898,12 @@ object PipelineQueries {
     val ng = wordNgramHashes(col("text"), 8)
     val benchId = conv(substring(md5(col("doc_id").cast("string")), 1, 1), 16, 10)
       .cast("int")
-    val base = Barrier(docs(s, dir).select(col("doc_id"), col("source"),
-      benchId.as("bid"), ng.as("ng")))
+    val base = docs(s, dir).select(col("doc_id"), col("source"),
+      benchId.as("bid"), ng.as("ng"))
     // benchmarks: md5 first hex digit 0/1/2 -> three held-out slices
-    val bench = base.filter(col("bid") <= 2)
-      .select(col("bid").as("benchmark"), explode(col("ng")).as("ng")).distinct()
-    val train = base.filter(col("bid") > 2)
-      .select(col("doc_id"), col("source"), explode(col("ng")).as("ng"))
+    val bench = ExactExplode(base.filter(col("bid") <= 2), col("bid").as("benchmark"))(col("ng"), "ng")
+      .distinct()
+    val train = ExactExplode(base.filter(col("bid") > 2), col("doc_id"), col("source"))(col("ng"), "ng")
     train.join(broadcast(bench), Seq("ng"))
       .select(col("source"), col("benchmark"), col("doc_id")).distinct()
       .groupBy(col("source"), col("benchmark"))

@@ -573,9 +573,8 @@ object ConstraintCompiler {
     val fails = filter(checks, c => !c("pass"))
     val base = withProfiles(df, fusedIntArrays)
       .select(col(keyField), col(partField), fails.as("_fails"))
-    // the caller's Observation, when given, is also the explode's fence
     val observed =
-      if (observe == null) Barrier(base)
+      if (observe == null) base
       else base.observe(observe,
         count(lit(1)).as("rows"),
         sum(when(size(col("_fails")) > 0, 1L).otherwise(0L)).as("viol"))
@@ -588,8 +587,7 @@ object ConstraintCompiler {
     def byCid(v: FieldConstraint => String): Column =
       if (fcs.isEmpty) lit(null).cast("string")
       else coalesce(fcs.map(fc => when(col("constraint_id") === fc.id, lit(v(fc)))): _*)
-    observed
-      .select(col(keyField), col(partField), explode(col("_fails")).as("v"))
+    ExactExplode(observed, col(keyField), col(partField))(col("_fails"), "v")
       .select(
         col(keyField).as("doc_id"),
         col("v.cid").as("constraint_id"),

@@ -11,14 +11,7 @@ import org.apache.spark.sql.catalyst.expressions._
   * seed.
   */
 class LambdaInvariantSpec extends SparkSpec {
-
-  /** A split, a regexp, a hash or a higher-order function. */
-  private def perRowWork(e: Expression): Boolean = e match {
-    case _: StringSplit | _: RLike | _: RegExpReplace | _: RegExpExtractBase |
-         _: Md5 | _: Sha1 | _: Sha2 | _: Crc32 | _: HashExpression[_] |
-         _: HigherOrderFunction => true
-    case _ => false
-  }
+  import LambdaInvariantSpec.perRowWork
 
   /** The outermost per-row-work subtrees of `e` that sit in a lambda
     * body and read none of that (innermost) lambda's variables.
@@ -42,5 +35,16 @@ class LambdaInvariantSpec extends SparkSpec {
           .map(_.sql).distinct.map(w => s"$name: $w")
       }
     assert(flagged.isEmpty, flagged.mkString("\n", "\n", ""))
+  }
+}
+
+object LambdaInvariantSpec {
+
+  /** A split, a regexp, a hash or a higher-order function. */
+  def perRowWork(e: Expression): Boolean = e match {
+    case _: StringSplit | _: RLike | _: RegExpReplace | _: RegExpExtractBase |
+         _: Md5 | _: Sha1 | _: Sha2 | _: Crc32 | _: HashExpression[_] |
+         _: HigherOrderFunction => true
+    case _ => false
   }
 }

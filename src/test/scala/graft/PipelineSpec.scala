@@ -148,7 +148,7 @@ class PipelineSpec extends SparkSpec {
     val d = (degenerate ++ Seq(("pair-a", pairText), ("pair-b", pairText)))
       .toDF("doc_id", "text")
     val long = PipelineQueries.lshLongFrom(d)
-    val pairs = PipelineQueries.lshPairsFrom(long, cap = 64).collect()
+    val pairs = PipelineQueries.lshPairsFrom(d, cap = 64).collect()
     // the degenerate bucket is excluded wholesale: no dup-* pair survives,
     // the small bucket still yields its pair — bounded, not silent
     assert(!pairs.exists(r => r.getString(0).startsWith("dup-")),

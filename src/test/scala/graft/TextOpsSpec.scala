@@ -76,22 +76,6 @@ class TextOpsSpec extends SparkSpec {
     spark.read.parquet(s"$dir/texts")
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private val paths = Seq(
-    "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-    "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
-
   test("each builder equals its composed definition on sf0.01 documents and edge texts, interpreted and codegen") {
     for ((path, conf) <- paths; (name, built, composed) <- builders) withConf(conf: _*) {
       val rows = texts.select(col("id"), col("text"), built(col("text")).as("b"),

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare two PlanDump directories after masking what differs run to run:
-expression ids, plan ids, RDD ids and call sites, temp paths, the graft
-barrier's metric names and lambda-variable counters. Prints each file
+expression ids, plan ids, RDD ids and call sites, temp paths, the old
+explode barrier's metric names and lambda-variable counters. Prints each file
 whose masked plan differs and exits 1 if any does.
 Usage: plan_parity.py <dirA> <dirB>
 """
@@ -13,7 +13,8 @@ MASKS = [
     (re.compile(r"RDD\[\d+\] at \w+ at [\w.]+:\d+"), "RDD[N] at CALLSITE"),
     (re.compile(r"\[\d+\]"), "[N]"),
     (re.compile(r"/tmp/\S+?(?=[\s\]/])"), "/tmp/T"),
-    # barrier metric names: graft_barrier_<k> now, fixed *_base names before
+    # barrier metric names, in dumps of commits that still fenced explodes:
+    # graft_barrier_<k> (the Barrier object), fixed *_base names before it
     (re.compile(r"\bgraft_barrier_\d+\b|\b\w+_base\b(?=,)"), "BARRIER"),
     # lambda variables draw names from a process-wide counter, so building
     # lambdas in another order renames every later one (x_75 -> x_80)
