@@ -154,20 +154,10 @@ object PipelineQueries {
   /** LSH: 4 bands x 2 rows; docs sharing a band signature are candidate
     * near-duplicates. Output: per-band bucket sizes for buckets with >1
     * doc (the candidate-pair generator at scale: shuffle key = (band,
-    * sig), join only within buckets).
+    * sig), join only within buckets) — the [[lshOversizedFrom]] count
+    * with a floor of one doc.
     */
-  def lshBuckets(s: SparkSession, dir: String): DataFrame = {
-    val bandCols = (0 until 4).map(b =>
-      concat_ws("_", minhash(col("_sh"), 2 * b), minhash(col("_sh"), 2 * b + 1)).as(s"band$b"))
-    val withBands = docs(s, dir)
-      .withColumn("_sh", shingleHashes(col("text")))
-      .select(col("doc_id") +: bandCols: _*)
-    val long = withBands.select(col("doc_id"),
-      explode(array((0 until 4).map(b => struct(lit(b).as("band"), col(s"band$b").as("sig"))): _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-    long.groupBy(col("band"), col("sig")).agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") > 1)
-  }
+  def lshBuckets(s: SparkSession, dir: String): DataFrame = lshOversizedFrom(lshLong(s, dir), cap = 1)
 
   /** Per-bucket membership cap for LSH pair generation (round-2 VERDICT
     * item 4, the standard LSH skew guard): the within-bucket join is B²
@@ -257,6 +247,9 @@ object PipelineQueries {
   def lshOversizedBuckets(s: SparkSession, dir: String): DataFrame =
     lshOversizedFrom(lshLong(s, dir), LshBucketCap)
 
+  /** (band, sig, n_docs) for every bucket of `longAll` holding more than
+    * `cap` docs.
+    */
   private[graft] def lshOversizedFrom(longAll: DataFrame, cap: Int): DataFrame =
     longAll
       .groupBy(col("band"), col("sig")).agg(count(lit(1)).as("n_docs"))

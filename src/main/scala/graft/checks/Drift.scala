@@ -79,15 +79,16 @@ object Drift {
   }
 
   /** Sketch-based KS: D = max over split points of |CDF_a - CDF_b| where
-    * both CDFs come from mergeable KLL sketches (custom
-    * TypedImperativeAggregate, [[graft.functions.QuantileSketches]]).
+    * both CDFs come from mergeable KLL sketches (Spark's built-in KLL,
+    * composed in [[graft.functions.QuantileSketches]]).
     *
     * Scale story vs [[ksBinned]]: binning needs the value range known up
     * front; the sketch path is range-free (split points derived from the
     * sketches' exact min/max AFTER aggregation) and shuffles one ~KB
     * sketch state per partition regardless of the value domain — the
     * right shape when `field` is unbounded or heavy-tailed at 10^12 rows.
-    * Rank error ≤ ~1.65% per side at k=200 bounds the KS estimate error.
+    * Rank error ≤ ~1.65% per side at k=200 (plus ≤ 0.001 from kll_cdf's
+    * rank grid) bounds the KS estimate error.
     */
   def ksSketch(current: DataFrame, baseline: DataFrame, field: String = "n_tok", nSplits: Int = 64): DataFrame = {
     import graft.functions.QuantileSketches._
@@ -101,13 +102,11 @@ object Drift {
       .withColumn("splits", transform(sequence(lit(1), lit(nSplits)),
         i => col("lo") + i.cast("double") * (col("hi") - col("lo")) / lit((nSplits + 1).toDouble)))
       .select(
-        // degenerate inputs must not reach getCDF: an EMPTY side has
-        // NaN min/max (NaN splits throw SketchesArgumentException) → ks
-        // is undefined, yield null; a CONSTANT field on both sides
-        // (lo == hi, non-increasing splits also rejected by getCDF)
-        // means both distributions are the same point mass → ks = 0
-        // (round-4 review). The when() branches evaluate lazily, so the
-        // CDF probe only runs on well-formed splits.
+        // degenerate inputs: an EMPTY side has NaN min/max → ks is
+        // undefined, yield null; a CONSTANT field on both sides
+        // (lo == hi) means both distributions are the same point mass
+        // → ks = 0 (round-4 review). The when() branches evaluate
+        // lazily, so the CDF probe only runs on well-formed splits.
         when(na > 0 && nb > 0 && col("lo") < col("hi"),
           round(aggregate(
             zip_with(kll_cdf(col("sa"), col("splits")), kll_cdf(col("sb"), col("splits")),

@@ -16,13 +16,14 @@ import org.apache.spark.sql.functions._
   *     duplicates exist (alert/abort early); a near-equal estimate
   *     certifies NOTHING — at rsd=0.01 the sketch noise (~1%) can hide
   *     up to ~1% duplicate keys. Certification always requires phase 2.
-  *  2. Exact phase (only when needed): two-phase salted aggregation —
-  *     first `groupBy(salt, key)` (salt = hash(key) mod S spreads any
-  *     hot key ranges across S*P reducers), then re-agg by key. For a
-  *     true key column the first phase's map-side combine already
-  *     collapses almost everything; the salt bounds the worst case where
-  *     one key value repeats billions of times (which would otherwise
-  *     pin one reducer).
+  *  2. Exact phase, which ValidateJob always runs (the only
+  *     certification): two-phase salted aggregation — first
+  *     `groupBy(salt, key)` (salt = input partition id mod S spreads a
+  *     hot key across S reducers), then re-agg by key. For a true key
+  *     column the first phase's map-side combine already collapses
+  *     almost everything; the salt bounds the worst case where one key
+  *     value repeats billions of times (which would otherwise pin one
+  *     reducer).
   */
 object Uniqueness {
 

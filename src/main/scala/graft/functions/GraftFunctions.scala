@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.graftbridge.FunctionBridge
+import org.apache.spark.sql.graftbridge.{ColumnBridge, FunctionBridge}
 
 /** The engine's SQL-facing function surface: every custom Catalyst
   * expression/aggregate, with name + builder, consumable two ways:
@@ -42,6 +42,13 @@ object GraftFunctions {
     i.toShort
   }
 
+  /** A Column-API composition as a SQL builder: the KLL functions are
+    * compositions of Spark's built-in `kll_sketch_*` functions, which the
+    * analyzer resolves in the returned tree.
+    */
+  private def composed(f: Seq[Column] => Column)(args: Seq[Expression]): Expression =
+    ColumnBridge.converted(f(args.map(ColumnBridge.column)))
+
   /** (name, usage, builder) triples for every custom function. */
   val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("token_stats", "token_stats(arr) - single-pass struct(tmin,tmax,dups,n) of an int array",
@@ -62,16 +69,16 @@ object GraftFunctions {
       args => { arity("tdigest_summary", 1, args); QuantileSketches.TDigestSummary(args.head) }),
     ("kll_agg", "kll_agg(col[, k]) - mergeable KLL quantile sketch (provable rank error)",
       args => args match {
-        case Seq(c)    => QuantileSketches.KllAgg(c)
-        case Seq(c, k) => QuantileSketches.KllAgg(c, intLit(k))
+        case Seq(_)    => composed(a => QuantileSketches.kll_agg(a.head))(args)
+        case Seq(_, k) => composed(a => QuantileSketches.kll_agg(a.head, intLit(k)))(args)
         case _ => throw new IllegalArgumentException("kll_agg expects 1 or 2 arguments")
       }),
-    ("kll_quantiles", "kll_quantiles(sketch, probs) - quantile values at the given ranks",
-      args => { arity("kll_quantiles", 2, args); QuantileSketches.KllQuantiles(args(0), args(1)) }),
+    ("kll_quantiles", "kll_quantiles(sketch, probs) - quantile values at the given literal ranks",
+      args => { arity("kll_quantiles", 2, args); composed(a => QuantileSketches.kll_quantiles(a(0), a(1)))(args) }),
     ("kll_cdf", "kll_cdf(sketch, splits) - CDF values at the given split points",
-      args => { arity("kll_cdf", 2, args); QuantileSketches.KllCdf(args(0), args(1)) }),
+      args => { arity("kll_cdf", 2, args); composed(a => QuantileSketches.kll_cdf(a(0), a(1)))(args) }),
     ("kll_summary", "kll_summary(sketch) - exact struct(n,min,max) carried by the sketch",
-      args => { arity("kll_summary", 1, args); QuantileSketches.KllSummary(args.head) }),
+      args => { arity("kll_summary", 1, args); composed(a => QuantileSketches.kll_summary(a.head))(args) }),
     ("regex_valid", "regex_valid(s) - true iff s compiles as a (Java) regular expression",
       args => { arity("regex_valid", 1, args); RegexValid(args.head) }),
     ("nfc_normalize", "nfc_normalize(s) - Unicode NFC canonical normalization of a string",

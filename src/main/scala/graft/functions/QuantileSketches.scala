@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.tdigest.TDigestDouble
 import org.apache.spark.sql.Column
@@ -13,20 +12,26 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Mergeable quantile-sketch aggregates over DataSketches (jar verified in
-  * /opt/spark/jars): the BASELINE.json north star names "token-length
-  * histograms via t-digest" explicitly; SURVEY.md §4.3.5 defers them
-  * behind percentile_approx until a custom TypedImperativeAggregate is
-  * warranted. These are that aggregate.
+/** Mergeable quantile sketches: t-digest and KLL, both DataSketches
+  * (BASELINE.json's north star names "token-length histograms via
+  * t-digest").
   *
-  * Scale design: classic partial+final sketch aggregation — each executor
-  * folds its partitions into a local sketch (`update`), only the
-  * serialized sketch states (~KB, independent of row count) cross the
-  * wire, and the final merge is associative+commutative. At 10^12 rows
-  * the shuffled bytes for a full-table quantile profile are
-  * #partitions × sketch_size, not data-sized. Both sketches carry exact
+  * - t-digest is a custom TypedImperativeAggregate ([[TDigestAgg]]) with
+  *   quantile/CDF/summary extractors: Spark ships no t-digest.
+  * - KLL is Spark 4.1's built-in `kll_sketch_agg_double` family. The
+  *   `kll_*` functions below are compositions of it that add only what
+  *   the built-ins lack (see the KLL section).
+  *
+  * KLL has a provable worst-case rank error (~1.65% at k=200) where
+  * t-digest's is empirical; callers pick KLL for guarantees, t-digest
+  * for extreme-tail resolution.
+  *
+  * Scale design: classic partial+final sketch aggregation. Each executor
+  * folds its partitions into a local sketch, only the serialized sketch
+  * states (~KB, independent of row count) cross the wire, and the final
+  * merge is associative and commutative. Both sketches carry exact
   * n/min/max alongside the approximate quantile surface, so the oracle
-  * can pin the exact fields while tests bound the approximate ones.
+  * pins the exact fields while tests bound the approximate ones.
   *
   * Reference seed: minItems/maxItems (PJS:_keywords.py:194-203) lifted
   * from a per-row bound to a full distribution (SURVEY.md §2.5).
@@ -124,90 +129,6 @@ object QuantileSketches {
     override def prettyName: String = "tdigest_summary"
   }
 
-  // ---------------------------------------------------------------------- KLL
-
-  /** KLL quantile sketch aggregate → serialized KllDoublesSketch
-    * (BinaryType). KLL has provable worst-case rank error (~1.65% at
-    * k=200) where t-digest's is empirical; we ship both and let the
-    * caller choose (KLL for guarantees, t-digest for extreme-tail
-    * resolution).
-    */
-  case class KllAgg(
-      child: Expression,
-      k: Int = 200,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
-
-    override def createAggregationBuffer(): KllDoublesSketch = KllDoublesSketch.newHeapInstance(k)
-
-    override def update(buf: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-      val v = child.eval(input)
-      if (v != null) buf.update(numeric(v))
-      buf
-    }
-
-    override def merge(buf: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-      buf.merge(other); buf
-    }
-
-    override def eval(buf: KllDoublesSketch): Any = buf.toByteArray
-    override def serialize(buf: KllDoublesSketch): Array[Byte] = buf.toByteArray
-    override def deserialize(bytes: Array[Byte]): KllDoublesSketch =
-      KllDoublesSketch.heapify(Memory.wrap(bytes))
-
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    override def withNewMutableAggBufferOffset(o: Int): KllAgg = copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): KllAgg = copy(inputAggBufferOffset = o)
-    override protected def withNewChildInternal(c: Expression): KllAgg = copy(child = c)
-    override def prettyName: String = "kll_agg"
-  }
-
-  /** quantiles(serialized KLL, probs) → array<double> (INCLUSIVE rank). */
-  case class KllQuantiles(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullSafeEval(bin: Any, probs: Any): Any = {
-      val s = KllDoublesSketch.heapify(Memory.wrap(bin.asInstanceOf[Array[Byte]]))
-      val ps = probs.asInstanceOf[ArrayData].toDoubleArray()
-      new GenericArrayData(ps.map(p => if (s.isEmpty) Double.NaN else s.getQuantile(p)))
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): KllQuantiles =
-      copy(left = l, right = r)
-    override def prettyName: String = "kll_quantiles"
-  }
-
-  /** CDF of a serialized KLL sketch at split points → array<double>. */
-  case class KllCdf(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullSafeEval(bin: Any, splits: Any): Any = {
-      val s = KllDoublesSketch.heapify(Memory.wrap(bin.asInstanceOf[Array[Byte]]))
-      val ss = splits.asInstanceOf[ArrayData].toDoubleArray()
-      if (s.isEmpty) new GenericArrayData(ss.map(_ => Double.NaN))
-      else new GenericArrayData(s.getCDF(ss))
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): KllCdf =
-      copy(left = l, right = r)
-    override def prettyName: String = "kll_cdf"
-  }
-
-  /** Exact (n, min, max) carried by a serialized KLL sketch. */
-  case class KllSummary(child: Expression) extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = StructType(Seq(
-      StructField("n", LongType, nullable = false),
-      StructField("min", DoubleType, nullable = false),
-      StructField("max", DoubleType, nullable = false)))
-    override def nullSafeEval(bin: Any): Any = {
-      val s = KllDoublesSketch.heapify(Memory.wrap(bin.asInstanceOf[Array[Byte]]))
-      val (mn, mx) = if (s.isEmpty) (Double.NaN, Double.NaN) else (s.getMinItem, s.getMaxItem)
-      InternalRow(s.getN, mn, mx)
-    }
-    override protected def withNewChildInternal(c: Expression): KllSummary = copy(child = c)
-    override def prettyName: String = "kll_summary"
-  }
-
   // -------------------------------------------------------------- Column API
 
   private def numeric(v: Any): Double = v match {
@@ -230,12 +151,47 @@ object QuantileSketches {
   def tdigest_summary(sketch: Column): Column =
     ColumnBridge.column(TDigestSummary(ColumnBridge.expression(sketch)))
 
-  def kll_agg(c: Column, k: Int = 200): Column =
-    ColumnBridge.column(KllAgg(ColumnBridge.expression(c), k).toAggregateExpression())
+  // ---------------------------------------------------------------------- KLL
+  // Spark's built-in KLL sketch (DataSketches KLL doubles, INCLUSIVE ranks; k=200
+  // has ~1.65% worst-case rank error). On top of the built-ins: a double
+  // cast (the aggregate rejects INT), NaN from an empty sketch (the
+  // built-in extractors throw on one), and a CDF at computed split points
+  // (the built-in extractors take literal ranks and quantiles only).
+  import org.apache.spark.sql.functions._
+
+  def kll_agg(c: Column, k: Int = 200): Column = kll_sketch_agg_double(c.cast("double"), k)
+
+  private def nonEmpty(sketch: Column, v: Column, empty: Column): Column =
+    when(kll_sketch_get_n_double(sketch) > 0, v).otherwise(empty)
+
+  private def nanArray(n: Column): Column = array_repeat(lit(Double.NaN), n)
+
+  /** quantiles(sketch, literal probs) → array<double>; NaNs when empty. */
   def kll_quantiles(sketch: Column, probs: Column): Column =
-    ColumnBridge.column(KllQuantiles(ColumnBridge.expression(sketch), ColumnBridge.expression(probs)))
-  def kll_cdf(sketch: Column, splits: Column): Column =
-    ColumnBridge.column(KllCdf(ColumnBridge.expression(sketch), ColumnBridge.expression(splits)))
-  def kll_summary(sketch: Column): Column =
-    ColumnBridge.column(KllSummary(ColumnBridge.expression(sketch)))
+    nonEmpty(sketch, kll_sketch_get_quantile_double(sketch, probs), nanArray(size(probs)))
+
+  /** Exact (n, min, max): the quantiles at ranks 0 and 1 are the exact
+    * min and max the sketch keeps. NaN min/max when empty.
+    */
+  def kll_summary(sketch: Column): Column = struct(
+    kll_sketch_get_n_double(sketch).as("n"),
+    nonEmpty(sketch, kll_sketch_get_quantile_double(sketch, lit(0.0)), lit(Double.NaN)).as("min"),
+    nonEmpty(sketch, kll_sketch_get_quantile_double(sketch, lit(1.0)), lit(Double.NaN)).as("max"))
+
+  /** Ranks at which [[kll_cdf]] reads the sketch's quantile function. */
+  private val CdfGrid = 1000
+
+  /** CDF at split points (any expression) → array<double> of length
+    * #splits + 1, the last entry 1.0; NaNs (#splits) when empty. A
+    * sketch rank of x is at least j/m iff its quantile at j/m is ≤ x, so
+    * counting the quantiles at ranks 1/m..1 that are ≤ x gives
+    * floor(m·rank(x))/m with m = [[CdfGrid]]: at most 0.001 below the
+    * sketch's own rank.
+    */
+  def kll_cdf(sketch: Column, splits: Column): Column = {
+    val grid = kll_sketch_get_quantile_double(sketch, typedLit((1 to CdfGrid).map(_.toDouble / CdfGrid).toArray))
+    val ranks = transform(array(grid), qs =>
+      transform(splits, x => size(filter(qs, _ <= x)) / CdfGrid)).getItem(0)
+    nonEmpty(sketch, concat(ranks, array(lit(1.0))), nanArray(size(splits)))
+  }
 }

@@ -41,7 +41,7 @@ import graft.gen.TokenData
   *    is a DataSketches sketch (no fixed per-query cost), and the
   *    summary's global counts are observed on the writes (no read-back).
   *
-  * Args: --table <path> --out <dir> [--checkpoint <dir>] [--salt N]
+  * Args: --table <path> --out <dir> [--checkpoint <dir>]
   *       [--partition-col source] [--suite <doc.json>]
   *       [--suite-resources a.json,b.json]
   */
@@ -262,7 +262,7 @@ object ValidateJob {
     * first failure is rethrown after every task has finished.
     */
   def run(spark: SparkSession, tablePath: String, outDir: String, checkpointDir: String,
-          suite: Suite = NorthStar.suite, partitionCol: String = "source", salt: Int = 64): Unit = {
+          suite: Suite = NorthStar.suite, partitionCol: String = "source"): Unit = {
     val hash = suiteHash(suite)
     val table = spark.read.parquet(tablePath)
     // fuse the single-pass TokenStats profile for every array<int>
@@ -374,7 +374,7 @@ object ValidateJob {
           .toDF("rows", "approx_distinct", "sketch_suspects_dups")
           .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/uniqueness_prefilter")
       },
-      () => Uniqueness.duplicateKeys(table, "doc_id", salt)
+      () => Uniqueness.duplicateKeys(table, "doc_id")
         .observe(dupObs, count(lit(1)).as("n"))
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dup_doc_ids"),
       () => Referential.violations(table, TokenData.allowedSources(spark))
@@ -387,9 +387,18 @@ object ValidateJob {
       spark.sparkContext.defaultParallelism)
 
     // verdict table from the manifest (cheap, driver-side truth), read
-    // once every partition task is done
-    val verdictRows = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
-      .map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
+    // once every partition task is done, for the partitions that exist
+    // now. A partition whose directory is gone loses its violations
+    // output and gets a manifest line under no suite hash, so a
+    // directory that reappears is validated again instead of skipped.
+    val (current, removed) = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
+      .partition { case (p, _) => parts.contains(p) }
+    removed.foreach { case (p, _) =>
+      val dir = new org.apache.hadoop.fs.Path(s"$outDir/violations/partition=${escapePathName(p)}")
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+      appendManifest(checkpointDir, ManifestEntry(p, "", 0L, 0L, 0L, System.currentTimeMillis(), Nil))
+    }
+    val verdictRows = current.map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
     verdictRows.toDF("partition", "rows", "violations", "pass")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/verdicts")
 
@@ -437,19 +446,34 @@ object ValidateJob {
       resourcePaths.map(slurp), spark.read.parquet(tablePath).columns.toSeq)
   }
 
+  private val Options =
+    Set("--table", "--out", "--checkpoint", "--partition-col", "--suite", "--suite-resources")
+
+  /** `main`'s `--key value` pairs. Throws IllegalArgumentException on an
+    * unknown key, a key with no value, a missing --table/--out, or
+    * --suite-resources without --suite.
+    */
+  def parseArgs(args: Seq[String]): Map[String, String] = {
+    val a = args.grouped(2).map { kv =>
+      require(Options(kv.head), s"unknown option: ${kv.head}")
+      require(kv.size == 2, s"option ${kv.head} has no value")
+      kv.head -> kv(1)
+    }.toMap
+    Seq("--table", "--out").foreach(k => require(a.contains(k), s"$k required"))
+    require(a.contains("--suite") || !a.contains("--suite-resources"), "--suite-resources needs --suite")
+    a
+  }
+
   def main(args: Array[String]): Unit = {
-    val a = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val table = a.getOrElse("--table", throw new IllegalArgumentException("--table required"))
-    val out = a.getOrElse("--out", throw new IllegalArgumentException("--out required"))
+    val a = parseArgs(args.toSeq)
+    val (table, out) = (a("--table"), a("--out"))
     val ckpt = a.getOrElse("--checkpoint", s"$out/_checkpoint")
     val spark = graft.GraftSession.create("graft-validate")
     val suite = a.get("--suite")
       .map(p => loadSuite(spark, table, p,
         a.get("--suite-resources").map(_.split(",").toSeq).getOrElse(Nil)))
       .getOrElse(NorthStar.suite)
-    run(spark, table, out, ckpt, suite = suite,
-      partitionCol = a.getOrElse("--partition-col", "source"),
-      salt = a.getOrElse("--salt", "64").toInt)
+    run(spark, table, out, ckpt, suite = suite, partitionCol = a.getOrElse("--partition-col", "source"))
     spark.stop()
   }
 }

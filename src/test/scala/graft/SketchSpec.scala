@@ -67,6 +67,24 @@ class SketchSpec extends SparkSpec {
     assert(ns === globalN)
   }
 
+  test("per-source kll_agg sketches merged with kll_merge_agg_double equal the global sketch") {
+    val xs = toks.select("n_tok").as[Int].collect()
+    val merged = toks.groupBy("source").agg(kll_agg(col("n_tok")).as("s"))
+      .agg(kll_merge_agg_double(col("s")).as("s"))
+      .select(kll_summary(col("s")).as("sum"), kll_quantiles(col("s"), array(lit(0.25), lit(0.5), lit(0.75))).as("q"))
+      .head()
+    val global = toks.agg(kll_agg(col("n_tok")).as("s")).select(kll_summary(col("s"))).head().getStruct(0)
+    val s = merged.getStruct(0)
+    assert(toks.select("source").distinct().count() > 1)
+    assert((s.getLong(0), s.getDouble(1), s.getDouble(2)) ===
+      ((global.getLong(0), global.getDouble(1), global.getDouble(2))))
+    assert(s.getLong(0) === xs.length.toLong)
+    for ((p, q) <- Seq(0.25, 0.5, 0.75).zip(merged.getSeq[Double](1))) {
+      val rank = xs.count(_ <= q).toDouble / xs.length
+      assert(math.abs(rank - p) < 0.03, s"merged KLL p=$p got value $q with true rank $rank")
+    }
+  }
+
   test("sketch-based KS drift: same distribution ~0, shifted distribution large") {
     val a = toks
     val b = toks.withColumn("n_tok", col("n_tok") + lit(64))

@@ -188,6 +188,50 @@ class ValidateJobSpec extends SparkSpec {
       "validated-empty partition must skip on the next run")
   }
 
+  test("a removed partition leaves the verdicts, the summary and the violations output") {
+    val table = tmp("rm_table"); val out = tmp("rm_out"); val ckpt = tmp("rm_ckpt")
+    new PartitionedParquetIO("source").write(TokenData.tokenTable(spark, 3000, 4), table)
+    ValidateJob.run(spark, table, out, ckpt)
+    val forumsOut = Paths.get(out, "violations", "partition=forums")
+    assert(Files.exists(forumsOut))
+
+    val aside = tmp("rm_aside")
+    Files.move(Paths.get(table, "source=forums"), Paths.get(aside))
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(ValidateJob.run(spark, table, out, ckpt))
+    val dirs = new java.io.File(table).listFiles().filter(_.isDirectory)
+      .map(_.getName.stripPrefix("source=")).toSet
+    assert(!dirs.contains("forums"))
+    assert(spark.read.parquet(s"$out/verdicts").collect().map(_.getString(0)).toSet == dirs)
+    val printedRows = """rows: (\d+)""".r.findFirstMatchIn(buf.toString("UTF-8"))
+      .getOrElse(fail(s"no summary in:\n$buf")).group(1).toLong
+    assert(printedRows == spark.read.parquet(table).count())
+    assert(!Files.exists(forumsOut), "the removed partition's violations must be deleted")
+
+    // the same directory coming back is validated again, not skipped
+    // against its old manifest line
+    Files.move(Paths.get(aside), Paths.get(table, "source=forums"))
+    ValidateJob.run(spark, table, out, ckpt)
+    assert(Files.exists(forumsOut))
+    val v = spark.read.parquet(s"$out/verdicts").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(v("forums") == spark.read.parquet(table).filter(col("source") === "forums").count())
+  }
+
+  test("main's argument parser rejects unknown keys and dangling arguments") {
+    val base = Seq("--table", "t", "--out", "o")
+    assert(ValidateJob.parseArgs(base ++ Seq("--suite", "s.json")) ==
+      Map("--table" -> "t", "--out" -> "o", "--suite" -> "s.json"))
+    def rejects(args: Seq[String], named: String): Unit = {
+      val e = intercept[IllegalArgumentException](ValidateJob.parseArgs(args))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+    rejects(base ++ Seq("--suit", "s.json"), "--suit")
+    rejects(base ++ Seq("--checkpoint"), "--checkpoint")
+    rejects(base ++ Seq("--salt", "64"), "--salt")
+    rejects(Seq("--table", "t"), "--out")
+    rejects(base ++ Seq("--suite-resources", "r.json"), "--suite-resources")
+  }
+
   test("torn manifest line cannot merge into the next record") {
     val ckpt = tmp("torn")
     Files.createDirectories(Paths.get(ckpt))
