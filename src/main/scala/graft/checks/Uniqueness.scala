@@ -1,6 +1,6 @@
 package graft.checks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Global key-uniqueness check — `uniqueItems` semantics
@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale design:
   *  1. HLL pre-filter: a DataSketches HLL estimate of the key
-  *     ([[approxDistinct]]) vs `count(*)` in one partial+final agg (no
-  *     shuffle of raw rows — the sketches merge).
+  *     ([[approxDistinct]]) vs `count(*)`, observed on phase 2's input
+  *     scan (no scan of its own, no shuffle of raw rows — the sketches
+  *     merge).
   *     FAST-FAIL SIGNAL ONLY: an estimate far below the row count proves
   *     duplicates exist (alert/abort early); a near-equal estimate
   *     certifies NOTHING — at rsd=0.01 the sketch noise (~1%) can hide
@@ -48,22 +49,23 @@ object Uniqueness {
   def approxDistinct(c: Column, rsd: Double): Column =
     hll_sketch_estimate(hll_sketch_agg(c, hllLgK(rsd)))
 
-  /** Phase 1: sketch-only pre-filter. rsd=0.01 → ~1% relative error.
+  /** Phase 1: sketch-only pre-filter, observed on a scan that runs anyway
+    * (ValidateJob: [[duplicateKeys]]' input). Returns `df` with `count(1)` and
+    * the key's sketch estimate observed, and a function that waits for the
+    * first action over it to finish and returns the verdict. rsd=0.01 → ~1% error.
     * `mayHaveDups = true` is a definite early-warning; `false` means
     * only "no duplicates VISIBLE above the sketch noise" — callers must
     * still run [[duplicateKeys]] to certify (round-1 ADVICE, high).
     */
-  def hllPrefilter(df: DataFrame, key: String, rsd: Double = 0.01): HllVerdict = {
-    val r = df.agg(
-      count(lit(1)).as("rows"),
-      approxDistinct(col(key), rsd).as("ad")).head()
-    val rows = r.getLong(0); val ad = r.getLong(1)
-    // duplicates LIKELY iff the estimate sits below the row count by
-    // MORE than sketch noise (3·rsd). A tighter 0.1%-of-rows disjunct
-    // used to sit here — inside the sketch's ~1% error band, so it
-    // fired on perfectly clean tables about half the time (round-4
-    // review); `true` must stay a definite early-warning.
-    HllVerdict(rows, ad, ad < (rows * (1 - 3 * rsd)).toLong)
+  def observePrefilter(df: DataFrame, key: String, rsd: Double = 0.01): (DataFrame, () => HllVerdict) = {
+    val obs = Observation(s"hll-prefilter-${System.nanoTime()}")
+    (df.observe(obs, count(lit(1)).as("rows"), approxDistinct(col(key), rsd).as("ad")), () => {
+      val rows = obs.get("rows").asInstanceOf[Long]; val ad = obs.get("ad").asInstanceOf[Long]
+      // duplicates LIKELY iff the estimate sits below the row count by
+      // MORE than sketch noise (3·rsd): a tighter bound fires on clean
+      // tables, and `true` must stay a definite early-warning
+      HllVerdict(rows, ad, ad < (rows * (1 - 3 * rsd)).toLong)
+    })
   }
 
   /** Phase 2: exact duplicate keys via salted two-phase aggregation.

@@ -15,13 +15,13 @@ import graft.gen.TokenData
   * lineage/metrics manifest (BASELINE.json north_rule; no reference
   * analogue — the CLI revalidates everything on rerun).
   *
-  * Checkpoint design: one JSONL manifest line per completed partition
-  * `(partition, suiteHash, rows, violations, wallMs, ts)`. On restart,
-  * completed partitions with a matching suiteHash are pruned from the
-  * scan — partition-filter pushdown does the skipping at file-listing
-  * time, so a 99%-done 10^12-row run re-reads ~nothing. The manifest is
-  * append-only; the LAST line per partition wins (a retried partition
-  * simply re-appends).
+  * Checkpoint design: one append-only JSONL journal; the LAST record per
+  * partition wins. A partition task appends an uncertified record (no
+  * suite hash) before its violations write and its completion record
+  * `(partition, suiteHash, rows, violations, wallMs, ts, files)` after it,
+  * so a crash in between makes the next run revalidate it in full. On
+  * restart, completed partitions with a matching suiteHash are pruned
+  * from the scan at file-listing time: a 99%-done 10^12-row run re-reads ~nothing.
   *
   * Scale properties (round-2 fixes of round-1 VERDICT items 3):
   *  - partition DISCOVERY lists `partCol=value` directory names from the
@@ -31,15 +31,15 @@ import graft.gen.TokenData
   *    rows stream past (was: one agg scan + one violations-write scan);
   *  - the fused TokenStats path (`Set("tokens")`) is on, so the token
   *    array is profiled once per row across all constraints;
-  *  - the partition scans and the three whole-table checks (HLL
-  *    pre-filter, exact `doc_id` uniqueness, referential integrity) are
-  *    independent Spark jobs, submitted concurrently from a per-run
-  *    pool of `min(#tasks, defaultParallelism)` threads, so Spark's FIFO
+  *  - the partition scans and the two whole-table checks (exact
+  *    `doc_id` uniqueness, referential integrity) are independent Spark
+  *    jobs, submitted concurrently from a per-run pool of
+  *    `min(#tasks, defaultParallelism)` threads, so Spark's FIFO
   *    scheduler fills the cores that one job's small stages leave idle;
   *  - a partition slice is read with the table's schema (no
-  *    footer-reading inference job per partition), the HLL pre-filter
-  *    is a DataSketches sketch (no fixed per-query cost), and the
-  *    summary's global counts are observed on the writes (no read-back).
+  *    footer-reading inference job per partition), and the HLL
+  *    pre-filter and the summary's global counts are observed on the
+  *    writes (no scan or read-back of their own).
   *
   * Args: --table <path> --out <dir> [--checkpoint <dir>]
   *       [--partition-col source] [--suite <doc.json>]
@@ -78,7 +78,11 @@ object ValidateJob {
     */
   private val manifestMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  def completedDetail(checkpointDir: String, hash: String): Map[String, PartState] = {
+  def completedDetail(checkpointDir: String, hash: String): Map[String, PartState] =
+    lastRecords(checkpointDir, hash).collect { case (p, Some(st)) => p -> st }
+
+  /** Every partition the manifest names; `None`: last record uncertified or under another hash. */
+  private def lastRecords(checkpointDir: String, hash: String): Map[String, Option[PartState]] = {
     val f = Paths.get(checkpointDir, "manifest.jsonl")
     if (!Files.exists(f)) return Map.empty
     val byPart = scala.collection.mutable.LinkedHashMap.empty[String, Option[PartState]]
@@ -112,19 +116,14 @@ object ValidateJob {
       }
       }
     }
-    byPart.collect { case (p, Some(st)) => p -> st }.toMap
+    byPart.toMap
   }
 
-  /** Recovery marker for one partition's in-flight incremental append.
-    * Written just before the SaveMode.Append violations write, deleted
-    * just after the manifest line lands; found at startup it means a
-    * prior attempt crashed inside that bracket and the partition must
-    * be fully re-validated (Overwrite), because the append may have
-    * landed without its manifest line and a re-run would duplicate
-    * violation rows.
-    */
-  private[graft] def intentFile(checkpointDir: String, p: String): java.nio.file.Path =
-    Paths.get(checkpointDir, "intents", escapePathName(p) + ".intent")
+  /** The record that leaves `p` uncertified (no suite hash: the next run revalidates it
+    * in full): a partition task appends it before its violations write, and a removed
+    * partition gets it so that its directory, should it come back, is validated. */
+  private[graft] def uncertified(p: String): ManifestEntry =
+    ManifestEntry(p, "", 0L, 0L, 0L, System.currentTimeMillis(), Nil)
 
   def appendManifest(checkpointDir: String, e: ManifestEntry): Unit = {
     Files.createDirectories(Paths.get(checkpointDir))
@@ -263,6 +262,12 @@ object ValidateJob {
     */
   def run(spark: SparkSession, tablePath: String, outDir: String, checkpointDir: String,
           suite: Suite = NorthStar.suite, partitionCol: String = "source"): Unit = {
+    // an `intents/<p>.intent` file of an older build marks a write that may
+    // have half-landed under a certified record, which this build would append onto
+    val stale = Option(new java.io.File(checkpointDir, "intents").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".intent")).map(n => unescapePathName(n.stripSuffix(".intent")))
+    if (stale.nonEmpty) throw new IllegalStateException(s"checkpoint $checkpointDir holds intent markers " +
+      s"of an older build (partitions ${stale.sorted.mkString(", ")}); rerun with a fresh checkpoint")
     val hash = suiteHash(suite)
     val table = spark.read.parquet(tablePath)
     // fuse the single-pass TokenStats profile for every array<int>
@@ -300,11 +305,6 @@ object ValidateJob {
       val nowFiles = listPartFiles(spark, tablePath, partitionCol, p)
       val full = Some(Work(nowFiles, None))
       val plan = done.get(p) match {
-        case _ if Files.exists(intentFile(checkpointDir, p)) =>
-          // a previous attempt crashed between its violations append
-          // and its manifest line — that append may have half-landed, so
-          // only a full Overwrite re-validate is sound (round-4 review)
-          full
         case Some(st) =>
           if (st.files == nowFiles.toSet) None
           else if (nowFiles.isEmpty)
@@ -321,10 +321,10 @@ object ValidateJob {
     println(s"[validate] partitions=${parts.length} skip=$nSkip incremental=$nInc " +
       s"full=${parts.length - nSkip - nInc}")
 
-    // One task per partition to validate: intent marker -> one-scan
-    // validate -> manifest line -> marker deleted. A task that throws
-    // leaves its marker, so the next run revalidates that partition in
-    // full.
+    // One task per partition to validate: uncertified record -> one-scan
+    // validate -> completion record. A task that throws leaves the
+    // uncertified record last, so the next run revalidates that
+    // partition in full.
     val manifestLock = new Object
     def validateOne(p: String, w: Work, nowFiles: Seq[String]): Unit = {
       val t0 = System.currentTimeMillis()
@@ -341,19 +341,15 @@ object ValidateJob {
             .parquet(w.files.map(f =>
               s"$tablePath/${partDirName(partitionCol, p)}/${f.takeWhile(_ != ':')}"): _*)
         else table.filter(partitionFilter(partitionCol, p))
-      // intent marker bracketing the write: present on the next startup
-      // ⇒ the bracket didn't close ⇒ full recovery (around a full
-      // Overwrite it is harmless: a leftover marker forces the same)
-      val intent = intentFile(checkpointDir, p)
-      Files.createDirectories(intent.getParent)
-      Files.write(intent, w.files.mkString("\n").getBytes("UTF-8"))
+      // until the completion record lands, an Append may have half-landed or an
+      // Overwrite half-replaced the violations: only a full revalidation is sound
+      manifestLock.synchronized(appendManifest(checkpointDir, uncertified(p)))
       val (rows, viol) = validatePartition(slice, suite, outDir, p, fused,
         mode = if (w.prior.isDefined) SaveMode.Append else SaveMode.Overwrite)
       val entry = ManifestEntry(p, hash,
         w.prior.fold(0L)(_.rows) + rows, w.prior.fold(0L)(_.violations) + viol,
         System.currentTimeMillis() - t0, System.currentTimeMillis(), files = nowFiles)
       manifestLock.synchronized(appendManifest(checkpointDir, entry))
-      Files.deleteIfExists(intent)
     }
 
     // global checks (cross-partition by nature). The HLL sketch is a
@@ -361,22 +357,21 @@ object ValidateJob {
     // alert early) — it can NOT certify uniqueness: at rsd=0.01 the
     // estimate has ~1% noise, so up to ~1% duplicates could hide inside
     // it (round-1 ADVICE, high). The exact salted pass ALWAYS runs and
-    // is the only certification; the sketch verdict is recorded next to
-    // it so operators see both. The summary's two numbers are observed
-    // on the writes, so nothing is read back.
+    // is the only certification; the sketch, observed on its input, is
+    // recorded next to it so operators see both. The summary's two
+    // numbers are observed on the writes, so nothing is read back.
     import spark.implicits._
     val dupObs = Observation(s"dup-doc-ids-${System.nanoTime()}")
     val refObs = Observation(s"referential-${System.nanoTime()}")
     val globalTasks: Seq[() => Unit] = Seq(
       () => {
-        val pre = Uniqueness.hllPrefilter(table, "doc_id")
-        Seq((pre.rows, pre.approxDistinct, pre.mayHaveDups))
-          .toDF("rows", "approx_distinct", "sketch_suspects_dups")
+        val (keys, prefilter) = Uniqueness.observePrefilter(table, "doc_id")
+        Uniqueness.duplicateKeys(keys, "doc_id")
+          .observe(dupObs, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dup_doc_ids")
+        Seq(prefilter()).toDF("rows", "approx_distinct", "sketch_suspects_dups")
           .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/uniqueness_prefilter")
       },
-      () => Uniqueness.duplicateKeys(table, "doc_id")
-        .observe(dupObs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/dup_doc_ids"),
       () => Referential.violations(table, TokenData.allowedSources(spark))
         .groupBy(col(partitionCol)).agg(count(lit(1)).as("bad_rows"))
         .observe(refObs, coalesce(sum(col("bad_rows")), lit(0L)).as("n"))
@@ -389,16 +384,16 @@ object ValidateJob {
     // verdict table from the manifest (cheap, driver-side truth), read
     // once every partition task is done, for the partitions that exist
     // now. A partition whose directory is gone loses its violations
-    // output and gets a manifest line under no suite hash, so a
-    // directory that reappears is validated again instead of skipped.
-    val (current, removed) = completedDetail(checkpointDir, hash).toSeq.sortBy(_._1)
+    // output (a crashed task's too) and, if certified, gets the
+    // uncertified record, so a directory that reappears is validated.
+    val (current, removed) = lastRecords(checkpointDir, hash).toSeq.sortBy(_._1)
       .partition { case (p, _) => parts.contains(p) }
-    removed.foreach { case (p, _) =>
+    removed.foreach { case (p, st) =>
       val dir = new org.apache.hadoop.fs.Path(s"$outDir/violations/partition=${escapePathName(p)}")
       dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
-      appendManifest(checkpointDir, ManifestEntry(p, "", 0L, 0L, 0L, System.currentTimeMillis(), Nil))
+      if (st.isDefined) appendManifest(checkpointDir, uncertified(p))
     }
-    val verdictRows = current.map { case (p, st) => (p, st.rows, st.violations, st.violations == 0L) }
+    val verdictRows = current.collect { case (p, Some(st)) => (p, st.rows, st.violations, st.violations == 0L) }
     verdictRows.toDF("partition", "rows", "violations", "pass")
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$outDir/verdicts")
 

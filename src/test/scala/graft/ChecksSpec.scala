@@ -10,6 +10,15 @@ class ChecksSpec extends SparkSpec {
 
   private lazy val toks: DataFrame = TokenData.tokenTable(spark, 5000, 4).cache()
 
+  /** The HLL pre-filter as ValidateJob runs it: observed on the input of
+    * the exact salted pass.
+    */
+  private def prefilter(df: DataFrame, rsd: Double = 0.01): Uniqueness.HllVerdict = {
+    val (keys, verdict) = Uniqueness.observePrefilter(df, "doc_id", rsd)
+    Uniqueness.duplicateKeys(keys, "doc_id").write.format("noop").mode("overwrite").save()
+    verdict()
+  }
+
   test("salted duplicate keys == brute-force duplicate set") {
     val salted = Uniqueness.duplicateKeys(toks, "doc_id", salt = 16)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -20,7 +29,7 @@ class ChecksSpec extends SparkSpec {
   }
 
   test("HLL prefilter flags duplicate presence and respects bounds") {
-    val v = Uniqueness.hllPrefilter(toks, "doc_id")
+    val v = prefilter(toks)
     assert(v.rows == 5000)
     // ~14 injected dups at 5000 rows; estimate must be within 5% of truth
     val exact = toks.select(countDistinct("doc_id")).head().getLong(0)
@@ -29,14 +38,14 @@ class ChecksSpec extends SparkSpec {
 
   test("HLL prefilter certifies a clean table") {
     val clean = spark.range(10000).selectExpr("cast(id as string) as doc_id")
-    val v = Uniqueness.hllPrefilter(clean, "doc_id")
+    val v = prefilter(clean)
     assert(!v.mayHaveDups || v.approxDistinct >= 9800) // no false certainty
   }
 
   test("HLL prefilter: 200k distinct keys within 3·rsd; 5% injected duplicates set mayHaveDups") {
     val rsd = 0.01
     val keys = spark.range(200000).selectExpr("concat('doc-', cast(id as string)) as doc_id")
-    val clean = Uniqueness.hllPrefilter(keys, "doc_id", rsd)
+    val clean = prefilter(keys, rsd)
     assert(clean.rows == 200000)
     assert(math.abs(clean.approxDistinct - 200000).toDouble / 200000 <= 3 * rsd,
       s"estimate ${clean.approxDistinct} vs 200000")
@@ -44,7 +53,7 @@ class ChecksSpec extends SparkSpec {
     // 5% of the rows repeat an existing key: 200k rows, 190k distinct
     val dupd = keys.filter("cast(substr(doc_id, 5) as long) < 190000")
       .union(spark.range(10000).selectExpr("concat('doc-', cast(id as string)) as doc_id"))
-    val v = Uniqueness.hllPrefilter(dupd, "doc_id", rsd)
+    val v = prefilter(dupd, rsd)
     assert(v.rows == 200000)
     assert(math.abs(v.approxDistinct - 190000).toDouble / 190000 <= 3 * rsd,
       s"estimate ${v.approxDistinct} vs 190000")

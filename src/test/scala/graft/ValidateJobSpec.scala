@@ -83,8 +83,9 @@ class ValidateJobSpec extends SparkSpec {
 
     ValidateJob.run(spark, table, out, ckpt)
     val lines = manifestRecords(ckpt)
-    // exactly ONE new manifest record: the incremental web entry
-    assert(lines.size == linesAfterFull + 1,
+    // exactly TWO new manifest records: web's uncertified record and its
+    // incremental completion record
+    assert(lines.size == linesAfterFull + 2,
       s"expected one incremental entry, got ${lines.size - linesAfterFull}")
     assert(lines.last.contains("\"partition\":\"web\""))
     val st1 = ValidateJob.completedDetail(ckpt, hash)
@@ -114,7 +115,7 @@ class ValidateJobSpec extends SparkSpec {
     val linesBefore = manifestRecords(ckpt).size
     ValidateJob.run(spark, table, out, ckpt)
     val lines2 = manifestRecords(ckpt)
-    assert(lines2.size == linesBefore + 1, "only web must revalidate")
+    assert(lines2.size == linesBefore + 2, "only web must revalidate")
     assert(lines2.last.contains("\"partition\":\"web\""))
     val st2 = ValidateJob.completedDetail(ckpt, hash)
     // full revalidate: counts now reflect the CURRENT (post-delete) data
@@ -123,8 +124,8 @@ class ValidateJobSpec extends SparkSpec {
     assert(st2("web").rows == nowWeb)
   }
 
-  test("crashed incremental append (intent marker) recovers via full revalidate") {
-    val table = tmp("intent_table"); val out = tmp("intent_out"); val ckpt = tmp("intent_ckpt")
+  test("crashed incremental append (uncertified record last) recovers via full revalidate") {
+    val table = tmp("crash_table"); val out = tmp("crash_out"); val ckpt = tmp("crash_ckpt")
     val base = TokenData.tokenTable(spark, 3000, 4).cache()
     new PartitionedParquetIO("source").write(base, table)
     ValidateJob.run(spark, table, out, ckpt)
@@ -132,7 +133,8 @@ class ValidateJobSpec extends SparkSpec {
 
     // Simulate a crash inside the incremental bracket on web: files
     // appended, violations append HALF-landed (here: duplicated rows),
-    // no manifest line — the intent marker is what the attempt left.
+    // no completion record — the uncertified record is what the attempt
+    // left last.
     val extra = base.filter(col("source") === "web").limit(150)
     extra.write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("source").parquet(table)
@@ -141,17 +143,15 @@ class ValidateJobSpec extends SparkSpec {
     val part0 = violDir.listFiles().filter(_.getName.endsWith(".parquet")).head
     Files.copy(part0.toPath,
       new java.io.File(violDir, "part-halflanded-" + part0.getName).toPath)
-    val intent = ValidateJob.intentFile(ckpt, "web")
-    Files.createDirectories(intent.getParent)
-    Files.write(intent, "crashed".getBytes("UTF-8"))
+    ValidateJob.appendManifest(ckpt, ValidateJob.uncertified("web"))
+    assert(!ValidateJob.completedDetail(ckpt, hash).contains("web"))
 
     ValidateJob.run(spark, table, out, ckpt)
-    assert(!Files.exists(intent), "recovery must clear the intent marker")
     val nowWeb = spark.read.parquet(table).filter(col("source") === "web").count()
     assert(ValidateJob.completedDetail(ckpt, hash)("web").rows == nowWeb)
     // the Overwrite recovery wiped the half-landed duplicates: the
     // violations dir equals an independent fresh validate of the slice
-    val fresh = tmp("intent_fresh")
+    val fresh = tmp("crash_fresh")
     ValidateJob.validatePartition(
       spark.read.parquet(table).filter(col("source") === "web"),
       NorthStar.suite, fresh, "web")
@@ -215,6 +215,45 @@ class ValidateJobSpec extends SparkSpec {
     assert(Files.exists(forumsOut))
     val v = spark.read.parquet(s"$out/verdicts").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(v("forums") == spark.read.parquet(table).filter(col("source") === "forums").count())
+  }
+
+  test("a crashed partition that is then removed loses its output and revalidates when it comes back") {
+    val table = tmp("crm_table"); val out = tmp("crm_out"); val ckpt = tmp("crm_ckpt")
+    new PartitionedParquetIO("source").write(TokenData.tokenTable(spark, 3000, 4), table)
+    ValidateJob.run(spark, table, out, ckpt)
+    val forumsOut = Paths.get(out, "violations", "partition=forums")
+    assert(Files.exists(forumsOut))
+
+    // a task crashed inside its bracket: the uncertified record is last
+    ValidateJob.appendManifest(ckpt, ValidateJob.uncertified("forums"))
+    val aside = tmp("crm_aside")
+    Files.move(Paths.get(table, "source=forums"), Paths.get(aside))
+    ValidateJob.run(spark, table, out, ckpt)
+    assert(!Files.exists(forumsOut), "the removed partition's violations must be deleted")
+    assert(!spark.read.parquet(s"$out/verdicts").collect().map(_.getString(0)).contains("forums"))
+
+    Files.move(Paths.get(aside), Paths.get(table, "source=forums"))
+    ValidateJob.run(spark, table, out, ckpt)
+    assert(Files.exists(forumsOut))
+    val v = spark.read.parquet(s"$out/verdicts").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(v("forums") == spark.read.parquet(table).filter(col("source") === "forums").count())
+  }
+
+  test("a checkpoint holding intent markers of an older build is refused before planning") {
+    val table = tmp("old_table"); val out = tmp("old_out"); val ckpt = tmp("old_ckpt")
+    new PartitionedParquetIO("source").write(TokenData.tokenTable(spark, 1000, 2), table)
+    ValidateJob.run(spark, table, out, ckpt)
+    val intents = Files.createDirectories(Paths.get(ckpt, "intents"))
+    Files.write(intents.resolve("web.intent"), "a:1".getBytes("UTF-8"))
+    Files.write(intents.resolve("a%3Ab.intent"), Array.emptyByteArray)
+    val records = manifestRecords(ckpt)
+    val buf = new java.io.ByteArrayOutputStream()
+    val e = intercept[IllegalStateException](
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(ValidateJob.run(spark, table, out, ckpt)))
+    assert(e.getMessage.contains("partitions a:b, web") && e.getMessage.contains("fresh checkpoint"),
+      e.getMessage)
+    assert(!buf.toString("UTF-8").contains("[validate]"), "refused before planning")
+    assert(manifestRecords(ckpt) == records)
   }
 
   test("main's argument parser rejects unknown keys and dangling arguments") {
@@ -502,7 +541,7 @@ class ValidateJobSpec extends SparkSpec {
     (0 until n).map(i => s"p$i").toSet
   }
 
-  test("partition jobs run concurrently; one parseable manifest line per partition; verdicts == groupBy truth") {
+  test("partition jobs run concurrently; an uncertified then a completion record per partition; verdicts == groupBy truth") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val table = tmp("conc"); val out = tmp("concout"); val ckpt = tmp("concckpt")
     val parts = writeSpread(table, 6000, 10)
@@ -535,10 +574,15 @@ class ValidateJobSpec extends SparkSpec {
 
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val records = manifestRecords(ckpt).map(mapper.readTree)
-    assert(records.size == parts.size)
+    assert(records.size == 2 * parts.size)
     assert(records.forall(r => Seq("partition", "suiteHash", "rows", "violations", "wallMs", "ts", "files")
       .forall(r.has)), s"incomplete manifest records: $records")
-    assert(records.map(_.get("partition").asText).toSet == parts)
+    val hash = ValidateJob.suiteHash(noSourceSuite)
+    val byPart = records.groupBy(_.get("partition").asText)
+    assert(byPart.keySet == parts)
+    assert(byPart.values.forall(_.map(_.get("suiteHash").asText) == Seq("", hash)),
+      s"each partition must open uncertified and complete under the suite hash: $records")
+    assert(!Files.exists(Paths.get(ckpt, "intents")))
 
     val truth = ConstraintCompiler.withVerdicts(spark.read.parquet(table), noSourceSuite)
       .groupBy("source")
@@ -550,7 +594,7 @@ class ValidateJobSpec extends SparkSpec {
     assert(truth.exists(_._3 > 0), "the generator injects violations")
   }
 
-  test("a failing partition keeps its intent marker while the others land; the next run revalidates it alone") {
+  test("a failing partition stays uncertified while the others land; the next run revalidates it alone") {
     import scala.jdk.CollectionConverters._
     val table = tmp("corrupt"); val out = tmp("corruptout"); val ckpt = tmp("corruptckpt")
     val parts = writeSpread(table, 4000, 8)
@@ -563,15 +607,18 @@ class ValidateJobSpec extends SparkSpec {
       t.getName.startsWith("graft-validate") && t.isAlive), "a validate thread outlived run")
     val hash = ValidateJob.suiteHash(noSourceSuite)
     assert(ValidateJob.completedDetail(ckpt, hash).keySet == parts - bad)
-    assert(Files.exists(ValidateJob.intentFile(ckpt, bad)), "the failed partition must keep its marker")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val badLast = manifestRecords(ckpt).map(mapper.readTree).filter(_.get("partition").asText == bad)
+    assert(badLast.map(_.get("suiteHash").asText) == Seq(""),
+      s"the failed partition's last record must be the uncertified one: $badLast")
+    assert(!Files.exists(Paths.get(ckpt, "intents")))
 
     Files.delete(corrupt)
     val before = manifestRecords(ckpt).size
     ValidateJob.run(spark, table, out, ckpt, suite = noSourceSuite)
     val lines = manifestRecords(ckpt)
-    assert(lines.size == before + 1, "only the failed partition revalidates")
-    assert(lines.last.contains(s"\"partition\":\"$bad\""))
-    assert(!Files.exists(ValidateJob.intentFile(ckpt, bad)))
+    assert(lines.size == before + 2, "only the failed partition revalidates")
+    assert(lines.takeRight(2).forall(_.contains(s"\"partition\":\"$bad\"")))
     val st = ValidateJob.completedDetail(ckpt, hash)
     assert(st.keySet == parts)
     assert(st(bad).rows == spark.read.parquet(table).filter(col("source") === bad).count())
